@@ -852,6 +852,40 @@ def test_corrupt_pdf_is_error_row_not_crash(spark, pdf_dir, tmp_path):
     assert out["1"].txt == "HELLO WORLD"
 
 
+@pytest.mark.parametrize(
+    "reader, bad_rows",
+    [
+        ("pdf_page_counts", [("bad", -1)]),
+        ("read_pdf_info", [("bad", None, None, None, None, None)]),
+        ("read_pdf_links", []),
+        ("read_pdf_attachments", []),
+        ("read_pdf_form_fields", []),
+        ("read_pdf_outline", []),
+        ("read_pdf_profiles", [("bad", None, None, None, None, None, None)]),
+    ],
+)
+def test_metadata_readers_malformed_file_shape(spark, pdf_dir, tmp_path, reader, bad_rows):
+    """Each metadata reader's malformed-file shape is pinned exactly
+    (a -1 count, a row of NULLs, or no rows), and a junk file beside
+    the good ones leaves the good documents' rows unchanged."""
+    import shutil
+
+    from pdf_ocr_spark.sources import pdfsource
+
+    root, _ = pdf_dir
+    alt = str(tmp_path / "withbad")
+    shutil.copytree(root, alt)
+    with open(f"{alt}/doc_bad.pdf", "wb") as f:
+        f.write(b"%PDF-1.4 but truncated garbage")
+    read = getattr(pdfsource, reader)
+    good = sorted(map(tuple, read(spark, root).collect()), key=repr)
+    rows = sorted(map(tuple, read(spark, alt).collect()), key=repr)
+    assert [r for r in rows if r[0] == "bad"] == bad_rows
+    assert [r for r in rows if r[0] != "bad"] == good
+    if reader in ("pdf_page_counts", "read_pdf_info", "read_pdf_profiles"):
+        assert {r[0] for r in good} == {"0", "1", "2"}
+
+
 def test_extract_documents_reassembles_in_page_order(spark, pdf_dir):
     root, _ = pdf_dir
     out = {r.doc_id: r for r in extract_pdf_documents(spark, root).collect()}
