@@ -268,6 +268,7 @@ def main() -> None:
     # from correctness-only to a timed row (round-6 task)
     ep._pdf_fixture_dir(spark, sf_dir, jpx=True)
     ep._text_pdf_fixture_dir(spark, sf_dir)
+    ep._mixed_pdf_fixture_dir(spark, sf_dir)
     ep._warc_fixture_dir(spark, sf_dir)
     ep._media_manifest(spark)
     ep._layout_manifest(spark)

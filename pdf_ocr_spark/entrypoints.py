@@ -2299,45 +2299,88 @@ _MEDIA_MANIFEST_DIR = "/tmp/pdf_ocr_spark_cache/media_manifest_v3"
 _LAYOUT_MANIFEST_DIR = "/tmp/pdf_ocr_spark_cache/layout_manifest_v2"
 _HOCR_MANIFEST_DIR = "/tmp/pdf_ocr_spark_cache/hocr_manifest_v1"
 
-_FIXTURE_FP: str | None = None
-
-
-def _fixture_fingerprint(spark: SparkSession) -> str:
-    """Content fingerprint of the fixed 50-doc fixture corpus (row count
-    + order-independent checksum over doc_id and the full span JSON).
-    Computed once per process — the corpus is 50 rows."""
-    global _FIXTURE_FP
-    if _FIXTURE_FP is None:
-        from pdf_ocr_spark.sources.corpus import generate_documents
-
-        docs = generate_documents(spark, n_docs=50, seed=13)
-        agg = docs.agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.crc32(F.concat_ws("\x00", F.col("doc_id"), F.to_json(F.col("spans"))))
-            ).alias("ck"),
-        ).first()
-        _FIXTURE_FP = f"{agg['n']}:{agg['ck']}"
-    return _FIXTURE_FP
-
-
-def _ensure_manifest(spark: SparkSession, out_dir: str, build) -> str:
-    """Build-once manifest cache: rebuild whenever the fixture corpus
-    fingerprint (or the directory's version tag) changes, instead of
-    trusting a hardcoded version suffix alone."""
+def _fixture_fingerprint(spark: SparkSession, out_dir: str) -> str:
+    """Content fingerprint of an expectation manifest: its directory's
+    version tag plus the fixed 50-doc fixture corpus (row count +
+    order-independent checksum over doc_id and the full span JSON), so
+    a manifest rebuilds whenever either changes instead of trusting a
+    hardcoded version suffix alone."""
     import os
 
-    fp = f"{os.path.basename(out_dir)}:{_fixture_fingerprint(spark)}"
+    from pdf_ocr_spark.sources.corpus import generate_documents
+
+    docs = generate_documents(spark, n_docs=50, seed=13)
+    agg = docs.agg(
+        F.count("*").alias("n"),
+        F.sum(
+            F.crc32(F.concat_ws("\x00", F.col("doc_id"), F.to_json(F.col("spans"))))
+        ).alias("ck"),
+    ).first()
+    return f"{os.path.basename(out_dir)}:{agg['n']}:{agg['ck']}"
+
+
+#: Fixture dirs whose content fingerprint was verified by THIS process:
+#: out_dir -> (source stamp, the verified marker content). The
+#: fingerprint agg exists to catch corpus-generator changes and stale
+#: /tmp caches from older rounds — both invariant within one process
+#: over the read-only testdata, so the first call per process
+#: validates in full and later calls skip only the re-validation job
+#: (each timed query otherwise paid a ~0.3 s documents-table checksum
+#: agg before touching a PDF). Keyed by the SOURCE file too: two sf
+#: roots sharing a basename share the /tmp output path, and the second
+#: one must re-run the full fingerprint check, not inherit the first's;
+#: and an in-process rewrite of the source (new mtime or size) must
+#: rebuild, not serve the stale fixture.
+_FIXTURE_VALIDATED: dict[str, tuple] = {}
+
+
+def cached_fixture(
+    out_dir: str,
+    fingerprint: Callable[[], str],
+    build: Callable[[str], None],
+    source: str | None = None,
+) -> str:
+    """Build-once fixture cache: ``out_dir`` holds what
+    ``build(out_dir)`` wrote for the content fingerprint
+    ``fingerprint()``, recorded in its ``_FINGERPRINT`` marker. The
+    marker carries a CONTENT fingerprint, not a version suffix alone —
+    /tmp persists across rounds, and a stale cache keyed on a name or a
+    count would silently serve old fixture data if a generator
+    changed. A mismatch wipes the directory before rebuilding, so
+    orphan files from a larger previous build can't leak into a
+    reader's glob; the marker is written atomically after the build.
+    ``source`` is the file ``fingerprint()`` reads: while its path,
+    mtime and size are unchanged, later calls in this process only
+    re-read the marker (see ``_FIXTURE_VALIDATED``)."""
+    import os
+    import shutil
+
     marker = os.path.join(out_dir, "_FINGERPRINT")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() == fp:
-                return out_dir
-    build(out_dir)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fp)
-    os.replace(tmp, marker)
+
+    def marked() -> str | None:
+        try:
+            with open(marker) as f:
+                return f.read().strip()
+        except OSError:
+            return None
+
+    stamp = None
+    if source is not None:
+        st = os.stat(source)
+        stamp = (os.path.abspath(source), st.st_mtime_ns, st.st_size)
+    memo = _FIXTURE_VALIDATED.get(out_dir)
+    if memo is not None and memo[0] == stamp and marked() == memo[1]:
+        return out_dir
+    fp = fingerprint()
+    if marked() != fp:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        build(out_dir)
+        os.makedirs(out_dir, exist_ok=True)
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(fp)
+        os.replace(tmp, marker)
+    _FIXTURE_VALIDATED[out_dir] = (stamp, fp)
     return out_dir
 
 
@@ -2353,7 +2396,9 @@ def _media_manifest(spark: SparkSession) -> None:
             "overwrite"
         ).parquet(out)
 
-    _ensure_manifest(spark, _MEDIA_MANIFEST_DIR, build)
+    cached_fixture(
+        _MEDIA_MANIFEST_DIR, lambda: _fixture_fingerprint(spark, _MEDIA_MANIFEST_DIR), build
+    )
 
 
 def _hocr_manifest(spark: SparkSession) -> None:
@@ -2366,7 +2411,9 @@ def _hocr_manifest(spark: SparkSession) -> None:
         docs = generate_documents(spark, n_docs=50, seed=13)
         hocr_expectation_manifest(docs, seed=13).write.mode("overwrite").parquet(out)
 
-    _ensure_manifest(spark, _HOCR_MANIFEST_DIR, build)
+    cached_fixture(
+        _HOCR_MANIFEST_DIR, lambda: _fixture_fingerprint(spark, _HOCR_MANIFEST_DIR), build
+    )
 
 
 @_register(
@@ -2445,7 +2492,9 @@ def _layout_manifest(spark: SparkSession) -> None:
         docs = generate_documents(spark, n_docs=50, seed=13)
         layout_expectation_manifest(docs, seed=13).write.mode("overwrite").parquet(out)
 
-    _ensure_manifest(spark, _LAYOUT_MANIFEST_DIR, build)
+    cached_fixture(
+        _LAYOUT_MANIFEST_DIR, lambda: _fixture_fingerprint(spark, _LAYOUT_MANIFEST_DIR), build
+    )
 
 
 @_register(
@@ -2909,76 +2958,77 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
 _PDF_CACHE_ROOT = "/tmp/pdf_ocr_spark_cache"
 
 
-#: Fixture dirs whose content fingerprint was verified by THIS process
-#: ((abspath(sf), dir path) -> the verified marker content). The
-#: fingerprint agg exists to catch corpus-generator changes and stale
-#: /tmp caches from older rounds — both invariant within one process
-#: over the read-only testdata, so the first call per process
-#: validates in full and later calls skip only the re-validation job
-#: (each timed query otherwise paid a ~0.3 s documents-table checksum
-#: agg before touching a PDF). Keyed by the SOURCE dir too: two sf
-#: roots sharing a basename share the /tmp output path, and the second
-#: one must re-run the full fingerprint check, not inherit the first's.
-_FIXTURE_VALIDATED: dict[tuple[str, str], str] = {}
+def _doc_texts(docs: DataFrame) -> DataFrame:
+    """(doc_id as a string, text): the rows the PDF fixture writers take."""
+    return docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
 
 
-def _fixture_marker_ok(sf: str, out: str) -> bool:
+def _documents_fixture(
+    spark: SparkSession, sf: str, name: str, gen_tag: str, write, rows=_doc_texts
+) -> str:
+    """A :func:`cached_fixture` generated (once, executor-side) from an
+    sf dir's ``documents`` table into ``_PDF_CACHE_ROOT/<name>`` (``{}``
+    in ``name`` becomes the sf dir's basename). ``rows`` narrows the
+    table, and ``write(rows, out)`` writes the fixture and returns how
+    many rows it wrote. The fingerprint is the row count plus an
+    order-independent checksum over (doc_id, text) plus ``gen_tag``,
+    which is bumped whenever a writer's output changes."""
     import os
 
-    want = _FIXTURE_VALIDATED.get((os.path.abspath(sf), out))
-    if want is None:
-        return False
-    marker = os.path.join(out, "_SUCCESS")
-    try:
-        with open(marker) as f:
-            return f.read().strip() == want
-    except OSError:
-        return False
+    tag = os.path.basename(os.path.normpath(sf)) or "sf"
+    n_rows = None
 
+    def docs() -> DataFrame:
+        return rows(load_table(spark, sf, "documents"))
 
-def _fixture_mark_validated(sf: str, out: str, fingerprint: str) -> None:
-    import os
+    def fingerprint() -> str:
+        nonlocal n_rows
+        agg = docs().agg(
+            F.count("*").alias("n"),
+            F.sum(
+                F.crc32(F.concat_ws("\x00", F.col("doc_id").cast("string"), "text"))
+            ).alias("ck"),
+        ).first()
+        n_rows = agg["n"]
+        return f"{agg['n']}:{agg['ck']}:{gen_tag}"
 
-    _FIXTURE_VALIDATED[(os.path.abspath(sf), out)] = fingerprint
+    def build(out: str) -> None:
+        n_written = write(docs(), out)
+        assert n_written == n_rows, (n_written, n_rows)
+
+    return cached_fixture(
+        os.path.join(_PDF_CACHE_ROOT, name.format(tag)),
+        fingerprint,
+        build,
+        source=os.path.join(sf, "documents.parquet"),
+    )
 
 
 def _pdf_fixture_dir(
     spark: SparkSession, sf: str, dct: bool = False, jpx: bool = False
 ) -> str:
-    """Generate (once, executor-side) the PDF corpus for an sf dir.
-    The re-entry marker is keyed by a CONTENT fingerprint (row count +
-    order-independent checksum over (doc_id, text)), not just the doc
-    count — /tmp persists across rounds, and a stale cache keyed on
-    count alone would silently serve old fixture data if the corpus
-    generator changed. A mismatch wipes the directory before rewriting,
-    so orphan doc_*.pdf files from a larger previous corpus can't leak
-    into the '*.pdf' glob."""
-    import os
-    import shutil
-
+    """The scanned PDF corpus for an sf dir: Flate/ObjStm by default,
+    JPEG scans with ``dct``, JPEG 2000 scans with ``jpx``."""
     from pdf_ocr_spark.sources.pdfsource import write_pdf_corpus
 
-    tag = os.path.basename(os.path.normpath(sf)) or "sf"
     variant = "jpx" if jpx else ("dct" if dct else "objstm")
-    out = os.path.join(
-        _PDF_CACHE_ROOT,
-        f"pdfs_{tag}_{variant}" if (dct or jpx) else f"pdfs_{tag}",
-    )
-    if _fixture_marker_ok(sf, out):
-        return out
-    docs = load_table(spark, sf, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    if jpx:
-        # EBCOT tier-1 is the priciest pure-python codec (~100-200 ms
-        # per page); the JPX corpus certifies the decode surface over
-        # every 4th document instead of all of them — the oracle SQL
-        # carries the same doc_id % 4 = 1 predicate
-        docs = docs.where(F.col("doc_id").cast("long") % 4 == 1)
-    agg = docs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.crc32(F.concat_ws("\x00", "doc_id", "text"))).alias("ck"),
-    ).first()
+
+    def rows(docs: DataFrame) -> DataFrame:
+        docs = _doc_texts(docs)
+        if jpx:
+            # EBCOT tier-1 is the priciest pure-python codec (~100-200 ms
+            # per page); the JPX corpus certifies the decode surface over
+            # every 4th document instead of all of them — the oracle SQL
+            # carries the same doc_id % 4 = 1 predicate
+            docs = docs.where(F.col("doc_id").cast("long") % 4 == 1)
+        return docs
+
+    def write(docs: DataFrame, out: str) -> int:
+        # spread generation across the executor pool: each PDF writes to
+        # its own file so partitioning never changes content (the small
+        # source parquet otherwise yields 1-2 splits and serial rendering)
+        return write_pdf_corpus(docs.repartition(32), out, dct=dct, jpx=jpx).count()
+
     # codec-shape tag — bumps the cache when the fixture writer's
     # encoding changes (r3: compressed, then PDF 1.5 object streams,
     # plus the /DCTDecode JPEG-scan variant corpus; r4: 1-in-5 docs
@@ -3012,109 +3062,45 @@ def _pdf_fixture_dir(
     # carry an intra-doc GoTo edge (alternating /A-action and /Dest-key
     # shapes), (id+i)%6==5 pages a /GoToR remote edge, and named-outline
     # docs a page-0 GoTo through the /Names /Dests tree.
-    gen_tag = {"objstm": "r6links", "jpx": "r5lossy", "dct": "r5sym"}[variant]
-    fingerprint = f"{agg['n']}:{agg['ck']}:{variant}:{gen_tag}"
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() == fingerprint:
-                _fixture_mark_validated(sf, out, fingerprint)
-                return out
-        shutil.rmtree(out, ignore_errors=True)
-    # spread generation across the executor pool: each PDF writes to
-    # its own file so partitioning never changes content (the small
-    # source parquet otherwise yields 1-2 splits and serial rendering)
-    docs = docs.repartition(32)
-    n_written = write_pdf_corpus(docs, out, dct=dct, jpx=jpx).count()
-    assert n_written == agg["n"], (n_written, agg["n"])
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fingerprint)
-    os.replace(tmp, marker)
-    _fixture_mark_validated(sf, out, fingerprint)
-    return out
+    # r9rotupd: the incremental update of a /Rotate'd doc re-encodes the
+    # ROTATED page-0 raster (it stored the unrotated one, so page 0 of
+    # a doc with id % 43 == 15 and id % 37 == 13 read back garbled).
+    gen_tag = {"objstm": "r9rotupd", "jpx": "r5lossy", "dct": "r5sym"}[variant]
+    name = "pdfs_{}" if variant == "objstm" else "pdfs_{}_" + variant
+    return _documents_fixture(spark, sf, name, f"{variant}:{gen_tag}", write, rows)
 
 
 def _text_pdf_fixture_dir(spark: SparkSession, sf: str) -> str:
-    """Born-digital (text-layer) PDF corpus for this scale factor —
-    same content-fingerprint /tmp cache contract as the scanned
-    corpora."""
-    import os
-    import shutil
-
+    """Born-digital (text-layer) PDF corpus for this scale factor."""
     from pdf_ocr_spark.sources.pdfsource import write_text_pdf_corpus
 
-    tag = os.path.basename(os.path.normpath(sf)) or "sf"
-    out = os.path.join(_PDF_CACHE_ROOT, f"pdfs_{tag}_textlayer")
-    if _fixture_marker_ok(sf, out):
-        return out
-    docs = load_table(spark, sf, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    agg = docs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.crc32(F.concat_ws("\x00", "doc_id", "text"))).alias("ck"),
-    ).first()
     # r5enc: 1-in-5 docs RC4-encrypted (protected born-digital shape)
     # r6t1: 1-in-11 docs use an embedded subset font with no
     # /ToUnicode and no /Encoding, alternating symbolic TrueType
     # (cmap+post) and Type1 (cleartext builtin encoding)
     # r7t1: the Type1 fixture's /Length3 is now computed from the
     # actual trailing segment (was a wrong hardcoded 532) — regenerate
-    fingerprint = f"{agg['n']}:{agg['ck']}:textlayer:r7t1"
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() == fingerprint:
-                _fixture_mark_validated(sf, out, fingerprint)
-                return out
-        shutil.rmtree(out, ignore_errors=True)
-    n_written = write_text_pdf_corpus(docs.repartition(32), out).count()
-    assert n_written == agg["n"], (n_written, agg["n"])
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fingerprint)
-    os.replace(tmp, marker)
-    _fixture_mark_validated(sf, out, fingerprint)
-    return out
+    return _documents_fixture(
+        spark,
+        sf,
+        "pdfs_{}_textlayer",
+        "textlayer:r7t1",
+        lambda docs, out: write_text_pdf_corpus(docs.repartition(32), out).count(),
+    )
 
 
 def _mixed_pdf_fixture_dir(spark: SparkSession, sf: str) -> str:
     """Hybrid (interleaved text+image page) PDF corpus for this scale
-    factor — same content-fingerprint /tmp cache contract as the
-    scanned and text-layer corpora."""
-    import os
-    import shutil
-
+    factor."""
     from pdf_ocr_spark.sources.pdfsource import write_mixed_pdf_corpus
 
-    tag = os.path.basename(os.path.normpath(sf)) or "sf"
-    out = os.path.join(_PDF_CACHE_ROOT, f"pdfs_{tag}_mixed")
-    if _fixture_marker_ok(sf, out):
-        return out
-    docs = load_table(spark, sf, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    return _documents_fixture(
+        spark,
+        sf,
+        "pdfs_{}_mixed",
+        "mixed:r5",
+        lambda docs, out: write_mixed_pdf_corpus(docs, out).count(),
     )
-    agg = docs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.crc32(F.concat_ws("\x00", "doc_id", "text"))).alias("ck"),
-    ).first()
-    fingerprint = f"{agg['n']}:{agg['ck']}:mixed:r5"
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() == fingerprint:
-                _fixture_mark_validated(sf, out, fingerprint)
-                return out
-        shutil.rmtree(out, ignore_errors=True)
-    n_written = write_mixed_pdf_corpus(docs, out).count()
-    assert n_written == agg["n"], (n_written, agg["n"])
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fingerprint)
-    os.replace(tmp, marker)
-    _fixture_mark_validated(sf, out, fingerprint)
-    return out
 
 
 @_register(
@@ -4379,42 +4365,16 @@ def q_domain_inlinks(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _warc_fixture_dir(spark: SparkSession, sf: str) -> str:
-    """Write (once per sf dir, executor-side) the WARC crawl-archive
-    fixture: the synthetic HTML corpus sharded into per-record-gzip
-    .warc.gz files. Content-fingerprint re-entry marker, same contract
-    as _pdf_fixture_dir."""
-    import os
-    import shutil
-
+    """The WARC crawl-archive fixture for an sf dir: the synthetic HTML
+    corpus sharded into per-record-gzip .warc.gz files."""
     from pdf_ocr_spark.sources.warcsource import write_warc_corpus
     from pdf_ocr_spark.sources.webgen import generate_html_corpus
 
-    tag = os.path.basename(os.path.normpath(sf)) or "sf"
-    out = os.path.join(_PDF_CACHE_ROOT, f"warc_{tag}")
-    if _fixture_marker_ok(sf, out):
-        return out
-    docs = load_table(spark, sf, "documents")
-    agg = docs.agg(
-        F.count("*").alias("n"),
-        F.sum(F.crc32(F.concat_ws("\x00", F.col("doc_id").cast("string"), "text"))).alias("ck"),
-    ).first()
-    fingerprint = f"{agg['n']}:{agg['ck']}:warcgz"
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() == fingerprint:
-                _fixture_mark_validated(sf, out, fingerprint)
-                return out
-        shutil.rmtree(out, ignore_errors=True)
-    html = generate_html_corpus(docs)
-    n_written = write_warc_corpus(html, out).agg(F.sum("n_records")).first()[0]
-    assert n_written == agg["n"], (n_written, agg["n"])
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(fingerprint)
-    os.replace(tmp, marker)
-    _fixture_mark_validated(sf, out, fingerprint)
-    return out
+    def write(docs: DataFrame, out: str) -> int:
+        html = generate_html_corpus(docs)
+        return write_warc_corpus(html, out).agg(F.sum("n_records")).first()[0]
+
+    return _documents_fixture(spark, sf, "warc_{}", "warcgz", write, rows=lambda d: d)
 
 
 @_register("warc_extract_text")

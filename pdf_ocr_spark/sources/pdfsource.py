@@ -12,8 +12,26 @@ Scale shape: binaryFile gives one row per file (whole-file bytes — the
 right granularity for scanned PDFs, which are page-image containers a
 few MB each); page explode happens inside ``mapInPandas`` so a
 1000-executor cluster fans pages out without any driver involvement.
-Malformed PDFs become error rows, never exceptions (the reference's
-error-as-row discipline, app.py:335-337).
+
+One harvest contract: every reader here, and
+:func:`pdf_ocr_spark.sources.warcsource.read_warc_records`, is a
+:func:`harvest` — one scan, one Arrow stage, and two functions of the
+reader's own: ``per_file(key, path, data)`` returns a file's rows, and
+``on_error(key, path, exc)`` the rows it becomes if ``per_file``
+raises. A file's rows are kept only when the whole ``per_file`` call
+returns, so a file that fails part-way leaves no partial rows. The key
+is the ``<id>`` of a ``doc_<id>.pdf`` file name, else the whole path.
+The boundary catches any ``Exception``: malformed inputs become error
+rows, never task failures (the reference's error-as-row discipline,
+app.py:335-337). The malformed-file shapes: one ``parse_error`` row
+with a null payload (:func:`read_pdf_pages`), ``n_pages = -1``
+(:func:`pdf_page_counts`), a row of NULLs (:func:`read_pdf_info`,
+:func:`read_pdf_profiles`), no rows (links, attachments, form fields,
+outline), one ``[Error: ...]`` page with ``n_errors = 1``
+(:func:`extract_pdf_documents`), a ``parse_error`` row
+(:func:`read_pdf_text_layers`), one ``error`` span
+(:func:`read_pdf_spans`), and a ``parse_error`` row keyed by path
+(WARC).
 
 The fixture writer (:func:`write_pdf_corpus`) is likewise distributed —
 executors render and write their partition's PDFs — and deterministic:
@@ -27,7 +45,7 @@ from __future__ import annotations
 import os
 import re
 import weakref
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -38,6 +56,10 @@ from pyspark.sql import DataFrame, SparkSession
 WORDS_PER_PAGE = 20
 
 _DOC_RE = re.compile(r"doc_([^/]+)\.pdf$")
+
+#: spark.sql.files.maxPartitionBytes' default (128 MB): the split size
+#: the light-scan rule and the wave re-plan measure against.
+_SPLIT_BYTES = 134217728
 
 #: "session" -> (weakref to SparkContext, dedicated binaryFile scan
 #: session) — see :func:`_binary_scan`; at most one live entry.
@@ -242,299 +264,296 @@ def write_pdf_corpus(
     and both are content-transparent (the palette lookup
     reconstructs the exact raster)."""
 
+    import numpy as np
+
+    from pdf_ocr_spark.sources.glyphs import render_text_image
+    from pdf_ocr_spark.sources.pdfcodec import encode_pdf
+
+    def render(doc_id, text):
+        pages = page_texts(text, words_per_page)
+        images = [render_text_image(p) for p in pages]
+        try:
+            d = int(doc_id)
+        except ValueError:
+            d = 0
+        if jpx:
+            # pure /JPXDecode corpus (no other rotations):
+            # the JPEG 2000 decode surface gets its own
+            # focused oracle-certified query. Half the docs
+            # ((id//4)%2) use the LOSSY 9/7 path — the wild
+            # scanner shape; like the DCT corpus, exactness
+            # holds because the near-lossless delta never
+            # crosses the OCR binarization threshold (pinned
+            # in tests/test_jpx.py)
+            blob = encode_pdf(
+                images,
+                object_streams=object_streams,
+                jpx=True,
+                jpx_lossy=(d // 4) % 2 == 1,
+            )
+            return blob, len(images)
+        meta, xmp_t = None, None
+        if not dct:
+            # §14.3 document metadata, derived purely from the
+            # doc id so the pdf_metadata oracle can recompute
+            # it in SQL (dct corpus skipped: cache stability)
+            meta = {
+                "Title": f"Document {doc_id}",
+                "Author": "Author %d" % (d % 7),
+                "Producer": "pdf-ocr-spark 1.0",
+                "CreationDate": "D:2026%02d%02d000000Z"
+                % (d % 12 + 1, d % 28 + 1),
+            }
+            if d % 3 == 0:
+                xmp_t = f"Document {doc_id}"
+        links = None
+        if not dct:
+            # §12.5.6.5 link annotations, all residue-derived
+            # from (id, i) so the pdf_links oracle recomputes
+            # the exact row set in SQL:
+            #   - (id+i)%2==0: outbound /URI action
+            #   - (id+i)%3==0: intra-doc edge to page (i+1)%n —
+            #     /A GoTo when (id+i) is even, the /Dest-key
+            #     shape otherwise (§12.5.6.5 allows either;
+            #     both resolve to the same row)
+            #   - (id+i)%6==5: /GoToR remote edge to page
+            #     (id+i)%4 of doc_((id*3+i)%1000).pdf
+            # Named-outline docs additionally get a /GoTo on
+            # page 0 whose /D NAMES the outline's last dest
+            # (sec.(n-1) -> page n-1), folding link resolution
+            # through the /Names /Dests tree pdf_outline built.
+            n_imgs = len(images)
+            links = []
+            for i in range(n_imgs):
+                items: list = []
+                if (d + i) % 2 == 0:
+                    items.append(f"https://example.org/doc/{doc_id}/p{i}")
+                if (d + i) % 3 == 0:
+                    t = (i + 1) % n_imgs
+                    items.append(
+                        ("goto", t) if (d + i) % 2 == 0 else ("dest", t)
+                    )
+                if (d + i) % 6 == 5:
+                    items.append(
+                        (
+                            "gotor",
+                            f"doc_{(d * 3 + i) % 1000}.pdf",
+                            (d + i) % 4,
+                        )
+                    )
+                links.append(items)
+        rot, rot_inherit = 0, False
+        if not dct and d % ROTATE_RESIDUES == 15:
+            rot = (90, 180, 270)[(d // ROTATE_RESIDUES) % 3]
+            rot_inherit = (d // (ROTATE_RESIDUES * 3)) % 2 == 1
+        toc, toc_shape = None, "direct"
+        if not dct and d % OUTLINE_RESIDUES == 17:
+            if (d // OUTLINE_RESIDUES) % 2 == 1 and d % ENCRYPT_RESIDUES != 1:
+                toc_shape = "named"  # the pdfTeX shape
+            # §12.3.3 bookmarks: Chapter on even pages, a
+            # nested Section on odd pages — SQL-derivable
+            toc = [
+                (
+                    1 if i % 2 == 0 else 2,
+                    (f"Chapter {i}" if i % 2 == 0 else f"Section {i}"),
+                    i,
+                )
+                for i in range(len(images))
+            ]
+        if links is not None and toc is not None and toc_shape == "named":
+            # named-dest link edge (see links comment above):
+            # resolves through the same /Names /Dests tree the
+            # named outline registers (sec.i -> page i)
+            links[0] = links[0] + [
+                ("goto_named", f"sec.{len(images) - 1}")
+            ]
+        fields = None
+        if not dct and d % FORM_RESIDUES == 16:
+            # §12.7.2 filled text fields, SQL-derivable
+            fields = [
+                ("title", f"Document {doc_id}"),
+                ("pages", str(len(images))),
+                ("lang", ("en", "fr", "de")[d % 3]),
+            ]
+        atts = None
+        if not dct and d % ATTACH_RESIDUES == 14:
+            # §7.7.4 embedded files, SQL-derivable: an
+            # invoice-style XML carrying the word count and a
+            # notes file carrying the first five words
+            words = text.split()
+            atts = [
+                (
+                    f"invoice_{doc_id}.xml",
+                    (
+                        f'<invoice doc="{doc_id}"><words>'
+                        f"{len(words)}</words></invoice>"
+                    ).encode(),
+                ),
+                (f"notes_{doc_id}.txt", " ".join(words[:5]).encode()),
+            ]
+        if not dct and d % INLINE_RESIDUES == 9:
+            # §8.9.7 inline-image page (BI..ID..EI, no raster
+            # XObject) — wins over every other non-DCT raster
+            # rotation; encryption rotation still applies
+            blob = encode_pdf(
+                images,
+                object_streams=object_streams,
+                inline=("flate", "raw", "rle")[(d // INLINE_RESIDUES) % 3],
+                info=meta,
+                xmp_title=xmp_t,
+                page_links=links,
+                attachments=atts,
+                form_fields=fields,
+                outlines=toc,
+                outline_shape=toc_shape,
+                rotate=rot,
+                rotate_inherit=rot_inherit,
+                encrypt=d % ENCRYPT_RESIDUES == 1,
+                cipher=(
+                    "aes256" if (d // ENCRYPT_RESIDUES) % 25 == 2 else "rc4"
+                ),
+            )
+            return blob, len(images)
+        depth = (
+            not dct
+            and d % DEPTH_RESIDUES == 8
+            and d % CCITT_RESIDUES != 4
+            and d % JBIG2_RESIDUES != 7
+            and d % RLE_RESIDUES != 6
+        )
+        plain_raster = (
+            not dct
+            and not depth
+            and d % CCITT_RESIDUES != 4
+            and d % JBIG2_RESIDUES != 7
+            and d % RLE_RESIDUES != 6
+        )
+        indexed = plain_raster and d % INDEXED_RESIDUES == 10
+        icc = (
+            plain_raster and not indexed and d % ICC_RESIDUES == 12
+        )
+        blob = encode_pdf(
+            images,
+            compress=compress,
+            object_streams=object_streams,
+            dct=dct,
+            dct_progressive=dct
+            and d % PROGRESSIVE_RESIDUES == 1
+            and d % CMYK_RESIDUES != 2,
+            dct_cmyk=dct and d % CMYK_RESIDUES == 2,
+            dct_cmyk_transform=((d // CMYK_RESIDUES) % 2) * 2,
+            encrypt=d % ENCRYPT_RESIDUES == 1,
+            # 1 in 25 of the encrypted files use the
+            # ISO 32000-2 AES-256/R6 handler. The R6
+            # KDF is DESIGNED expensive (hardened
+            # SHA-2/AES iteration, ~0.9 s/file open in
+            # pure python, memoized per worker) — so
+            # it gets a small but oracle-certified
+            # share (4 files at sf0.001, 40 at sf0.1)
+            # and RC4 carries the bulk encrypted load
+            cipher=(
+                "aes256"
+                if (d // ENCRYPT_RESIDUES) % 25 == 2
+                else "rc4"
+            ),
+            predictor=(
+                12
+                if not dct
+                and d % PREDICTOR_RESIDUES == 2
+                and not (indexed or icc)
+                else 1
+            ),
+            lzw=not dct
+            and d % LZW_RESIDUES == 3
+            and not (indexed or icc),
+            indexed=indexed,
+            icc=icc,
+            info=meta,
+            xmp_title=xmp_t,
+            page_links=links,
+            attachments=atts,
+            form_fields=fields,
+            outlines=toc,
+            outline_shape=toc_shape,
+            rotate=rot,
+            rotate_inherit=rot_inherit,
+            rle=not dct and d % RLE_RESIDUES == 6,
+            ccitt=not dct and d % CCITT_RESIDUES == 4,
+            # rotate the fax mode: G4, G3 1-D, G3 mixed
+            ccitt_k=(-1, 0, 2)[(d // CCITT_RESIDUES) % 3],
+            jbig2=not dct
+            and d % JBIG2_RESIDUES == 7
+            and d % CCITT_RESIDUES != 4,
+            jbig2_mode=("tpgd", "arith", "mmr", "text", "textg")[
+                (d // JBIG2_RESIDUES) % 5
+            ],
+            ascii85=d % ASCII85_RESIDUES == 5,
+            # depth rotation: 16-bit widened, 4-bit
+            # and 1-bit packed (bitonal renders are
+            # exact at every depth); every other depth
+            # doc stored inverted behind /Decode [1 0]
+            sample_bpc=(
+                (16, 4, 1)[(d // DEPTH_RESIDUES) % 3]
+                if depth
+                else 8
+            ),
+            decode_invert=depth
+            and (d // (DEPTH_RESIDUES * 3)) % 2 == 1,
+        )
+        if not dct and d % UPDATE_RESIDUES == 13 and d % ENCRYPT_RESIDUES != 1:
+            # §7.5.6 incremental update (the save-in-Acrobat
+            # shape): a re-save replacing the page-0 raster
+            # with a level-9 Flate re-encode of the SAME
+            # pixels plus a bumped-/Producer /Info — readers
+            # must honour the latest definitions (certified
+            # by pdf_metadata's oracle CASE on this residue)
+            import re as _re
+
+            from pdf_ocr_spark.sources.pdfcodec import (
+                _serialize_info_dict,
+                flate_image_xobject,
+                incremental_update,
+            )
+
+            new_info = dict(meta, Producer="pdf-ocr-spark 1.1")
+            info_num = int(
+                _re.findall(rb"/Info\s+(\d+)\s+0\s+R", blob)[-1]
+            )
+            # encode_pdf stores rasters pre-rotated, so the
+            # re-saved page 0 must be rotated the same way
+            page0 = np.rot90(images[0], rot // 90)
+            blob = incremental_update(
+                blob,
+                {
+                    5: flate_image_xobject(page0),
+                    info_num: _serialize_info_dict(new_info),
+                },
+            )
+        return blob, len(images)
+
+    return _write_corpus(docs, out_dir, render)
+
+
+def _write_corpus(docs: DataFrame, out_dir: str, render) -> DataFrame:
+    """The corpus writers' shared stage: executor-side, each (doc_id,
+    text) row becomes ``out_dir/doc_<doc_id>.pdf`` from ``render(doc_id,
+    text) -> (pdf bytes, n_pages)``, written atomically (temp file +
+    rename: readers never see partials). Returns the manifest (doc_id,
+    path, n_pages); triggering an action performs the writes."""
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: F401  (renderer dependency, worker-side)
-
-        from pdf_ocr_spark.sources.glyphs import render_text_image
-        from pdf_ocr_spark.sources.pdfcodec import encode_pdf
-
         os.makedirs(out_dir, exist_ok=True)
         for pdf in batches:
             paths, n_pages = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                pages = page_texts(text or "", words_per_page)
-                images = [render_text_image(p) for p in pages]
-                try:
-                    d = int(doc_id)
-                except ValueError:
-                    d = 0
-                if jpx:
-                    # pure /JPXDecode corpus (no other rotations):
-                    # the JPEG 2000 decode surface gets its own
-                    # focused driver-certified query. Half the docs
-                    # ((id//4)%2) use the LOSSY 9/7 path — the wild
-                    # scanner shape; like the DCT corpus, exactness
-                    # holds because the near-lossless delta never
-                    # crosses the OCR binarization threshold (pinned
-                    # in tests/test_jpx.py)
-                    path = os.path.join(out_dir, f"doc_{doc_id}.pdf")
-                    tmp = path + ".tmp"
-                    with open(tmp, "wb") as f:
-                        f.write(
-                            encode_pdf(
-                                images,
-                                object_streams=object_streams,
-                                jpx=True,
-                                jpx_lossy=(d // 4) % 2 == 1,
-                            )
-                        )
-                    os.replace(tmp, path)
-                    paths.append(path)
-                    n_pages.append(len(images))
-                    continue
-                meta, xmp_t = None, None
-                if not dct:
-                    # §14.3 document metadata, derived purely from the
-                    # doc id so the pdf_metadata oracle can recompute
-                    # it in SQL (dct corpus skipped: cache stability)
-                    meta = {
-                        "Title": f"Document {doc_id}",
-                        "Author": "Author %d" % (d % 7),
-                        "Producer": "pdf-ocr-spark 1.0",
-                        "CreationDate": "D:2026%02d%02d000000Z"
-                        % (d % 12 + 1, d % 28 + 1),
-                    }
-                    if d % 3 == 0:
-                        xmp_t = f"Document {doc_id}"
-                links = None
-                if not dct:
-                    # §12.5.6.5 link annotations, all residue-derived
-                    # from (id, i) so the pdf_links oracle recomputes
-                    # the exact row set in SQL:
-                    #   - (id+i)%2==0: outbound /URI action
-                    #   - (id+i)%3==0: intra-doc edge to page (i+1)%n —
-                    #     /A GoTo when (id+i) is even, the /Dest-key
-                    #     shape otherwise (§12.5.6.5 allows either;
-                    #     both resolve to the same row)
-                    #   - (id+i)%6==5: /GoToR remote edge to page
-                    #     (id+i)%4 of doc_((id*3+i)%1000).pdf
-                    # Named-outline docs additionally get a /GoTo on
-                    # page 0 whose /D NAMES the outline's last dest
-                    # (sec.(n-1) -> page n-1), folding link resolution
-                    # through the /Names /Dests tree pdf_outline built.
-                    n_imgs = len(images)
-                    links = []
-                    for i in range(n_imgs):
-                        items: list = []
-                        if (d + i) % 2 == 0:
-                            items.append(f"https://example.org/doc/{doc_id}/p{i}")
-                        if (d + i) % 3 == 0:
-                            t = (i + 1) % n_imgs
-                            items.append(
-                                ("goto", t) if (d + i) % 2 == 0 else ("dest", t)
-                            )
-                        if (d + i) % 6 == 5:
-                            items.append(
-                                (
-                                    "gotor",
-                                    f"doc_{(d * 3 + i) % 1000}.pdf",
-                                    (d + i) % 4,
-                                )
-                            )
-                        links.append(items)
-                rot, rot_inherit = 0, False
-                if not dct and d % ROTATE_RESIDUES == 15:
-                    rot = (90, 180, 270)[(d // ROTATE_RESIDUES) % 3]
-                    rot_inherit = (d // (ROTATE_RESIDUES * 3)) % 2 == 1
-                toc, toc_shape = None, "direct"
-                if not dct and d % OUTLINE_RESIDUES == 17:
-                    if (d // OUTLINE_RESIDUES) % 2 == 1 and d % ENCRYPT_RESIDUES != 1:
-                        toc_shape = "named"  # the pdfTeX shape
-                    # §12.3.3 bookmarks: Chapter on even pages, a
-                    # nested Section on odd pages — SQL-derivable
-                    toc = [
-                        (
-                            1 if i % 2 == 0 else 2,
-                            (f"Chapter {i}" if i % 2 == 0 else f"Section {i}"),
-                            i,
-                        )
-                        for i in range(len(images))
-                    ]
-                if links is not None and toc is not None and toc_shape == "named":
-                    # named-dest link edge (see links comment above):
-                    # resolves through the same /Names /Dests tree the
-                    # named outline registers (sec.i -> page i)
-                    links[0] = links[0] + [
-                        ("goto_named", f"sec.{len(images) - 1}")
-                    ]
-                fields = None
-                if not dct and d % FORM_RESIDUES == 16:
-                    # §12.7.2 filled text fields, SQL-derivable
-                    fields = [
-                        ("title", f"Document {doc_id}"),
-                        ("pages", str(len(images))),
-                        ("lang", ("en", "fr", "de")[d % 3]),
-                    ]
-                atts = None
-                if not dct and d % ATTACH_RESIDUES == 14:
-                    # §7.7.4 embedded files, SQL-derivable: an
-                    # invoice-style XML carrying the word count and a
-                    # notes file carrying the first five words
-                    words = (text or "").split()
-                    atts = [
-                        (
-                            f"invoice_{doc_id}.xml",
-                            (
-                                f'<invoice doc="{doc_id}"><words>'
-                                f"{len(words)}</words></invoice>"
-                            ).encode(),
-                        ),
-                        (f"notes_{doc_id}.txt", " ".join(words[:5]).encode()),
-                    ]
-                if not dct and d % INLINE_RESIDUES == 9:
-                    # §8.9.7 inline-image page (BI..ID..EI, no raster
-                    # XObject) — wins over every other non-DCT raster
-                    # rotation; encryption rotation still applies
-                    path = os.path.join(out_dir, f"doc_{doc_id}.pdf")
-                    tmp = path + ".tmp"
-                    with open(tmp, "wb") as f:
-                        f.write(
-                            encode_pdf(
-                                images,
-                                object_streams=object_streams,
-                                inline=("flate", "raw", "rle")[
-                                    (d // INLINE_RESIDUES) % 3
-                                ],
-                                info=meta,
-                                xmp_title=xmp_t,
-                                page_links=links,
-                                attachments=atts,
-                                form_fields=fields,
-                                outlines=toc,
-                                outline_shape=toc_shape,
-                                rotate=rot,
-                                rotate_inherit=rot_inherit,
-                                encrypt=d % ENCRYPT_RESIDUES == 1,
-                                cipher=(
-                                    "aes256"
-                                    if (d // ENCRYPT_RESIDUES) % 25 == 2
-                                    else "rc4"
-                                ),
-                            )
-                        )
-                    os.replace(tmp, path)
-                    paths.append(path)
-                    n_pages.append(len(images))
-                    continue
-                depth = (
-                    not dct
-                    and d % DEPTH_RESIDUES == 8
-                    and d % CCITT_RESIDUES != 4
-                    and d % JBIG2_RESIDUES != 7
-                    and d % RLE_RESIDUES != 6
-                )
-                plain_raster = (
-                    not dct
-                    and not depth
-                    and d % CCITT_RESIDUES != 4
-                    and d % JBIG2_RESIDUES != 7
-                    and d % RLE_RESIDUES != 6
-                )
-                indexed = plain_raster and d % INDEXED_RESIDUES == 10
-                icc = (
-                    plain_raster and not indexed and d % ICC_RESIDUES == 12
-                )
+                blob, n = render(doc_id, text or "")
                 path = os.path.join(out_dir, f"doc_{doc_id}.pdf")
                 tmp = path + ".tmp"
-                blob = encode_pdf(
-                            images,
-                            compress=compress,
-                            object_streams=object_streams,
-                            dct=dct,
-                            dct_progressive=dct
-                            and d % PROGRESSIVE_RESIDUES == 1
-                            and d % CMYK_RESIDUES != 2,
-                            dct_cmyk=dct and d % CMYK_RESIDUES == 2,
-                            dct_cmyk_transform=((d // CMYK_RESIDUES) % 2) * 2,
-                            encrypt=d % ENCRYPT_RESIDUES == 1,
-                            # 1 in 25 of the encrypted files use the
-                            # ISO 32000-2 AES-256/R6 handler. The R6
-                            # KDF is DESIGNED expensive (hardened
-                            # SHA-2/AES iteration, ~0.9 s/file open in
-                            # pure python, memoized per worker) — so
-                            # it gets a small but driver-certified
-                            # share (4 files at sf0.001, 40 at sf0.1)
-                            # and RC4 carries the bulk encrypted load
-                            cipher=(
-                                "aes256"
-                                if (d // ENCRYPT_RESIDUES) % 25 == 2
-                                else "rc4"
-                            ),
-                            predictor=(
-                                12
-                                if not dct
-                                and d % PREDICTOR_RESIDUES == 2
-                                and not (indexed or icc)
-                                else 1
-                            ),
-                            lzw=not dct
-                            and d % LZW_RESIDUES == 3
-                            and not (indexed or icc),
-                            indexed=indexed,
-                            icc=icc,
-                            info=meta,
-                            xmp_title=xmp_t,
-                            page_links=links,
-                            attachments=atts,
-                            form_fields=fields,
-                            outlines=toc,
-                            outline_shape=toc_shape,
-                            rotate=rot,
-                            rotate_inherit=rot_inherit,
-                            rle=not dct and d % RLE_RESIDUES == 6,
-                            ccitt=not dct and d % CCITT_RESIDUES == 4,
-                            # rotate the fax mode: G4, G3 1-D, G3 mixed
-                            ccitt_k=(-1, 0, 2)[(d // CCITT_RESIDUES) % 3],
-                            jbig2=not dct
-                            and d % JBIG2_RESIDUES == 7
-                            and d % CCITT_RESIDUES != 4,
-                            jbig2_mode=("tpgd", "arith", "mmr", "text", "textg")[
-                                (d // JBIG2_RESIDUES) % 5
-                            ],
-                            ascii85=d % ASCII85_RESIDUES == 5,
-                            # depth rotation: 16-bit widened, 4-bit
-                            # and 1-bit packed (bitonal renders are
-                            # exact at every depth); every other depth
-                            # doc stored inverted behind /Decode [1 0]
-                            sample_bpc=(
-                                (16, 4, 1)[(d // DEPTH_RESIDUES) % 3]
-                                if depth
-                                else 8
-                            ),
-                            decode_invert=depth
-                            and (d // (DEPTH_RESIDUES * 3)) % 2 == 1,
-                )
-                if not dct and d % UPDATE_RESIDUES == 13 and d % ENCRYPT_RESIDUES != 1:
-                    # §7.5.6 incremental update (the save-in-Acrobat
-                    # shape): a re-save replacing the page-0 raster
-                    # with a level-9 Flate re-encode of the SAME
-                    # pixels plus a bumped-/Producer /Info — readers
-                    # must honour the latest definitions (certified
-                    # by pdf_metadata's oracle CASE on this residue)
-                    import re as _re
-
-                    from pdf_ocr_spark.sources.pdfcodec import (
-                        _serialize_info_dict,
-                        flate_image_xobject,
-                        incremental_update,
-                    )
-
-                    new_info = dict(meta, Producer="pdf-ocr-spark 1.1")
-                    info_num = int(
-                        _re.findall(rb"/Info\s+(\d+)\s+0\s+R", blob)[-1]
-                    )
-                    blob = incremental_update(
-                        blob,
-                        {
-                            5: flate_image_xobject(images[0]),
-                            info_num: _serialize_info_dict(new_info),
-                        },
-                    )
                 with open(tmp, "wb") as f:
                     f.write(blob)
-                os.replace(tmp, path)  # atomic: readers never see partials
+                os.replace(tmp, path)
                 paths.append(path)
-                n_pages.append(len(images))
+                n_pages.append(n)
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "path": paths, "n_pages": n_pages}
             )
@@ -579,17 +598,8 @@ def _binary_scan(spark: SparkSession, pattern: str, light: bool = False) -> Data
     df = scan_session(spark).read.format("binaryFile").load(pattern)
     par = max(1, ctx.defaultParallelism)
     if light:
-        # Light (metadata-tier) kernels cost about a millisecond per
-        # file or less (measured: 0.4–1.75 ms across the harvests
-        # using this path), so the fixed per-task cost of a python
-        # stage (~10 ms: worker handshake + Arrow setup) dominates when
-        # openCostInBytes (4 MB/file) — not real bytes — inflates the
-        # partition count of a tiny-file corpus. Detect that regime by
-        # REAL corpus bytes (one ContentSummary call): when the whole
-        # corpus fits inside one wave of default-size splits, coalesce
-        # (narrow, no shuffle) to one task per core. A corpus whose
-        # bytes genuinely need many splits — the 100 TB case — is
-        # untouched, keeping the scan's balance properties.
+        # detect the light regime by REAL corpus bytes (one
+        # ContentSummary call; see light_partitions)
         try:
             jvm = spark._jvm
             jpath = jvm.org.apache.hadoop.fs.Path(os.path.dirname(pattern))
@@ -597,25 +607,41 @@ def _binary_scan(spark: SparkSession, pattern: str, light: bool = False) -> Data
             total_bytes = fs.getContentSummary(jpath).getLength()
         except Exception:
             total_bytes = None
-        if (
-            total_bytes is not None
-            and total_bytes <= par * 134217728
-            and df.rdd.getNumPartitions() > par
-        ):
-            df = df.coalesce(par)
+        n = light_partitions(spark, total_bytes)
+        if n is not None and df.rdd.getNumPartitions() > n:
+            df = df.coalesce(n)
         return df
     target = 4 * par
     p0 = df.rdd.getNumPartitions()
     if 1 < p0 < target:
-        mpb = max(1, (134217728 * p0) // target)
+        mpb = max(1, (_SPLIT_BYTES * p0) // target)
         mpb = 1 << max(20, mpb.bit_length() - 1)  # quantize, floor 1 MB
-        if mpb < 134217728:
+        if mpb < _SPLIT_BYTES:
             df = (
                 scan_session(spark, "session-mpb%d" % mpb, mpb)
                 .read.format("binaryFile")
                 .load(pattern)
             )
     return df
+
+
+def light_partitions(spark: SparkSession, total_bytes: int | None) -> int | None:
+    """The light-scan rule, shared by :func:`_binary_scan` and the
+    streaming profile harvest. Light (metadata-tier) kernels cost about
+    a millisecond per file or less (measured: 0.4–1.75 ms across the
+    harvests using this path), so the fixed per-task cost of a python
+    stage (~10 ms: worker handshake + Arrow setup) dominates when
+    openCostInBytes (4 MB/file) — not real bytes — inflates the
+    partition count of a tiny-file corpus. When ``total_bytes`` (the
+    REAL bytes) fit inside one wave of default-size splits, return the
+    partition count to coalesce to (narrow, no shuffle): one task per
+    core. Input whose bytes genuinely need many splits — the 100 TB
+    case — or whose size is unknown gets None and stays untouched,
+    keeping the scan's balance properties."""
+    par = max(1, spark.sparkContext.defaultParallelism)
+    if total_bytes is not None and total_bytes <= par * _SPLIT_BYTES:
+        return par
+    return None
 
 
 def scan_session(
@@ -647,6 +673,55 @@ def scan_session(
     return s
 
 
+def harvest(
+    spark: SparkSession,
+    pattern: str,
+    per_file: Callable[[str, str, bytes], list[tuple]],
+    on_error: Callable[[str, str, Exception], list[tuple]],
+    schema: str,
+    light: bool = False,
+) -> DataFrame:
+    """The one ``binaryFile`` reader (module docstring): scan the files
+    matching ``pattern`` (:func:`_binary_scan`; ``light`` for kernels
+    costing about a millisecond per file) and map each through
+    ``per_file`` / ``on_error`` into ``schema`` rows."""
+    return map_files(_binary_scan(spark, pattern, light), per_file, on_error, schema)
+
+
+def map_files(
+    files: DataFrame,
+    per_file: Callable[[str, str, bytes], list[tuple]],
+    on_error: Callable[[str, str, Exception], list[tuple]],
+    schema: str,
+) -> DataFrame:
+    """The harvest stage over any (path, content) frame — a batch
+    ``binaryFile`` scan (:func:`harvest`) or a streaming micro-batch
+    (streaming/stream.py stream_pdf_profiles): one Arrow-batched
+    ``mapInPandas`` kernel owning the key rule, the per-file exception
+    boundary and one pandas frame per input batch."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for path, content in zip(pdf["path"], pdf["content"]):
+                m = _DOC_RE.search(path)
+                key = m.group(1) if m else path
+                try:
+                    # per_file returns all its rows at once, so a file
+                    # that fails part-way leaves no partial rows
+                    rows += per_file(key, path, bytes(content))
+                except Exception as e:  # noqa: BLE001 — contained per file
+                    # error-as-row, never a task failure: an exception
+                    # escaping the kernel makes Spark retry the partition
+                    # and then fail the job, so one damaged file in a
+                    # 10^12-file scan must cost its rows, not the job
+                    rows += on_error(key, path, e)
+            yield pd.DataFrame(rows, columns=names)
+
+    return files.select("path", "content").mapInPandas(kernel, schema=schema)
+
+
 def read_pdf_pages(
     spark: SparkSession, pdf_dir: str, password: str = ""
 ) -> DataFrame:
@@ -656,59 +731,38 @@ def read_pdf_pages(
     null payload (which the OCR kernel already turns into an error
     row). ``password`` (ExtractionConfig.pdf_password) opens
     password-protected files — tried as user then owner."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"))
+    from pdf_ocr_spark.sources.pdfcodec import decode_pdf
+    from pdf_ocr_spark.sources.pngcodec import encode_png
+
     pw = password.encode()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import decode_pdf
-        from pdf_ocr_spark.sources.pngcodec import encode_png
+    def per_file(key, path, data):
+        return [
+            (key, i, f"{path}#page={i}", encode_png(img), None)
+            for i, img in enumerate(decode_pdf(data, password=pw))
+        ]
 
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "offset", "media_ref", "payload", "parse_error")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                doc_id = m.group(1) if m else path
-                try:
-                    images = decode_pdf(bytes(content), password=pw)
-                except ValueError as e:
-                    rows["doc_id"].append(doc_id)
-                    rows["offset"].append(0)
-                    rows["media_ref"].append(path)
-                    rows["payload"].append(None)
-                    rows["parse_error"].append(str(e))
-                    continue
-                for i, img in enumerate(images):
-                    rows["doc_id"].append(doc_id)
-                    rows["offset"].append(i)
-                    rows["media_ref"].append(f"{path}#page={i}")
-                    rows["payload"].append(encode_png(img))
-                    rows["parse_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return bf.select("path", "content").mapInPandas(kernel, schema=PDF_PAGES_SCHEMA)
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        lambda key, path, e: [(key, 0, path, None, str(e))],
+        PDF_PAGES_SCHEMA,
+    )
 
 
 def pdf_page_counts(spark: SparkSession, pdf_dir: str) -> DataFrame:
     """Metadata-only page counting: reads /Count from the pages tree,
     no raster decode — the cheap scan (reference app.py:415-430)."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import page_count
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import page_count
-
-        for pdf in batches:
-            ids, counts = [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                ids.append(m.group(1) if m else path)
-                try:
-                    counts.append(page_count(bytes(content)))
-                except ValueError:
-                    counts.append(-1)
-            yield pd.DataFrame({"doc_id": ids, "n_pages": counts})
-
-    return bf.select("path", "content").mapInPandas(
-        kernel, schema="doc_id string, n_pages int"
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        lambda key, path, data: [(key, page_count(data))],
+        lambda key, path, e: [(key, -1)],
+        "doc_id string, n_pages int",
+        light=True,
     )
 
 
@@ -719,31 +773,22 @@ def read_pdf_info(spark: SparkSession, pdf_dir: str) -> DataFrame:
     extraction. One narrow Arrow stage over the binaryFile scan; a
     malformed file yields a row of NULLs rather than failing the
     partition (the error-as-row contract, reference app.py:486-493)."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import pdf_info
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import pdf_info
+    cols = ("title", "author", "producer", "created", "xmp_title")
 
-        cols = ("title", "author", "producer", "created", "xmp_title")
-        for pdf in batches:
-            rows = {c: [] for c in ("doc_id",) + cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                rows["doc_id"].append(m.group(1) if m else path)
-                try:
-                    got = pdf_info(bytes(content))
-                except ValueError:
-                    got = {}
-                for c in cols:
-                    rows[c].append(got.get(c))
-            yield pd.DataFrame(rows)
+    def per_file(key, path, data):
+        got = pdf_info(data)
+        return [(key,) + tuple(got.get(c) for c in cols)]
 
-    return bf.select("path", "content").mapInPandas(
-        kernel,
-        schema=(
-            "doc_id string, title string, author string, "
-            "producer string, created string, xmp_title string"
-        ),
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        lambda key, path, e: [(key,) + (None,) * len(cols)],
+        "doc_id string, title string, author string, "
+        "producer string, created string, xmp_title string",
+        light=True,
     )
 
 
@@ -758,33 +803,15 @@ def read_pdf_links(spark: SparkSession, pdf_dir: str) -> DataFrame:
     edges: uri carries the remote file, to_page the remote page
     number). Narrow Arrow stage, no raster decode; malformed files
     contribute no rows."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import pdf_links
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import pdf_links
-
-        for pdf in batches:
-            ids, pg, kinds, uris, tp = [], [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                did = m.group(1) if m else path
-                try:
-                    found = pdf_links(bytes(content))
-                except ValueError:
-                    continue
-                for page, kind, uri, to_page in found:
-                    ids.append(did)
-                    pg.append(page)
-                    kinds.append(kind)
-                    uris.append(uri)
-                    tp.append(to_page)
-            yield pd.DataFrame(
-                {"doc_id": ids, "page": pg, "kind": kinds, "uri": uris, "to_page": tp}
-            )
-
-    return bf.select("path", "content").mapInPandas(
-        kernel,
-        schema="doc_id string, page int, kind string, uri string, to_page int",
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        lambda key, path, data: [(key, *edge) for edge in pdf_links(data)],
+        lambda key, path, e: [],
+        "doc_id string, page int, kind string, uri string, to_page int",
+        light=True,
     )
 
 
@@ -797,29 +824,23 @@ def read_pdf_attachments(
     pipeline runs over invoice/portfolio PDFs. Narrow Arrow stage, no
     raster decode; contents decode as UTF-8 text (replacement chars
     for binary payloads); malformed files contribute no rows."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import pdf_attachments
+
     pw = password.encode()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import pdf_attachments
+    def per_file(key, path, data):
+        return [
+            (key, name, blob.decode("utf-8", "replace"))
+            for name, blob in pdf_attachments(data, password=pw)
+        ]
 
-        for pdf in batches:
-            ids, names, contents = [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                did = m.group(1) if m else path
-                try:
-                    found = pdf_attachments(bytes(content), password=pw)
-                except ValueError:
-                    continue
-                for name, blob in found:
-                    ids.append(did)
-                    names.append(name)
-                    contents.append(blob.decode("utf-8", "replace"))
-            yield pd.DataFrame({"doc_id": ids, "name": names, "content": contents})
-
-    return bf.select("path", "content").mapInPandas(
-        kernel, schema="doc_id string, name string, content string"
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        lambda key, path, e: [],
+        "doc_id string, name string, content string",
+        light=True,
     )
 
 
@@ -831,29 +852,18 @@ def read_pdf_form_fields(
     /Fields order — the structured-data pass an ingestion pipeline
     runs over application/invoice PDFs. Narrow Arrow stage, no raster
     decode; malformed files contribute no rows."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import pdf_form_fields
+
     pw = password.encode()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import pdf_form_fields
-
-        for pdf in batches:
-            ids, fnames, values = [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                did = m.group(1) if m else path
-                try:
-                    found = pdf_form_fields(bytes(content), password=pw)
-                except ValueError:
-                    continue
-                for fname, value in found:
-                    ids.append(did)
-                    fnames.append(fname)
-                    values.append(value)
-            yield pd.DataFrame({"doc_id": ids, "field": fnames, "value": values})
-
-    return bf.select("path", "content").mapInPandas(
-        kernel, schema="doc_id string, field string, value string"
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        lambda key, path, data: [
+            (key, *field) for field in pdf_form_fields(data, password=pw)
+        ],
+        lambda key, path, e: [],
+        "doc_id string, field string, value string",
+        light=True,
     )
 
 
@@ -865,30 +875,18 @@ def read_pdf_outline(
     pre-order — the table-of-contents pass a document-understanding
     pipeline runs for section segmentation. Narrow Arrow stage, no
     raster decode; malformed files contribute no rows."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import pdf_outline
+
     pw = password.encode()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import pdf_outline
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "level", "title", "page")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                did = m.group(1) if m else path
-                try:
-                    found = pdf_outline(bytes(content), password=pw)
-                except ValueError:
-                    continue
-                for level, title, page in found:
-                    rows["doc_id"].append(did)
-                    rows["level"].append(level)
-                    rows["title"].append(title)
-                    rows["page"].append(page)
-            yield pd.DataFrame(rows)
-
-    return bf.select("path", "content").mapInPandas(
-        kernel, schema="doc_id string, level int, title string, page int"
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        lambda key, path, data: [
+            (key, *item) for item in pdf_outline(data, password=pw)
+        ],
+        lambda key, path, e: [],
+        "doc_id string, level int, title string, page int",
+        light=True,
     )
 
 
@@ -905,9 +903,15 @@ def read_pdf_profiles(
     signal. A file any harvest rejects yields NULLs for that signal
     rather than dropping the row; a file the loader rejects yields a
     row of NULLs with doc_id set (error-as-row)."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
-    kernel, schema = profile_kernel(password)
-    return bf.select("path", "content").mapInPandas(kernel, schema=schema)
+    per_file, on_error = profile_harvest(password)
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        on_error,
+        PROFILE_SCHEMA,
+        light=True,
+    )
 
 
 PROFILE_SCHEMA = (
@@ -916,46 +920,37 @@ PROFILE_SCHEMA = (
 )
 
 
-def profile_kernel(password: str = ""):
-    """The fused-profile Arrow kernel as a (kernel, schema) pair, shared
-    by the batch scan (:func:`read_pdf_profiles`) and the incremental
+def profile_harvest(password: str = ""):
+    """The fused-profile ``(per_file, on_error)`` pair, shared by the
+    batch scan (:func:`read_pdf_profiles`) and the incremental
     streaming harvest (streaming/stream.py stream_pdf_profiles) — one
     definition, two execution modes."""
+    from pdf_ocr_spark.sources.pdfcodec import pdf_profile_signals
+
     pw = password.encode()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import pdf_profile_signals
-
-        cols = (
-            "doc_id", "n_pages", "title",
-            "n_links", "n_attachments", "n_form_fields", "n_outline",
-        )
-
-        for pdf in batches:
-            rows = {c: [] for c in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                rows["doc_id"].append(m.group(1) if m else path)
-                # ONE object-graph load per file for all six signals
-                # (pdf_profile_signals) — per-signal error semantics
-                # identical to the six public harvests
-                got = pdf_profile_signals(bytes(content), password=pw)
-                rows["n_pages"].append(got["n_pages"])
-                rows["title"].append(got["title"])
+    def per_file(key, path, data):
+        # ONE object-graph load per file for all six signals
+        # (pdf_profile_signals) — per-signal error semantics
+        # identical to the six public harvests
+        got = pdf_profile_signals(data, password=pw)
+        links = got["links"]
+        return [
+            (
+                key,
+                got["n_pages"],
+                got["title"],
                 # the profile's n_links counts OUTBOUND (/URI) links —
                 # the frontier-feeding signal; intra-/cross-document
                 # goto/gotor edges are pdf_links' own harvest
-                rows["n_links"].append(
-                    None
-                    if got["links"] is None
-                    else sum(1 for r in got["links"] if r[1] == "uri")
-                )
-                rows["n_attachments"].append(got["n_attachments"])
-                rows["n_form_fields"].append(got["n_form_fields"])
-                rows["n_outline"].append(got["n_outline"])
-            yield pd.DataFrame(rows)
+                None if links is None else sum(1 for r in links if r[1] == "uri"),
+                got["n_attachments"],
+                got["n_form_fields"],
+                got["n_outline"],
+            )
+        ]
 
-    return kernel, PROFILE_SCHEMA
+    return per_file, lambda key, path, e: [(key,) + (None,) * 6]
 
 
 def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> DataFrame:
@@ -971,8 +966,6 @@ def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> Dat
     here the parsed rasters feed the decoder directly. Error semantics
     match the two-stage path exactly (parse failures become one
     ``[Error: ...]`` row per file)."""
-    from pyspark.sql import functions as F
-
     from pdf_ocr_spark.config import ExtractionConfig
 
     cfg = config or ExtractionConfig()
@@ -987,46 +980,32 @@ def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> Dat
             cfg,
         )
         return _reassemble_pdf_docs(decoded)
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"))
+    from pdf_ocr_spark.operators.imaging import (
+        derotate_image,
+        enhance_image,
+        ocr_decode,
+    )
+    from pdf_ocr_spark.sources.pdfcodec import decode_pdf
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.operators.imaging import (
-            derotate_image,
-            enhance_image,
-            ocr_decode,
-        )
-        from pdf_ocr_spark.sources.pdfcodec import decode_pdf
+    pw = cfg.pdf_password.encode()
 
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "offset", "text", "confidence", "error")}
+    def per_file(key, path, data):
+        rows = []
+        for i, img in enumerate(decode_pdf(data, password=pw)):
+            if cfg.preprocess:
+                img = enhance_image(img)
+            if cfg.derotate:
+                img = derotate_image(img)
+            text, conf = ocr_decode(img)
+            rows.append((key, i, text, conf, False))
+        return rows
 
-            def emit(doc_id, offset, text, conf, err):
-                rows["doc_id"].append(doc_id)
-                rows["offset"].append(offset)
-                rows["text"].append(text)
-                rows["confidence"].append(conf)
-                rows["error"].append(err)
-
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                doc_id = m.group(1) if m else path
-                try:
-                    images = decode_pdf(bytes(content), password=cfg.pdf_password.encode())
-                except ValueError as e:
-                    emit(doc_id, 0, f"[Error: {e}]", 0.0, True)
-                    continue
-                for i, img in enumerate(images):
-                    if cfg.preprocess:
-                        img = enhance_image(img)
-                    if cfg.derotate:
-                        img = derotate_image(img)
-                    text, conf = ocr_decode(img)
-                    emit(doc_id, i, text, conf, False)
-            yield pd.DataFrame(rows)
-
-    decoded = bf.select("path", "content").mapInPandas(
-        kernel,
-        schema="doc_id string, offset int, text string, confidence double, error boolean",
+    decoded = harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        lambda key, path, e: [(key, 0, f"[Error: {e}]", 0.0, True)],
+        "doc_id string, offset int, text string, confidence double, error boolean",
     )
     return _reassemble_pdf_docs(decoded)
 
@@ -1098,42 +1077,24 @@ def write_text_pdf_corpus(docs: DataFrame, out_dir: str) -> DataFrame:
     streams decrypt through the same handler path as the raster
     corpus, certified by pdf_text_layer's exact oracle)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import encode_text_pdf
+    from pdf_ocr_spark.sources.pdfcodec import encode_text_pdf
 
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            paths, n_pages = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                pages = text_page_lines(text or "")
-                try:
-                    d = int(doc_id)
-                except ValueError:
-                    d = 0
-                path = os.path.join(out_dir, f"doc_{doc_id}.pdf")
-                tmp = path + ".tmp"
-                if d % TTF_RESIDUES == 6:
-                    enc_name = "ttf" if (d // TTF_RESIDUES) % 2 == 0 else "type1"
-                else:
-                    enc_name = TEXT_ENCODINGS[d % 4]
-                with open(tmp, "wb") as f:
-                    f.write(
-                        encode_text_pdf(
-                            pages,
-                            encoding=enc_name,
-                            encrypt=d % ENCRYPT_RESIDUES == 1,
-                        )
-                    )
-                os.replace(tmp, path)
-                paths.append(path)
-                n_pages.append(len(pages))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "path": paths, "n_pages": n_pages}
-            )
+    def render(doc_id, text):
+        pages = text_page_lines(text)
+        try:
+            d = int(doc_id)
+        except ValueError:
+            d = 0
+        if d % TTF_RESIDUES == 6:
+            enc_name = "ttf" if (d // TTF_RESIDUES) % 2 == 0 else "type1"
+        else:
+            enc_name = TEXT_ENCODINGS[d % 4]
+        blob = encode_text_pdf(
+            pages, encoding=enc_name, encrypt=d % ENCRYPT_RESIDUES == 1
+        )
+        return blob, len(pages)
 
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id string, path string, n_pages int"
-    )
+    return _write_corpus(docs, out_dir, render)
 
 
 def read_pdf_text_layers(
@@ -1145,29 +1106,18 @@ def read_pdf_text_layers(
     rasterizes and OCRs every input). Unparseable files become
     parse_error rows. ``password`` opens protected files (user or
     owner role)."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.sources.pdfcodec import extract_text_layer
+
     pw = password.encode()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pdfcodec import extract_text_layer
-
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "txt", "parse_error")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                doc_id = m.group(1) if m else path
-                rows["doc_id"].append(doc_id)
-                try:
-                    pages = extract_text_layer(bytes(content), password=pw)
-                    rows["txt"].append("\n\n".join(pages))
-                    rows["parse_error"].append(None)
-                except ValueError as e:
-                    rows["txt"].append(None)
-                    rows["parse_error"].append(str(e))
-            yield pd.DataFrame(rows)
-
-    return bf.select("path", "content").mapInPandas(
-        kernel, schema="doc_id string, txt string, parse_error string"
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        lambda key, path, data: [
+            (key, "\n\n".join(extract_text_layer(data, password=pw)), None)
+        ],
+        lambda key, path, e: [(key, None, str(e))],
+        "doc_id string, txt string, parse_error string",
+        light=True,
     )
 
 
@@ -1198,35 +1148,17 @@ def write_mixed_pdf_corpus(docs: DataFrame, out_dir: str) -> DataFrame:
     pages that interleave born-digital text spans with raster media
     spans in content-stream order."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.glyphs import render_text_image
-        from pdf_ocr_spark.sources.pdfcodec import encode_mixed_pdf
+    from pdf_ocr_spark.sources.glyphs import render_text_image
+    from pdf_ocr_spark.sources.pdfcodec import encode_mixed_pdf
 
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            paths, n_pages = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                pages = [
-                    [
-                        (k, render_text_image(p) if k == "image" else p)
-                        for k, p in segs
-                    ]
-                    for segs in mixed_page_segments(text or "")
-                ]
-                path = os.path.join(out_dir, f"doc_{doc_id}.pdf")
-                tmp = path + ".tmp"
-                with open(tmp, "wb") as f:
-                    f.write(encode_mixed_pdf(pages))
-                os.replace(tmp, path)
-                paths.append(path)
-                n_pages.append(len(pages))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "path": paths, "n_pages": n_pages}
-            )
+    def render(doc_id, text):
+        pages = [
+            [(k, render_text_image(p) if k == "image" else p) for k, p in segs]
+            for segs in mixed_page_segments(text)
+        ]
+        return encode_mixed_pdf(pages), len(pages)
 
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema="doc_id string, path string, n_pages int"
-    )
+    return _write_corpus(docs, out_dir, render)
 
 
 def read_pdf_spans(
@@ -1241,53 +1173,30 @@ def read_pdf_spans(
     content-stream order — the PDF source emitting the engine's
     native span model directly. Unparseable files become one
     parse_error row."""
-    bf = _binary_scan(spark, os.path.join(pdf_dir, "*.pdf"), light=True)
+    from pdf_ocr_spark.operators.imaging import ocr_decode
+    from pdf_ocr_spark.sources.pdfcodec import extract_page_segments
+
     pw = password.encode()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.operators.imaging import ocr_decode
-        from pdf_ocr_spark.sources.pdfcodec import extract_page_segments
+    def per_file(key, path, data):
+        base = os.path.basename(path)
+        rows = []
+        for segs in extract_page_segments(data, password=pw):
+            for kind, payload in segs:
+                off = len(rows)
+                if kind == "text":
+                    rows.append((key, off, "text", payload, None, None))
+                else:
+                    text, _conf = ocr_decode(payload)
+                    rows.append((key, off, "image", text, f"{base}#seg={off}", None))
+        return rows
 
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "offset", "kind", "text", "media_ref", "parse_error"
-                )
-            }
-
-            def emit(doc_id, offset, kind, text, media_ref=None, err=None):
-                rows["doc_id"].append(doc_id)
-                rows["offset"].append(offset)
-                rows["kind"].append(kind)
-                rows["text"].append(text)
-                rows["media_ref"].append(media_ref)
-                rows["parse_error"].append(err)
-
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                doc_id = m.group(1) if m else path
-                base = os.path.basename(path)
-                try:
-                    pages = extract_page_segments(bytes(content), password=pw)
-                except ValueError as e:
-                    emit(doc_id, 0, "error", None, err=str(e))
-                    continue
-                off = 0
-                for segs in pages:
-                    for kind, payload in segs:
-                        if kind == "text":
-                            emit(doc_id, off, "text", payload)
-                        else:
-                            text, _conf = ocr_decode(payload)
-                            emit(doc_id, off, "image", text, f"{base}#seg={off}")
-                        off += 1
-            yield pd.DataFrame(rows)
-
-    return bf.select("path", "content").mapInPandas(
-        kernel,
-        schema=(
-            "doc_id string, offset int, kind string, text string, "
-            "media_ref string, parse_error string"
-        ),
+    return harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        lambda key, path, e: [(key, 0, "error", None, None, str(e))],
+        "doc_id string, offset int, kind string, text string, "
+        "media_ref string, parse_error string",
+        light=True,
     )

@@ -28,22 +28,13 @@ from __future__ import annotations
 import gzip
 import io
 import os
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-WARC_RECORDS_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("record_id", StringType(), True),
-        StructField("warc_type", StringType(), True),
-        StructField("target_uri", StringType(), True),
-        StructField("content_type", StringType(), True),
-        StructField("payload", StringType(), True),
-        StructField("parse_error", StringType(), True),
-    ]
+WARC_RECORDS_SCHEMA = (
+    "path string not null, record_id string, warc_type string, "
+    "target_uri string, content_type string, payload string, parse_error string"
 )
 
 
@@ -135,51 +126,32 @@ def parse_warc(data: bytes) -> list[dict]:
 def read_warc_records(spark: SparkSession, path: str) -> DataFrame:
     """``binaryFile`` scan over ``*.warc`` / ``*.warc.gz`` -> one row
     per record. Pure map fan-out; inherits the scan's file splits."""
-    from pdf_ocr_spark.sources.pdfsource import _binary_scan
+    from pdf_ocr_spark.sources.pdfsource import harvest
 
-    files = _binary_scan(spark, os.path.join(path, "*.warc*")).select(
-        "path", "content"
-    )
-
-    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                # error-as-row, never a task failure: one damaged
-                # archive file in a 10^12-record scan must cost one
-                # diagnosable row, not the job (same contract as the
-                # PDF source's parse_error rows)
-                try:
-                    recs = parse_warc(bytes(content))
-                except Exception as e:  # noqa: BLE001 — contained per file
-                    rows.append((p, None, None, None, None, None, str(e)))
-                    continue
-                for rec in recs:
-                    rows.append(
-                        (
-                            p,
-                            rec["record_id"],
-                            rec["warc_type"],
-                            rec["target_uri"],
-                            rec["content_type"],
-                            rec["payload"],
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path",
-                    "record_id",
-                    "warc_type",
-                    "target_uri",
-                    "content_type",
-                    "payload",
-                    "parse_error",
-                ],
+    def fan_out(key, p, data):
+        return [
+            (
+                p,
+                rec["record_id"],
+                rec["warc_type"],
+                rec["target_uri"],
+                rec["content_type"],
+                rec["payload"],
+                None,
             )
+            for rec in parse_warc(data)
+        ]
 
-    return files.mapInPandas(fan_out, WARC_RECORDS_SCHEMA)
+    return harvest(
+        spark,
+        os.path.join(path, "*.warc*"),
+        fan_out,
+        # error-as-row, never a task failure: one damaged archive file
+        # in a 10^12-record scan must cost one diagnosable row, not the
+        # job (same contract as the PDF source's parse_error rows)
+        lambda key, p, e: [(p, None, None, None, None, None, str(e))],
+        WARC_RECORDS_SCHEMA,
+    )
 
 
 def write_warc_corpus(

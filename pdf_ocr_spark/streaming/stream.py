@@ -523,7 +523,7 @@ def stream_pdf_profiles(
     binary PDFs, driver-checkable: a binaryFile readStream consumes
     the corpus in ``n_batches`` micro-batches (maxFilesPerTrigger),
     each batch runs the SAME Arrow profile kernel as the batch scan
-    (sources/pdfsource.py profile_kernel — one definition, two
+    (sources/pdfsource.py profile_harvest — one definition, two
     execution modes) and lands in its own ``batch_id=<n>`` partition
     via dynamic partition overwrite (at-least-once replay writes the
     identical partition, so the sink is idempotent), availableNow
@@ -541,33 +541,29 @@ def stream_pdf_profiles(
 
     from pyspark.sql import functions as F
 
-    from pdf_ocr_spark.sources.pdfsource import profile_kernel, scan_session
+    from pdf_ocr_spark.sources.pdfsource import (
+        PROFILE_SCHEMA,
+        light_partitions,
+        map_files,
+        profile_harvest,
+        scan_session,
+    )
 
     out_dir = os.path.join(workdir, "out")
     ckpt = os.path.join(workdir, "ckpt")
     paths = glob.glob(os.path.join(pdf_dir, "*.pdf"))
     n_files = len(paths)
     per_trigger = max(1, -(-n_files // n_batches))  # ceil
-    kernel, schema = profile_kernel(password)
-    # Same light-scan rule as the batch metadata harvests
-    # (_binary_scan light=True): the profile kernel costs ~1 ms/file,
-    # so when a trigger's REAL bytes fit one wave of default-size
-    # splits, open-cost inflation (4 MB/file) is the only reason the
-    # batch has many partitions — coalesce it to one task per core.
-    # Triggers whose bytes genuinely need many splits are untouched.
-    par = max(1, spark.sparkContext.defaultParallelism)
+    per_file, on_error = profile_harvest(password)
+    # the batch metadata harvests' light-scan rule, applied to each
+    # trigger's REAL bytes (the profile kernel costs ~1 ms/file)
     try:
         per_trigger_bytes = (
             sum(os.path.getsize(p) for p in paths) // max(1, n_batches)
         )
     except OSError:
         per_trigger_bytes = None
-    batch_coalesce = (
-        par
-        if per_trigger_bytes is not None
-        and per_trigger_bytes <= par * 134217728
-        else None
-    )
+    batch_coalesce = light_partitions(spark, per_trigger_bytes)
 
     stream = (
         # the scan session raises the parallel-listing threshold:
@@ -587,11 +583,10 @@ def stream_pdf_profiles(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        src = batch_df.select("path", "content")
         if batch_coalesce is not None:
-            src = src.coalesce(batch_coalesce)
+            batch_df = batch_df.coalesce(batch_coalesce)
         (
-            src.mapInPandas(kernel, schema=schema)
+            map_files(batch_df, per_file, on_error, PROFILE_SCHEMA)
             .withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -886,6 +886,55 @@ def test_metadata_readers_malformed_file_shape(spark, pdf_dir, tmp_path, reader,
         assert {r[0] for r in good} == {"0", "1", "2"}
 
 
+def test_rotated_incrementally_updated_doc_extracts(spark, tmp_path):
+    """A fixture doc that is both /Rotate'd (id % 43 == 15) and
+    incrementally updated (id % 37 == 13, not encrypted, not inline)
+    extracts to its rendered text: the update's re-saved page 0 is
+    stored rotated like every other raster. 2122 is the first such id."""
+    from pdf_ocr_spark.sources.pdfcodec import pdf_info
+    from pdf_ocr_spark.sources.pdfsource import ROTATE_RESIDUES, UPDATE_RESIDUES
+
+    assert 2122 % ROTATE_RESIDUES == 15 and 2122 % UPDATE_RESIDUES == 13
+    text = "lorem ipsum dolor sit amet " * 6
+    docs = spark.createDataFrame([("2122", text)], "doc_id string, text string")
+    out = str(tmp_path / "rotupd")
+    write_pdf_corpus(docs, out).count()
+    data = open(f"{out}/doc_2122.pdf", "rb").read()
+    assert pdf_info(data)["producer"] == "pdf-ocr-spark 1.1"  # the update
+    got = extract_pdf_documents(spark, out).select("doc_id", "txt", "n_errors")
+    got = [tuple(r) for r in got.collect()]
+    assert got == [("2122", "\n\n".join(p.upper() for p in page_texts(text)), 0)]
+
+
+def test_fixture_cache_rebuilds_after_in_process_rewrite(spark, tmp_path, monkeypatch):
+    """A fixture validated earlier in this process is rebuilt when its
+    source documents table is rewritten, not served stale."""
+    import os
+
+    import pandas as pd
+
+    from pdf_ocr_spark import entrypoints as ep
+
+    monkeypatch.setattr(ep, "_PDF_CACHE_ROOT", str(tmp_path / "cache"))
+    sf = tmp_path / "sf_tiny"
+    sf.mkdir()
+
+    def write_documents(texts):
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+            sf / "documents.parquet"
+        )
+
+    def pdfs(out):
+        return sorted(f for f in os.listdir(out) if f.endswith(".pdf"))
+
+    write_documents(["alpha beta", "gamma"])
+    out = ep._text_pdf_fixture_dir(spark, str(sf))
+    assert pdfs(out) == ["doc_0.pdf", "doc_1.pdf"]
+    write_documents(["alpha beta", "gamma", "delta epsilon"])
+    assert ep._text_pdf_fixture_dir(spark, str(sf)) == out
+    assert pdfs(out) == ["doc_0.pdf", "doc_1.pdf", "doc_2.pdf"]
+
+
 def test_extract_documents_reassembles_in_page_order(spark, pdf_dir):
     root, _ = pdf_dir
     out = {r.doc_id: r for r in extract_pdf_documents(spark, root).collect()}
