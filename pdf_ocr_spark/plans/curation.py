@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_ocr_spark.operators.curation import filter_verdicts
+from pdf_ocr_spark.plans.manifest import _hadoop_path, local_frame
 
 CURATION_MANIFEST_SCHEMA = (
     "run_id STRING, bucket INT, status STRING, n_docs_in LONG, "
@@ -45,12 +46,13 @@ def _output_dir(out_dir: str) -> str:
 
 def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:
     path = _manifest_dir(out_dir)
-    try:
-        m = spark.read.parquet(path)
-    except Exception:
-        return spark.createDataFrame([], "bucket INT")
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
+        return local_frame(spark, [], "bucket INT")
     return (
-        m.where((F.col("run_id") == run_id) & (F.col("status") == "completed"))
+        spark.read.schema(CURATION_MANIFEST_SCHEMA)
+        .parquet(path)
+        .where((F.col("run_id") == run_id) & (F.col("status") == "completed"))
         .select("bucket")
         .distinct()
     )
@@ -78,18 +80,12 @@ def run_curation(
     todo = verdicts.join(F.broadcast(done), "bucket", "left_anti")
 
     kept = todo.where(F.col("verdict") == "keep")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        kept.write.mode("overwrite").partitionBy("bucket").parquet(_output_dir(out_dir))
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            # restore to unset, not leave 'dynamic' leaking into the
-            # caller's session (would silently change every later
-            # mode('overwrite').partitionBy() write)
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    (
+        kept.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(_output_dir(out_dir))
+    )
 
     # phase 2: write committed -> manifest rows (admission metrics per
     # bucket, computed from the verdict table, not re-read)
@@ -105,7 +101,8 @@ def run_curation(
     if not stats_rows:
         return 0
     elapsed = float(time.time() - t0)
-    manifest = spark.createDataFrame(
+    manifest = local_frame(
+        spark,
         [
             (
                 run_id,

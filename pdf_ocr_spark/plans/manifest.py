@@ -3,7 +3,9 @@
 The unit of checkpointing is a *bucket*: ``pmod(xxhash64(doc_id), B)``.
 A run:
 
-1. reads the manifest, collects this run_id's completed buckets,
+1. reads the manifest, collects this run_id's completed buckets (a
+   missing manifest is an empty :func:`local_frame`, which the
+   optimizer folds away: a fresh run plans no resume join at all),
 2. anti-joins them away (the reference's resume analogue: its task
    lifecycle at /root/reference/app.py:593-628 restarts whole jobs;
    we restart at bucket granularity),
@@ -14,16 +16,22 @@ A run:
    overwritten),
 5. appends manifest rows (status='completed', per-bucket metrics)
    only *after* the output write action has succeeded — two-phase, so
-   the manifest never claims a bucket whose data didn't commit.
+   the manifest never claims a bucket whose data didn't commit. The
+   run's bucket set is an ``observe()`` metric recorded by the write
+   itself, not a second pass over the input.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.plans.pipeline import extract_documents
@@ -38,12 +46,34 @@ def _output_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "documents")
 
 
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A driver-built frame that plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans a Python-backed RDD,
+    so every action over it runs ``defaultParallelism`` Python tasks
+    (each ~150-230 ms of worker start-up on a 4-core host). Going
+    through an Arrow table keeps the rows in the plan: actions run no
+    Python task, and an empty frame lets the optimizer prune the
+    operators above it. ``rows`` are tuples in ``schema`` field order;
+    naive datetimes are read in the session time zone, as
+    ``createDataFrame`` reads them."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema, timestamp_utc=False),
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     path = _manifest_dir(out_dir)
-    try:
+    fs, jpath = _hadoop_path(spark, path)
+    if fs.exists(jpath):
         return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
 def expire_manifest(spark: SparkSession, out_dir: str, ttl_seconds: float) -> int:
@@ -80,14 +110,21 @@ def expire_manifest(spark: SparkSession, out_dir: str, ttl_seconds: float) -> in
     return n_kept
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``, with the Hadoop FileSystem
+    resolved for its URI — works for file://, hdfs://, s3a:// alike.
+    Manifest reads check existence through it instead of catching a
+    failed read: once a session has used an ``Observation``, a query
+    that fails analysis (as a missing path does) makes Spark's
+    observation listener log an error with a full stack trace."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path`` via the Hadoop FileSystem resolved
-    for its URI — works for file://, hdfs://, s3a:// alike. Missing
-    paths are a no-op (delete returns False)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jpath.getFileSystem(conf)
+    """Recursively delete ``path``. Missing paths are a no-op (delete
+    returns False)."""
+    fs, jpath = _hadoop_path(spark, path)
     fs.delete(jpath, True)
 
 
@@ -125,32 +162,31 @@ def run_extraction(
 
     done = completed_buckets(spark, out_dir, run_id)
     todo = docs.join(F.broadcast(done), "bucket", "left_anti")
+    # the bucket set is recorded while the write runs (at most
+    # n_buckets values), so phase 2 needs no second pass over the input
+    seen = Observation()
+    observed = todo.observe(seen, F.collect_set("bucket").alias("buckets"))
 
-    extracted = extract_documents(todo.drop("bucket"), media, cfg).withColumn(
+    extracted = extract_documents(observed.drop("bucket"), media, cfg).withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
-
-    with_overwrite = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            extracted.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(_output_dir(out_dir))
-        )
-    finally:
-        if with_overwrite is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_overwrite)
-        else:
-            # restore to unset — leaving 'dynamic' behind would change
-            # the semantics of later partitioned overwrites in the
-            # caller's session (same leak run_curation fixed)
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    (
+        extracted.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(_output_dir(out_dir))
+    )
 
     # Phase 2: the write committed — derive per-bucket lineage metrics
     # from the freshly written output (cheap: metadata + two narrow
-    # columns) and append manifest rows.
-    todo_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
+    # columns) and append manifest rows. When todo is empty AQE can
+    # replace its stage before it runs, and the observation then holds
+    # an empty row: only on that path is the bucket set recomputed, by
+    # the distinct pass the observation stands in for.
+    if seen._jo.getRow().length() == 0:
+        todo_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
+    else:
+        todo_buckets = list(seen.get["buckets"])
     if not todo_buckets:
         return 0
     elapsed = time.time() - t0
@@ -176,3 +212,4 @@ def run_extraction(
     )
     stats.write.mode("append").parquet(_manifest_dir(out_dir))
     return len(todo_buckets)
+

@@ -1,0 +1,113 @@
+"""Extraction-run bookkeeping: driver-built frames plan as local
+relations, a fresh run plans no resume join, and a run over completed
+buckets changes nothing."""
+
+from __future__ import annotations
+
+import datetime
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from pdf_ocr_spark.plans.manifest import (
+    completed_buckets,
+    local_frame,
+    read_manifest,
+    run_extraction,
+)
+from pdf_ocr_spark.schema import MANIFEST_SCHEMA
+from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
+
+SEED = 7
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _tree(path: str) -> dict[str, bytes]:
+    out = {}
+    for root, _, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = fh.read()
+    return out
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    docs = generate_documents(spark, n_docs=24, seed=SEED).cache()
+    media = generate_media(spark, docs, seed=SEED).cache()
+    return docs, media
+
+
+def test_missing_manifest_is_empty_local_relation(spark, tmp_path):
+    m = read_manifest(spark, str(tmp_path / "none"))
+    assert m.schema == MANIFEST_SCHEMA
+    plan = _optimized(m)
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert plan.data().isEmpty()
+
+
+def test_fresh_run_plans_no_resume_join(spark, tmp_path):
+    docs = spark.range(16).select(F.col("id").cast("int").alias("bucket"))
+    done = completed_buckets(spark, str(tmp_path / "none"), "r")
+    todo = docs.join(F.broadcast(done), "bucket", "left_anti")
+    assert "Join" not in _optimized(todo).toString()
+    assert todo.count() == 16
+
+
+def test_local_frame_round_trip(spark):
+    ts = datetime.datetime(2026, 1, 2, 3, 4, 5, 678901)
+    rows = [
+        ("r", 1, None, "completed", 3, None, 0.5, 1.25, ts),
+        ("r", 2, 7, "completed", None, 4, None, None, None),
+    ]
+    df = local_frame(spark, rows, MANIFEST_SCHEMA)
+    assert df.schema == MANIFEST_SCHEMA
+    assert _optimized(df).getClass().getSimpleName() == "LocalRelation"
+    assert [tuple(r) for r in df.collect()] == rows
+    ddl = local_frame(spark, [(5, "x")], "bucket INT, status STRING")
+    assert [tuple(r) for r in ddl.collect()] == [(5, "x")]
+
+
+def test_resume_over_completed_buckets_is_a_no_op(spark, corpus, tmp_path):
+    docs, media = corpus
+    out = str(tmp_path / "done")
+    k = run_extraction(spark, docs, media, out, "run1", n_buckets=4)
+    assert k == 4
+    manifest = sorted(tuple(r) for r in read_manifest(spark, out).collect())
+    before = _tree(os.path.join(out, "documents"))
+
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 0
+    assert sorted(tuple(r) for r in read_manifest(spark, out).collect()) == manifest
+    assert _tree(os.path.join(out, "documents")) == before
+
+
+def test_partition_overwrite_leaves_session_conf(spark, corpus, tmp_path):
+    docs, media = corpus
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "dyn")
+        assert run_extraction(spark, docs, media, out, "run1", n_buckets=4, only_buckets=[0]) == 1
+        first = sorted(
+            tuple(r) for r in spark.read.parquet(f"{out}/documents").select("doc_id", "txt").collect()
+        )
+        assert first
+        assert run_extraction(spark, docs, media, out, "run1", n_buckets=4, only_buckets=[1]) == 1
+        assert spark.conf.get(key) == "static"
+        written = spark.read.parquet(f"{out}/documents")
+        assert {r["bucket"] for r in written.select("bucket").distinct().collect()} == {0, 1}
+        survived = sorted(
+            tuple(r) for r in written.where("bucket = 0").select("doc_id", "txt").collect()
+        )
+        assert survived == first
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
