@@ -2268,17 +2268,14 @@ def _decrypt_fn(data: bytes, body, trailer: bytes, password: bytes = b""):
             )
         u, o = _pdf_string(d, b"U"), _pdf_string(d, b"O")
         ue, oe = _pdf_string(d, b"UE"), _pdf_string(d, b"OE")
-        fkey = pdfcrypt.file_key_r6(u, ue, o, oe, password)
         pm = re.search(rb"/P\s+(-?\d+)", d)
-        perms_ok = True
         try:
             perms = _pdf_string(d, b"Perms")
         except ValueError:
             perms = None
-        if perms is not None and pm is not None:
-            perms_ok = pdfcrypt.check_perms_r6(fkey, perms, int(pm.group(1)))
-        if not perms_ok:
-            raise ValueError("corrupt /Perms entry (R6 integrity check failed)")
+        fkey = pdfcrypt.file_key_r6(
+            u, ue, o, oe, password, perms, int(pm.group(1)) if pm else None
+        )
         return lambda num, raw: pdfcrypt.aes256_cbc_decrypt(fkey, raw)
 
     aes = False

@@ -498,28 +498,38 @@ def file_key_r6(
     o: bytes,
     oe: bytes,
     password: bytes = b"",
+    perms: bytes | None = None,
+    p: int | None = None,
 ) -> bytes:
     """Algorithm 2.A: authenticate ``password`` as user or owner and
     return the 32-byte file key. Raises ValueError('password
-    required') when it matches neither — the typed-error contract."""
+    required') when it matches neither — the typed-error contract.
+    Given the /Perms string and /P, the key must also pass
+    :func:`check_perms_r6`, else ValueError('corrupt /Perms entry')."""
     if len(u) < 48 or len(o) < 48:
         raise ValueError("R6 /U and /O entries must be 48 bytes")
-    # User check first: on well-formed files a password valid in both
-    # roles decrypts the SAME file key from either /UE or /OE, so
-    # check order cannot change the result — and the overwhelmingly
-    # common shape ("encrypted but freely readable", empty user
-    # password) then costs two KDF invocations instead of three (the
-    # owner validation hash, which such files always fail, is
-    # skipped). A MALFORMED dual-role file whose /UE and /OE disagree
-    # now resolves through /UE; either way the bad key surfaces as the
-    # same class of typed error downstream.
-    if hash_r6(password, u[32:40]) == u[:32]:
+
+    def valid(key: bytes) -> bool:
+        return perms is None or p is None or check_perms_r6(key, perms, p)
+
+    # User first: on well-formed files a password valid in both roles
+    # decrypts the same key from /UE and /OE, and the common empty user
+    # password then costs two KDF calls, not three. A /UE key that
+    # fails /Perms falls back to the owner path.
+    user = hash_r6(password, u[32:40]) == u[:32]
+    if user:
         ik = hash_r6(password, u[40:48])
-        return _aes_cbc_nopad(ik, b"\x00" * 16, ue[:32], decrypt=True)
+        key = _aes_cbc_nopad(ik, b"\x00" * 16, ue[:32], decrypt=True)
+        if valid(key):
+            return key
     if hash_r6(password, o[32:40], u[:48]) == o[:32]:
         ik = hash_r6(password, o[40:48], u[:48])
-        return _aes_cbc_nopad(ik, b"\x00" * 16, oe[:32], decrypt=True)
-    raise ValueError("password required (standard security handler)")
+        key = _aes_cbc_nopad(ik, b"\x00" * 16, oe[:32], decrypt=True)
+        if valid(key):
+            return key
+    elif not user:
+        raise ValueError("password required (standard security handler)")
+    raise ValueError("corrupt /Perms entry (R6 integrity check failed)")
 
 
 def check_perms_r6(fkey: bytes, perms: bytes, p: int) -> bool:

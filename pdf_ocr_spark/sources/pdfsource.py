@@ -48,8 +48,10 @@ import weakref
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+from py4j.protocol import Py4JError
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Words rendered per PDF page by the fixture writer. Shared constant
 #: with the SQL oracles in entrypoints (n_pages = ceil(n_words / this)).
@@ -57,12 +59,12 @@ WORDS_PER_PAGE = 20
 
 _DOC_RE = re.compile(r"doc_([^/]+)\.pdf$")
 
-#: spark.sql.files.maxPartitionBytes' default (128 MB): the split size
-#: the light-scan rule and the wave re-plan measure against.
+#: Spark's default file split size (128 MB), which the light-scan rule
+#: measures against.
 _SPLIT_BYTES = 134217728
 
-#: "session" -> (weakref to SparkContext, dedicated binaryFile scan
-#: session) — see :func:`_binary_scan`; at most one live entry.
+#: "session" -> (weakref to SparkContext, binaryFile scan session) —
+#: see :func:`scan_session`; one entry.
 _SCAN_SESSIONS: dict = {}
 
 #: Fixture-corpus heterogeneity residues (see write_pdf_corpus):
@@ -564,65 +566,62 @@ def _write_corpus(docs: DataFrame, out_dir: str, render) -> DataFrame:
 
 
 def _binary_scan(spark: SparkSession, pattern: str, light: bool = False) -> DataFrame:
-    """binaryFile scan with driver-side file listing. Above 32 files
-    Spark launches a parallel-listing job with one task per file —
-    measured seconds of pure scheduling for hundreds of tiny local
-    fixtures. Local/posix listings are cheap on the driver, so raise
-    the threshold for this read; on a real cluster against S3/HDFS at
-    10^12-file scale, leave the default so listing parallelizes.
+    """The ``binaryFile`` scan every harvest reads, planned so that a
+    small corpus runs one Python task per core.
 
-    The override is scoped to an ephemeral ``newSession()`` (same
-    SparkContext, isolated SQL conf), so concurrent queries or
-    streaming jobs on the caller's session can never observe it —
-    mutating the caller's session-global conf around the eager
-    ``load()`` was a documented race.
+    Spark sorts the files by size, largest first, and fills one bin
+    after another (128 MB splits, counting a 4 MB open cost per file),
+    so each bin holds one size class — in a scanned corpus, usually one
+    codec. A heavy kernel over those bins waits on the bin of expensive
+    files: on the ``scanned_pdf`` benchmark (84 files, 4-core x86 host)
+    11 size-classed tasks put the JPX files in one or two of them, and
+    the slowest task took 2.8–4.6× the median. Each Python task also
+    pays ~210–310 ms of worker set-up.
 
-    One scan session is cached per SparkContext (not created per call):
-    a long-lived driver issuing many scans would otherwise accumulate
-    JVM-side session state (listeners, conf, catalog) per scan.
+    So when the scan plans fewer than 4 waves of bins, its ``(path,
+    content)`` rows are dealt across ``n = min(cores, files)`` tasks in
+    bin order, each bin starting where an average-size bin before it
+    would have ended. Every task gets its share (±1) of every bin, so
+    of every size class. When the bins hold equal file counts (one
+    file each, or small files whose 4 MB open cost dominates) the deal
+    is exact, and fewer files than cores run one file per task. The
+    scan becomes a JVM-only stage whose shuffle carries the file bytes
+    (~670 KB on ``scanned_pdf``, which now runs 4 tasks with the
+    slowest at 1.06–1.23× the median). A round-robin ``repartition(n)`` would start each bin at a random
+    task instead, which put both files of a two-file corpus in one
+    task. One file is left alone.
 
-    Wave packing: binaryFile bins whole files into splits of
-    ``maxPartitionBytes`` (default 128 MB) counting ``openCostInBytes``
-    (4 MB) per file, so a small fused-fixture corpus lands just above
-    one task wave — e.g. 1.25 waves = a measured ~25% straggler tail
-    on the CPU-bound extraction kernel. When the planned scan yields
-    fewer than 4x-parallelism partitions, re-plan it with a
-    proportionally smaller maxPartitionBytes (quantized to a power of
-    two; one cached session per value, so the bounded-session
-    guarantee holds). Corpora that already fill >= 4 waves — the
-    100 TB case, where split count scales with data — are untouched,
-    keeping the metadata-family scan floor free of extra task-
-    scheduling overhead; binaryFile never splits within a file, so a
-    lowered budget can only split multi-file bins."""
-    ctx = spark.sparkContext
+    ``light`` kernels (about a millisecond per file) coalesce instead,
+    without a shuffle (:func:`light_partitions`). Corpora that already
+    plan >= 4 waves — the 100 TB case, where split count scales with
+    data — keep Spark's plan: enough bins that no one bin dominates."""
     df = scan_session(spark).read.format("binaryFile").load(pattern)
-    par = max(1, ctx.defaultParallelism)
     if light:
-        # detect the light regime by REAL corpus bytes (one
-        # ContentSummary call; see light_partitions)
-        try:
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(os.path.dirname(pattern))
-            fs = jpath.getFileSystem(ctx._jsc.hadoopConfiguration())
-            total_bytes = fs.getContentSummary(jpath).getLength()
-        except Exception:
-            total_bytes = None
-        n = light_partitions(spark, total_bytes)
+        n = light_partitions(spark, _scanned_bytes(df))
         if n is not None and df.rdd.getNumPartitions() > n:
             df = df.coalesce(n)
         return df
-    target = 4 * par
-    p0 = df.rdd.getNumPartitions()
-    if 1 < p0 < target:
-        mpb = max(1, (_SPLIT_BYTES * p0) // target)
-        mpb = 1 << max(20, mpb.bit_length() - 1)  # quantize, floor 1 MB
-        if mpb < _SPLIT_BYTES:
-            df = (
-                scan_session(spark, "session-mpb%d" % mpb, mpb)
-                .read.format("binaryFile")
-                .load(pattern)
-            )
+    par = max(1, spark.sparkContext.defaultParallelism)
+    bins = df.rdd.getNumPartitions()
+    if bins < 4 * par:
+        files = len(df._jdf.inputFiles())  # one JVM call, not one per file
+        n = min(par, files)
+        if n > 1:
+            start = (F.spark_partition_id() * files / bins).cast("long")
+            r = F.monotonically_increasing_id() % (1 << 33)  # row in bin
+            df = df.repartitionById(n, ((start + r) % n).cast("int"))
     return df
+
+
+def _scanned_bytes(df: DataFrame) -> int | None:
+    """Total length of the files a ``binaryFile`` scan lists, from its
+    file index (None if not a plain file scan): a few JVM calls however
+    many files match, where summing ``globStatus`` in Python pays a
+    round trip per file."""
+    try:
+        return df._jdf.queryExecution().analyzed().relation().location().sizeInBytes()
+    except Py4JError:
+        return None
 
 
 def light_partitions(spark: SparkSession, total_bytes: int | None) -> int | None:
@@ -644,32 +643,26 @@ def light_partitions(spark: SparkSession, total_bytes: int | None) -> int | None
     return None
 
 
-def scan_session(
-    spark: SparkSession, key: str = "session", mpb: int | None = None
-) -> SparkSession:
-    """The cached listing-threshold-raised scan session (see
-    :func:`_binary_scan` — one per SparkContext and maxPartitionBytes
-    value, isolated SQL conf so callers never observe the override).
-    Shared with the streaming file source: ``getBatch`` builds each
-    micro-batch's relation through the same InMemoryFileIndex path, so
-    a >32-file trigger otherwise launches a one-task-per-file listing
-    JOB every trigger (measured ~2 s of pure scheduling per trigger on
-    a 1250-file local batch)."""
+def scan_session(spark: SparkSession) -> SparkSession:
+    """The binaryFile scan session: one per SparkContext, with the
+    parallel-listing threshold raised. Above 32 files Spark otherwise
+    launches a listing job with one task per file — seconds of pure
+    scheduling for a few hundred local files, and again every trigger
+    of the streaming file source, which lists through the same path.
+    The conf lives on a ``newSession()`` (same SparkContext, isolated
+    SQL conf) so the caller's session never observes it, and the
+    session is cached so a long-lived application does not accumulate
+    JVM-side session state per scan."""
     ctx = spark.sparkContext
-    entry = _SCAN_SESSIONS.get(key)
-    if entry is not None:
-        ctx_ref, cached = entry
-        # weakref key: a GC'd SparkContext can never alias a new
-        # one (id() reuse after GC was the previous hazard)
-        if ctx_ref() is ctx:
-            return cached
+    entry = _SCAN_SESSIONS.get("session")
+    # weakref: a GC'd SparkContext can never alias a new one
+    if entry is not None and entry[0]() is ctx:
+        return entry[1]
     s = spark.newSession()
     s.conf.set(
         "spark.sql.sources.parallelPartitionDiscovery.threshold", "100000"
     )
-    if mpb is not None:
-        s.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
-    _SCAN_SESSIONS[key] = (weakref.ref(ctx), s)
+    _SCAN_SESSIONS["session"] = (weakref.ref(ctx), s)
     return s
 
 
@@ -1012,8 +1005,6 @@ def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> Dat
 
 def _reassemble_pdf_docs(decoded: DataFrame) -> DataFrame:
     """Per-document ordered reassembly of decoded page rows."""
-    from pyspark.sql import functions as F
-
     ordered = F.array_sort(
         F.collect_list(F.struct(F.col("offset"), F.col("text")))
     )

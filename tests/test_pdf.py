@@ -1231,3 +1231,65 @@ def test_profile_signals_match_individual_harvests():
         assert got["n_outline"] == (None if ol is None else len(ol)), kind
     bad = pc.pdf_profile_signals(b"not a pdf at all")
     assert all(v is None for v in bad.values())
+
+
+def _write_blobs(root, sizes) -> str:
+    """``doc_<i>.pdf`` files of the given byte sizes under ``root`` (the
+    scan reads bytes only, so the content is arbitrary); returns the
+    harvest glob."""
+    import os
+
+    os.makedirs(root, exist_ok=True)
+    for i, n in enumerate(sizes):
+        with open(os.path.join(root, f"doc_{i}.pdf"), "wb") as f:
+            f.write(bytes([i % 251]) * n)
+    return os.path.join(str(root), "*.pdf")
+
+
+def _files_per_task(df, min_length: int = 0) -> list[int]:
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    rows = df.select(F.spark_partition_id().alias("pid"), "length").collect()
+    return sorted(Counter(r.pid for r in rows if r.length >= min_length).values())
+
+
+def test_small_scan_deals_every_size_class_across_cores(spark, tmp_path):
+    """A small heavy scan runs one task per core, and each task gets an
+    equal share of every size class: Spark packs the 8 large files
+    into two bins of their own, and the deal spreads them 2 per task."""
+    from pdf_ocr_spark.sources.pdfsource import _binary_scan
+
+    df = _binary_scan(spark, _write_blobs(tmp_path, [40_000] * 8 + [4_000] * 8))
+    assert df.rdd.getNumPartitions() == 4
+    assert _files_per_task(df, min_length=40_000) == [2, 2, 2, 2]
+    assert sum(_files_per_task(df)) == 16
+
+
+def test_small_scan_has_no_empty_task_and_one_session(spark, tmp_path):
+    """Fewer files than cores give one task per file, never an empty
+    Python task, and every scan shares the one cached scan session."""
+    from pdf_ocr_spark.sources import pdfsource
+
+    for n_files, per_task in ((16, [4] * 4), (3, [1] * 3), (2, [1] * 2), (1, [1])):
+        pattern = _write_blobs(tmp_path / str(n_files), [5_000] * n_files)
+        df = pdfsource._binary_scan(spark, pattern)
+        assert df.rdd.getNumPartitions() == len(per_task), n_files
+        assert _files_per_task(df) == per_task, n_files
+    assert len(pdfsource._SCAN_SESSIONS) == 1
+
+
+def test_light_scan_guard_measures_the_globbed_files(spark, tmp_path):
+    """The light-scan coalesce counts the bytes of the files the glob
+    matches: a large unrelated file in the same directory (sparse, so
+    it takes no disk) must not turn it off."""
+    from pdf_ocr_spark.sources.pdfsource import _binary_scan
+
+    # 200 tiny files plan as 7 bins of 32 (4 MB open cost per file)
+    pattern = _write_blobs(tmp_path, [100] * 200)
+    with open(tmp_path / "blob.bin", "wb") as f:
+        f.truncate(600 << 20)
+    df = _binary_scan(spark, pattern, light=True)
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert df.count() == 200

@@ -377,3 +377,34 @@ def test_evp_disabled_falls_back_pure_python(monkeypatch):
     enc = pdfcrypt._aes_cbc_nopad(key, iv, data, decrypt=False)
     assert enc == pdfcrypt._aes_cbc_nopad_py(key, iv, data, decrypt=False)
     assert pdfcrypt._aes_cbc_nopad(key, iv, enc, decrypt=True) == data
+
+
+def test_r6_dual_role_falls_back_to_owner_key_when_ue_fails_perms():
+    """A password valid as both user and owner whose /UE decrypts to a
+    key that fails /Perms resolves through /OE; the typed /Perms error
+    remains when both keys fail, and a file with a garbled /UE still
+    decodes."""
+    import hashlib
+    import re
+
+    from pdf_ocr_spark.sources import pdfcrypt
+
+    fkey = hashlib.sha256(b"dual-role").digest()
+    e = pdfcrypt.r6_entries(fkey, -4, b"seed", user_password=b"pw", owner_password=b"pw")
+    bad_ue = bytes(32) + e["UE"][32:]
+    bad_oe = bytes(32) + e["OE"][32:]
+    assert pdfcrypt.file_key_r6(e["U"], bad_ue, e["O"], e["OE"], b"pw", e["Perms"], -4) == fkey
+    assert pdfcrypt.file_key_r6(e["U"], e["UE"], e["O"], bad_oe, b"pw", e["Perms"], -4) == fkey
+    with pytest.raises(ValueError, match="corrupt /Perms"):
+        pdfcrypt.file_key_r6(e["U"], bad_ue, e["O"], bad_oe, b"pw", e["Perms"], -4)
+    with pytest.raises(ValueError, match="password required"):
+        pdfcrypt.file_key_r6(e["U"], bad_ue, e["O"], e["OE"], b"x", e["Perms"], -4)
+
+    # the empty password opens the writer's AES-256 files in both roles
+    img = np.full((10, 12), 77, dtype=np.uint8)
+    data = encode_pdf([img], compress=True, encrypt=True, cipher="aes256")
+    garbled = re.sub(
+        rb"/UE <([0-9A-F]+)>", lambda m: b"/UE <" + b"0" * len(m.group(1)) + b">", data
+    )
+    assert garbled != data and len(garbled) == len(data)
+    assert (decode_pdf(garbled)[0] == img).all()
