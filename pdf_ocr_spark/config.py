@@ -24,7 +24,7 @@ class ExtractionConfig:
     derotate: bool = False
     output_formats: tuple[str, ...] = ("txt", "md", "html")
     #: >0 routes reassembly through the salted two-stage aggregate
-    #: (pipeline.reassemble_with_metrics_salted) for corpora with
+    #: (operators.spans.ordered with n_salt) for corpora with
     #: pathologically many-page documents; 0 = plain single-stage.
     reassembly_salt: int = 0
     #: Password for encrypted PDFs (standard security handler — tried

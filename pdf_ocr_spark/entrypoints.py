@@ -319,9 +319,7 @@ FROM books GROUP BY book_id
 def q_reassemble_txt(spark: SparkSession, sf: str) -> DataFrame:
     """S5+A2: ordered reassembly + txt serialization (sorted collect)."""
     b = _books(spark, sf)
-    pages = F.array_sort(
-        F.collect_list(F.struct(F.col("page").alias("offset"), F.col("text").alias("text")))
-    )
+    pages = F.collect_list(F.struct(F.col("page").alias("offset"), F.col("text").alias("text")))
     return b.groupBy("book_id").agg(txt_doc_col(pages).alias("txt"))
 
 
@@ -372,9 +370,7 @@ def q_serialize_md(spark: SparkSession, sf: str) -> DataFrame:
     b = _books(spark, sf).select(
         "book_id", "page", F.replace(F.col("text"), F.lit(" batch "), F.lit("\n\n")).alias("text")
     )
-    pages = F.array_sort(
-        F.collect_list(F.struct(F.col("page").alias("offset"), F.col("text").alias("text")))
-    )
+    pages = F.collect_list(F.struct(F.col("page").alias("offset"), F.col("text").alias("text")))
     return b.groupBy("book_id").agg(markdown_doc_col(pages).alias("md"))
 
 
@@ -409,9 +405,7 @@ def q_serialize_html(spark: SparkSession, sf: str) -> DataFrame:
     b = _books(spark, sf).select(
         "book_id", "page", F.replace(F.col("text"), F.lit(" batch "), F.lit("\n\n")).alias("text")
     )
-    pages = F.array_sort(
-        F.collect_list(F.struct(F.col("page").alias("offset"), F.col("text").alias("text")))
-    )
+    pages = F.collect_list(F.struct(F.col("page").alias("offset"), F.col("text").alias("text")))
     return b.groupBy("book_id").agg(
         html_doc_col(pages, F.concat(F.lit("book_"), F.col("book_id"))).alias("html")
     )
@@ -2882,6 +2876,7 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
     whose media payloads are rendered by the corpus generator), run the
     full pipeline (OCR decode -> normalize -> ordered reassembly ->
     serialize) and return per-document results with metrics."""
+    from pdf_ocr_spark.operators.spans import reassemble_spans
     from pdf_ocr_spark.plans.pipeline import extract_documents
     from pdf_ocr_spark.sources.corpus import generate_media
 
@@ -2910,29 +2905,7 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
             (F.col("max_off") + 1).cast("int"), F.lit(".png"),
         ).alias("media_ref"),
     )
-    pages = paged.unionByName(img)
-    span_struct = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    docs = (
-        pages.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(span_struct)).alias("_o"))
-        .select(
-            "doc_id",
-            F.transform(
-                F.col("_o"),
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
+    docs = reassemble_spans(paged.unionByName(img))
     media = generate_media(spark, docs, seed=42, missing_rate=0.02, corrupt_rate=0.02)
     out = extract_documents(docs, media)
     return out.select(

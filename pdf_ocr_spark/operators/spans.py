@@ -8,13 +8,27 @@ Two execution shapes (SURVEY §3.1):
 * **exploded** — ``explode_spans`` fans out to one row per span so that
   pathological many-page documents can spread across executors, and
   ``reassemble_spans`` restores the per-document ordered array (the
-  reference's sorted-dict reassembly, /root/reference/app.py:548) with a
-  single hash-shuffle on doc_id.
+  reference's sorted-dict reassembly, reference ``app.py:548``).
+
+Every ordered reassembly in the package is :func:`ordered`, and every
+per-document page metric is :func:`page_metrics` over its array. With
+``n_salt == 0`` it is one hash-shuffle on doc_id. Otherwise it is the
+two-stage salted merge for skewed many-page documents (FP-Hadoop's
+intermediate reduce for hot keys, PAPERS.md):
+
+  stage 1: group on (doc_id, salt) where salt = pmod(xxhash64(offset), n_salt)
+           -> n_salt sorted partial lists per hot doc, on n_salt reducers
+  stage 2: group on doc_id, flatten + re-sort the partials
+
+Both stages get map-side partial aggregation. ``flatten + array_sort``
+in stage 2 is cheap because the partials are presorted and small
+relative to executor memory. Both forms yield the same array, so the
+metrics read from it agree exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -46,34 +60,63 @@ def assign_offsets(pages: DataFrame, order_col: str = "offset") -> DataFrame:
     return pages.withColumn("offset", (F.row_number().over(w) - F.lit(1)).cast("int"))
 
 
-def reassemble_spans(pages: DataFrame) -> DataFrame:
-    """Inverse of :func:`explode_spans`: collect each document's spans
-    and restore offset order.
+#: The span fields of the canonical ``spans`` array, after ``offset``.
+SPAN_FIELDS = ("kind", "text", "media_ref")
+
+
+def ordered(
+    pages: DataFrame, fields: tuple[str, ...], n_salt: int | Column = 0
+) -> DataFrame:
+    """(doc_id, _ordered): each document's ``struct(offset, *fields)``
+    rows, sorted by offset.
 
     ``collect_list`` gathers in arbitrary (completion) order — exactly
     like the reference's ``as_completed`` loop filling ``results[i]``
-    (/root/reference/app.py:513-516) — then ``array_sort`` on a struct
-    whose *leading* field is ``offset`` restores order, and a
-    ``transform`` re-projects the canonical (kind, text, media_ref,
-    offset) field order. One hash-shuffle on doc_id; map-side partial
-    aggregation applies.
-    """
-    ordered_struct = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
+    (reference ``app.py:513-516``) — then ``array_sort`` on a struct
+    whose *leading* field is ``offset`` restores order. ``n_salt == 0``
+    is one ``groupBy(doc_id)``; any other ``n_salt`` (an int, or a
+    per-row column) runs the salted two-stage merge (module
+    docstring)."""
+    item = F.struct("offset", *fields)
+    if isinstance(n_salt, int) and n_salt == 0:
+        return pages.groupBy("doc_id").agg(
+            F.array_sort(F.collect_list(item)).alias("_ordered")
+        )
+    salt = n_salt if isinstance(n_salt, Column) else F.lit(n_salt)
+    partials = (
+        pages.withColumn("_salt", F.pmod(F.xxhash64("offset"), salt))
+        .groupBy("doc_id", "_salt")
+        .agg(F.array_sort(F.collect_list(item)).alias("_partial"))
     )
-    collected = pages.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(ordered_struct)).alias("_ordered")
+    return partials.groupBy("doc_id").agg(
+        F.array_sort(F.flatten(F.collect_list("_partial"))).alias("_ordered")
     )
-    canonical = F.transform(
-        F.col("_ordered"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return collected.select("doc_id", canonical.alias("spans"))
+
+
+def page_metrics() -> list[Column]:
+    """``n_pages``, ``mean_confidence`` and ``n_errors`` of an
+    :func:`ordered` array whose fields include ``confidence`` and
+    ``error``. The confidence sum runs in offset order, so it does not
+    depend on the order partitions arrive in."""
+    n = F.size("_ordered")
+    conf = F.aggregate("_ordered", F.lit(0.0), lambda acc, s: acc + s["confidence"])
+    return [
+        n.cast("bigint").alias("n_pages"),
+        (conf / n).alias("mean_confidence"),
+        F.size(F.filter("_ordered", lambda s: s["error"])).cast("bigint").alias("n_errors"),
+    ]
+
+
+def canonical_spans() -> Column:
+    """An :func:`ordered` array re-projected into the canonical
+    (kind, text, media_ref, offset) ``spans`` field order."""
+    return F.transform(
+        "_ordered",
+        lambda s: F.struct(*(s[f].alias(f) for f in (*SPAN_FIELDS, "offset"))),
+    ).alias("spans")
+
+
+def reassemble_spans(pages: DataFrame, n_salt: int | Column = 0) -> DataFrame:
+    """Inverse of :func:`explode_spans`: (doc_id, spans) with each
+    document's spans in offset order; ``n_salt`` as in :func:`ordered`."""
+    return ordered(pages, SPAN_FIELDS, n_salt).select("doc_id", canonical_spans())

@@ -11,8 +11,12 @@ Physical notes for scale:
   side is small. At 100 TB, bucket both tables by ``media_ref`` to
   make it shuffle-free.
 * The single shuffle that must exist is the reassembly groupBy on
-  ``doc_id`` (partial aggregation map-side). Skewed many-page docs go
-  through :func:`pdf_ocr_spark.plans.salting.reassemble_spans_salted`.
+  ``doc_id`` (partial aggregation map-side), and the per-document
+  metrics are read from its sorted array
+  (:func:`pdf_ocr_spark.operators.spans.ordered`,
+  :func:`~pdf_ocr_spark.operators.spans.page_metrics`). Skewed
+  many-page docs take its salted two-stage form through
+  ``ExtractionConfig.reassembly_salt``.
 * Everything else — normalization, serialization — is projection work
   fused into the surrounding stages by whole-stage codegen.
 """
@@ -26,7 +30,13 @@ from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.functions.text import normalize_text_col
 from pdf_ocr_spark.operators.ocr import ocr_pages
 from pdf_ocr_spark.operators.serialize import serialize_documents
-from pdf_ocr_spark.operators.spans import explode_spans
+from pdf_ocr_spark.operators.spans import (
+    SPAN_FIELDS,
+    canonical_spans,
+    explode_spans,
+    ordered,
+    page_metrics,
+)
 
 
 def extract_pages(
@@ -75,80 +85,6 @@ def extract_pages(
     return text_pages.unionByName(decoded)
 
 
-def reassemble_with_metrics(pages: DataFrame) -> DataFrame:
-    """Ordered reassembly plus per-document metrics in one aggregation
-    (single shuffle): spans array, page count, mean OCR confidence,
-    error count."""
-    ordered_struct = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    collected = pages.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(ordered_struct)).alias("_ordered"),
-        F.count("*").alias("n_pages"),
-        F.avg("confidence").alias("mean_confidence"),
-        F.sum(F.col("error").cast("long")).alias("n_errors"),
-    )
-    canonical = F.transform(
-        F.col("_ordered"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return collected.select(
-        "doc_id", canonical.alias("spans"), "n_pages", "mean_confidence", "n_errors"
-    )
-
-
-def reassemble_with_metrics_salted(pages: DataFrame, n_salt: int = 16) -> DataFrame:
-    """Salted two-stage variant of :func:`reassemble_with_metrics` for
-    corpora with pathologically many-page documents: stage 1 groups on
-    (doc_id, salt) building sorted partial span lists and *partial*
-    metric sums; stage 2 merges per doc_id (flatten + re-sort, metric
-    sums combined — mean confidence recomputed from sum/count, not
-    averaged partial means). Output identical to the plain version
-    (equivalence-tested)."""
-    ordered_struct = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    partials = (
-        pages.withColumn("_salt", F.pmod(F.xxhash64("offset"), F.lit(n_salt)))
-        .groupBy("doc_id", "_salt")
-        .agg(
-            F.array_sort(F.collect_list(ordered_struct)).alias("_partial"),
-            F.count("*").alias("_n"),
-            F.sum("confidence").alias("_conf_sum"),
-            F.sum(F.col("error").cast("long")).alias("_err"),
-        )
-    )
-    merged = partials.groupBy("doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("_partial"))).alias("_ordered"),
-        F.sum("_n").alias("n_pages"),
-        (F.sum("_conf_sum") / F.sum("_n")).alias("mean_confidence"),
-        F.sum("_err").alias("n_errors"),
-    )
-    canonical = F.transform(
-        F.col("_ordered"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return merged.select(
-        "doc_id", canonical.alias("spans"), "n_pages", "mean_confidence", "n_errors"
-    )
-
-
 def extract_documents(
     documents: DataFrame,
     media: DataFrame,
@@ -166,10 +102,9 @@ def extract_documents(
     """
     cfg = config or ExtractionConfig()
     pages = extract_pages(documents, media, cfg)
-    if cfg.reassembly_salt:
-        docs = reassemble_with_metrics_salted(pages, n_salt=cfg.reassembly_salt)
-    else:
-        docs = reassemble_with_metrics(pages)
+    docs = ordered(
+        pages, (*SPAN_FIELDS, "confidence", "error"), cfg.reassembly_salt
+    ).select("doc_id", canonical_spans(), *page_metrics())
     if observation is not None:
         docs = docs.observe(
             observation,

@@ -1,23 +1,21 @@
-"""Skew-aware salted reassembly (SURVEY §4 custom job logic #1).
+"""Skew-aware plans: the salted equi-join and the histogram-salted
+reassembly (SURVEY §4 custom job logic #1).
 
 A document with millions of pages would make the plain
 ``groupBy(doc_id)`` put its whole span list through one reducer. The
-salted form is the classic two-stage re-merge:
-
-  stage 1: group on (doc_id, salt) where salt = pmod(hash(offset), S)
-           -> S partial lists per hot doc, each sorted
-  stage 2: group on doc_id, flatten + re-sort the partials
-
-Both stages get map-side partial aggregation; the hot key's data now
-crosses the wire in S pieces landing on S different reducers. ``flatten
-+ array_sort`` on stage 2 is cheap because partials are presorted and
-small relative to executor memory.
+salted two-stage merge that splits it lives in one place,
+:func:`pdf_ocr_spark.operators.spans.ordered`, and
+``reassemble_spans(pages, n_salt=k)`` salts every document by ``k``.
+:func:`reassemble_spans_auto_salted` only decides the salt per
+document, from the measured span histogram.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pdf_ocr_spark.operators.spans import reassemble_spans
 
 
 def salted_join(
@@ -52,13 +50,12 @@ def reassemble_spans_auto_salted(
     1. one cheap count-agg finds hot documents (> hot_threshold spans)
        and assigns each ``salt_n = ceil(count / target_per_group)``;
     2. the (tiny) hot map is **broadcast**-joined onto pages; cold docs
-       get salt 0 and flow through the plain single-stage aggregate,
-       hot docs are split into salt_n partial lists and re-merged.
+       get one salt, so each is a single partial list, and hot docs
+       are split into salt_n partial lists and re-merged.
 
-    Cost: one extra scan for the histogram + a broadcast join — no
-    extra shuffle for the (overwhelmingly common) cold documents.
-    Output identical to :func:`reassemble_spans_salted` / the plain
-    aggregate (equivalence-tested).
+    Cost: one extra scan for the histogram + a broadcast join.
+    Output identical to the plain ``reassemble_spans``
+    (equivalence-tested).
     """
     hot = (
         pages.groupBy("doc_id")
@@ -69,61 +66,5 @@ def reassemble_spans_auto_salted(
             F.ceil(F.col("_n") / F.lit(target_per_group)).cast("int").alias("_salt_n"),
         )
     )
-    salted = pages.join(F.broadcast(hot), "doc_id", "left").withColumn(
-        "_salt",
-        F.when(
-            F.col("_salt_n").isNotNull(),
-            F.pmod(F.xxhash64("offset"), F.col("_salt_n")),
-        ).otherwise(F.lit(0)),
-    )
-    ordered_struct = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    partials = salted.groupBy("doc_id", "_salt").agg(
-        F.array_sort(F.collect_list(ordered_struct)).alias("_partial")
-    )
-    merged = partials.groupBy("doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("_partial"))).alias("_ordered")
-    )
-    canonical = F.transform(
-        F.col("_ordered"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return merged.select("doc_id", canonical.alias("spans"))
-
-
-def reassemble_spans_salted(pages: DataFrame, n_salt: int = 16) -> DataFrame:
-    """Salted inverse of explode_spans. Output matches
-    :func:`pdf_ocr_spark.operators.spans.reassemble_spans` exactly."""
-    ordered_struct = F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    partials = (
-        pages.withColumn("_salt", F.pmod(F.xxhash64("offset"), F.lit(n_salt)))
-        .groupBy("doc_id", "_salt")
-        .agg(F.array_sort(F.collect_list(ordered_struct)).alias("_partial"))
-    )
-    merged = partials.groupBy("doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("_partial"))).alias("_ordered")
-    )
-    canonical = F.transform(
-        F.col("_ordered"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-    return merged.select("doc_id", canonical.alias("spans"))
+    salted = pages.join(F.broadcast(hot), "doc_id", "left")
+    return reassemble_spans(salted, n_salt=F.coalesce("_salt_n", F.lit(1)))

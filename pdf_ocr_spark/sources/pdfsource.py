@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import os
 import re
-import weakref
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -62,10 +61,6 @@ _DOC_RE = re.compile(r"doc_([^/]+)\.pdf$")
 #: Spark's default file split size (128 MB), which the light-scan rule
 #: measures against.
 _SPLIT_BYTES = 134217728
-
-#: "session" -> (weakref to SparkContext, binaryFile scan session) —
-#: see :func:`scan_session`; one entry.
-_SCAN_SESSIONS: dict = {}
 
 #: Fixture-corpus heterogeneity residues (see write_pdf_corpus):
 #: doc id % ENCRYPT_RESIDUES == 1 -> RC4-encrypted file;
@@ -594,8 +589,16 @@ def _binary_scan(spark: SparkSession, pattern: str, light: bool = False) -> Data
     ``light`` kernels (about a millisecond per file) coalesce instead,
     without a shuffle (:func:`light_partitions`). Corpora that already
     plan >= 4 waves — the 100 TB case, where split count scales with
-    data — keep Spark's plan: enough bins that no one bin dominates."""
-    df = scan_session(spark).read.format("binaryFile").load(pattern)
+    data — keep Spark's plan: enough bins that no one bin dominates.
+
+    The scan runs on the caller's session, so the whole query keeps the
+    runtime confs set there. It loads the pattern's directory with the
+    file-name glob as ``pathGlobFilter``: a glob path would expand into
+    one root path per matching file, and above 32 roots Spark lists
+    them in a job of one task per file, where one directory root is
+    listed on the driver."""
+    root, glob = os.path.split(pattern)
+    df = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(root)
     if light:
         n = light_partitions(spark, _scanned_bytes(df))
         if n is not None and df.rdd.getNumPartitions() > n:
@@ -641,29 +644,6 @@ def light_partitions(spark: SparkSession, total_bytes: int | None) -> int | None
     if total_bytes is not None and total_bytes <= par * _SPLIT_BYTES:
         return par
     return None
-
-
-def scan_session(spark: SparkSession) -> SparkSession:
-    """The binaryFile scan session: one per SparkContext, with the
-    parallel-listing threshold raised. Above 32 files Spark otherwise
-    launches a listing job with one task per file — seconds of pure
-    scheduling for a few hundred local files, and again every trigger
-    of the streaming file source, which lists through the same path.
-    The conf lives on a ``newSession()`` (same SparkContext, isolated
-    SQL conf) so the caller's session never observes it, and the
-    session is cached so a long-lived application does not accumulate
-    JVM-side session state per scan."""
-    ctx = spark.sparkContext
-    entry = _SCAN_SESSIONS.get("session")
-    # weakref: a GC'd SparkContext can never alias a new one
-    if entry is not None and entry[0]() is ctx:
-        return entry[1]
-    s = spark.newSession()
-    s.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "100000"
-    )
-    _SCAN_SESSIONS["session"] = (weakref.ref(ctx), s)
-    return s
 
 
 def harvest(
@@ -956,10 +936,13 @@ def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> Dat
     two-stage form (``read_pdf_pages`` -> ``ocr_pages``) carries each
     page between stages as PNG bytes, paying an encode+decode per page
     purely for schema transport (measured ~1.8x the whole query);
-    here the parsed rasters feed the decoder directly. Error semantics
-    match the two-stage path exactly (parse failures become one
-    ``[Error: ...]`` row per file)."""
+    here the parsed rasters feed the decoder directly. Parse failures
+    match the two-stage path: one ``[Error: ...]`` row per file. An
+    exception while OCR-ing one page does not: the two-stage path makes
+    it that page's error row, while here the whole file becomes the
+    one-row error shape."""
     from pdf_ocr_spark.config import ExtractionConfig
+    from pdf_ocr_spark.operators.spans import ordered, page_metrics
 
     cfg = config or ExtractionConfig()
     if cfg.ocr_engine != "glyph":
@@ -972,57 +955,38 @@ def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> Dat
             pages.select("doc_id", "offset", "media_ref", "payload", "parse_error"),
             cfg,
         )
-        return _reassemble_pdf_docs(decoded)
-    from pdf_ocr_spark.operators.imaging import (
-        derotate_image,
-        enhance_image,
-        ocr_decode,
-    )
-    from pdf_ocr_spark.sources.pdfcodec import decode_pdf
-
-    pw = cfg.pdf_password.encode()
-
-    def per_file(key, path, data):
-        rows = []
-        for i, img in enumerate(decode_pdf(data, password=pw)):
-            if cfg.preprocess:
-                img = enhance_image(img)
-            if cfg.derotate:
-                img = derotate_image(img)
-            text, conf = ocr_decode(img)
-            rows.append((key, i, text, conf, False))
-        return rows
-
-    decoded = harvest(
-        spark,
-        os.path.join(pdf_dir, "*.pdf"),
-        per_file,
-        lambda key, path, e: [(key, 0, f"[Error: {e}]", 0.0, True)],
-        "doc_id string, offset int, text string, confidence double, error boolean",
-    )
-    return _reassemble_pdf_docs(decoded)
-
-
-def _reassemble_pdf_docs(decoded: DataFrame) -> DataFrame:
-    """Per-document ordered reassembly of decoded page rows."""
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.col("offset"), F.col("text")))
-    )
-    return (
-        decoded.groupBy("doc_id")
-        .agg(
-            ordered.alias("_pages"),
-            F.count("*").alias("n_pages"),
-            F.avg("confidence").alias("mean_confidence"),
-            F.sum(F.col("error").cast("long")).alias("n_errors"),
+    else:
+        from pdf_ocr_spark.operators.imaging import (
+            derotate_image,
+            enhance_image,
+            ocr_decode,
         )
-        .select(
-            "doc_id",
-            F.array_join(F.transform("_pages", lambda s: s["text"]), "\n\n").alias("txt"),
-            "n_pages",
-            "mean_confidence",
-            "n_errors",
+        from pdf_ocr_spark.sources.pdfcodec import decode_pdf
+
+        pw = cfg.pdf_password.encode()
+
+        def per_file(key, path, data):
+            rows = []
+            for i, img in enumerate(decode_pdf(data, password=pw)):
+                if cfg.preprocess:
+                    img = enhance_image(img)
+                if cfg.derotate:
+                    img = derotate_image(img)
+                text, conf = ocr_decode(img)
+                rows.append((key, i, text, conf, False))
+            return rows
+
+        decoded = harvest(
+            spark,
+            os.path.join(pdf_dir, "*.pdf"),
+            per_file,
+            lambda key, path, e: [(key, 0, f"[Error: {e}]", 0.0, True)],
+            "doc_id string, offset int, text string, confidence double, error boolean",
         )
+    return ordered(decoded, ("text", "confidence", "error")).select(
+        "doc_id",
+        F.array_join(F.transform("_ordered", lambda s: s["text"]), "\n\n").alias("txt"),
+        *page_metrics(),
     )
 
 

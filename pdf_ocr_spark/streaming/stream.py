@@ -19,6 +19,8 @@ the reference's TASK_STATUS polling endpoint).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -26,6 +28,10 @@ from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.operators.normalize import normalize_documents
 from pdf_ocr_spark.plans.pipeline import extract_documents
 from pdf_ocr_spark.schema import DOCUMENTS_SCHEMA
+
+#: "session" -> (weakref to SparkContext, binaryFile scan session) —
+#: see :func:`scan_session`; one entry.
+_SCAN_SESSIONS: dict = {}
 
 
 def stream_normalize(
@@ -487,10 +493,8 @@ def stream_reassemble_books(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spans = F.array_sort(
-            F.collect_list(
-                F.struct(F.col("page").alias("offset"), F.col("text").alias("text"))
-            )
+        spans = F.collect_list(
+            F.struct(F.col("page").alias("offset"), F.col("text").alias("text"))
         )
         (
             batch_df.groupBy("book_id")
@@ -510,6 +514,33 @@ def stream_reassemble_books(
     )
     q.awaitTermination()
     return spark.read.parquet(out_dir).select("book_id", "txt")
+
+
+def scan_session(spark: SparkSession) -> SparkSession:
+    """The session :func:`stream_pdf_profiles` streams on: one per
+    SparkContext, with the parallel-listing threshold raised. Each
+    trigger's ``getBatch`` lists its explicit file list, one root path
+    per file, and above 32 roots Spark would list them in a job of one
+    task per file (~2 s of pure scheduling per 1250-file batch). The
+    conf lives on a ``newSession()`` (same SparkContext, isolated SQL
+    conf) so the caller's session never observes it, and the session
+    is cached so a long-lived application does not accumulate JVM-side
+    session state.
+
+    Known gap: the whole streaming query runs on this session, so it
+    does not see runtime confs set on the caller's session (session
+    time zone, Arrow settings)."""
+    ctx = spark.sparkContext
+    entry = _SCAN_SESSIONS.get("session")
+    # weakref: a GC'd SparkContext can never alias a new one
+    if entry is not None and entry[0]() is ctx:
+        return entry[1]
+    s = spark.newSession()
+    s.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", "100000"
+    )
+    _SCAN_SESSIONS["session"] = (weakref.ref(ctx), s)
+    return s
 
 
 def stream_pdf_profiles(
@@ -546,7 +577,6 @@ def stream_pdf_profiles(
         light_partitions,
         map_files,
         profile_harvest,
-        scan_session,
     )
 
     out_dir = os.path.join(workdir, "out")

@@ -182,16 +182,13 @@ def main() -> None:
         return
 
     from pdf_ocr_spark.operators.spans import reassemble_spans
-    from pdf_ocr_spark.plans.salting import (
-        reassemble_spans_auto_salted,
-        reassemble_spans_salted,
-    )
+    from pdf_ocr_spark.plans.salting import reassemble_spans_auto_salted
 
     pages = build_pages(spark, args.hot, args.hot_spans, args.cold_docs, args.cold_spans)
 
     variants = {
         "plain": lambda: reassemble_spans(pages),
-        "salted": lambda: reassemble_spans_salted(pages, n_salt=64),
+        "salted": lambda: reassemble_spans(pages, n_salt=64),
         "auto_salted": lambda: reassemble_spans_auto_salted(
             pages, hot_threshold=10_000, target_per_group=5_000
         ),

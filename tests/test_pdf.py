@@ -1269,7 +1269,8 @@ def test_small_scan_deals_every_size_class_across_cores(spark, tmp_path):
 
 def test_small_scan_has_no_empty_task_and_one_session(spark, tmp_path):
     """Fewer files than cores give one task per file, never an empty
-    Python task, and every scan shares the one cached scan session."""
+    Python task, and planning a 40-file scan runs no listing job (above
+    32 root paths Spark would list them in a job of one task per file)."""
     from pdf_ocr_spark.sources import pdfsource
 
     for n_files, per_task in ((16, [4] * 4), (3, [1] * 3), (2, [1] * 2), (1, [1])):
@@ -1277,7 +1278,40 @@ def test_small_scan_has_no_empty_task_and_one_session(spark, tmp_path):
         df = pdfsource._binary_scan(spark, pattern)
         assert df.rdd.getNumPartitions() == len(per_task), n_files
         assert _files_per_task(df) == per_task, n_files
-    assert len(pdfsource._SCAN_SESSIONS) == 1
+    pattern = _write_blobs(tmp_path / "40", [5_000] * 40)
+    sc = spark.sparkContext
+    sc.setJobGroup("scan_listing", "plan a 40-file binaryFile scan")
+    try:
+        df = pdfsource._binary_scan(spark, pattern)
+        assert list(sc.statusTracker().getJobIdsForGroup("scan_listing")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sum(_files_per_task(df)) == 40
+
+
+def test_harvest_runs_on_the_callers_session(spark, tmp_path):
+    """A batch harvest's frame belongs to the caller's session, so the
+    query over it keeps the runtime confs set there."""
+    from pdf_ocr_spark.sources.pdfsource import harvest
+
+    pattern = _write_blobs(tmp_path, [1_000] * 8)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        df = harvest(
+            spark,
+            pattern,
+            lambda key, path, data: [(key, len(data))],
+            lambda key, path, e: [],
+            "doc_id string, n long",
+        )
+        assert df.sparkSession is spark
+        assert df.groupBy("doc_id").count().rdd.getNumPartitions() == 3
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_light_scan_guard_measures_the_globbed_files(spark, tmp_path):
@@ -1293,3 +1327,25 @@ def test_light_scan_guard_measures_the_globbed_files(spark, tmp_path):
     df = _binary_scan(spark, pattern, light=True)
     assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     assert df.count() == 200
+
+
+def test_extraction_output_schemas(spark, pdf_dir):
+    """Resumed runs append to Parquet written by earlier runs, so the
+    output schemas of both extraction entry points stay exactly these."""
+    from pdf_ocr_spark.config import ExtractionConfig
+    from pdf_ocr_spark.plans.pipeline import extract_documents
+    from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
+
+    docs = generate_documents(spark, n_docs=4, seed=1)
+    media = generate_media(spark, docs, seed=1)
+    spans = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    metrics = "n_pages:bigint,mean_confidence:double,n_errors:bigint"
+    for salt in (0, 4):
+        got = extract_documents(docs, media, ExtractionConfig(reassembly_salt=salt))
+        assert got.schema.simpleString() == (
+            f"struct<doc_id:string,spans:{spans},{metrics},txt:string,md:string,html:string>"
+        ), salt
+    root, _ = pdf_dir
+    for engine in ("glyph", "tesseract"):
+        got = extract_pdf_documents(spark, root, ExtractionConfig(ocr_engine=engine))
+        assert got.schema.simpleString() == f"struct<doc_id:string,txt:string,{metrics}>", engine

@@ -11,7 +11,6 @@ from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.operators.spans import explode_spans, reassemble_spans
 from pdf_ocr_spark.plans.manifest import read_manifest, run_extraction
 from pdf_ocr_spark.plans.pipeline import extract_documents
-from pdf_ocr_spark.plans.salting import reassemble_spans_salted
 from pdf_ocr_spark.sources.corpus import (
     _media_fate,
     expected_page_text,
@@ -101,7 +100,7 @@ def test_salted_reassembly_equivalent(spark, corpus):
     docs, _ = corpus
     pages = explode_spans(docs)
     plain = {r["doc_id"]: r["spans"] for r in reassemble_spans(pages).collect()}
-    salted = {r["doc_id"]: r["spans"] for r in reassemble_spans_salted(pages, n_salt=4).collect()}
+    salted = {r["doc_id"]: r["spans"] for r in reassemble_spans(pages, n_salt=4).collect()}
     assert plain == salted
 
 
@@ -211,4 +210,4 @@ def test_salted_pipeline_equivalent(spark, corpus):
         assert [tuple(s) for s in a["spans"]] == [tuple(s) for s in b["spans"]]
         assert a["txt"] == b["txt"] and a["n_pages"] == b["n_pages"]
         assert a["n_errors"] == b["n_errors"]
-        assert abs(a["mean_confidence"] - b["mean_confidence"]) < 1e-9
+        assert a["mean_confidence"] == b["mean_confidence"]
