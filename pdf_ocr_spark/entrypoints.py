@@ -35,7 +35,6 @@ from pdf_ocr_spark.operators.analysis import (
     STOPWORDS,
     avg_token_len_col,
     digit_ratio_col,
-    fingerprint_col,
     lang_id_col,
     punct_ratio_col,
     quality_score_col,
@@ -50,8 +49,6 @@ from pdf_ocr_spark.operators.dedup import (
     incremental_dedup_verdicts,
     minhash_near_dup,
     ngram_jaccard_pairs,
-    norm_text_col,
-    simhash_col,
 )
 from pdf_ocr_spark.operators.similarity import cosine_topk, lsh_topk
 from pdf_ocr_spark.oracle.serializers import HTML_STYLE, TXT_PAGE_SEPARATOR
@@ -98,7 +95,8 @@ def sql_tokens(e: str) -> str:
 
 
 def sql_grams(e: str, n: int = 3) -> str:
-    """Word-n-gram shingles of lowercased text (matches word_ngrams_col)."""
+    """Word-n-gram shingles of lowercased text (matches
+    ``word_ngrams_from_tokens`` over ``tokens_col(lower(text))``)."""
     t = sql_tokens(f"lower({e})")
     joined = " || ' ' || ".join(f"{t}[i+{j}]" if j else f"{t}[i]" for j in range(n))
     return (
@@ -249,11 +247,14 @@ def _drain_stream_result(spark: SparkSession, df: DataFrame, workdir: str) -> Da
     oracle runs invoke each query several times per session). The
     results are small by construction (dup groups / per-file profiles
     / per-book text), so an eager local copy costs less than the
-    leak."""
+    leak. The copy is a ``LocalRelation``, so actions over it run no
+    Python task."""
     import shutil
 
+    from pdf_ocr_spark.plans.manifest import local_frame
+
     rows = df.collect()
-    out = spark.createDataFrame(rows, df.schema)
+    out = local_frame(spark, rows, df.schema)
     shutil.rmtree(workdir, ignore_errors=True)
     return out
 
@@ -5162,17 +5163,16 @@ def q_audio_features(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: The round driver's correctness artifact compares only the FIRST
-#: ``_WINDOW`` registered queries against their oracles; later entries
+#: 50 registered queries against their oracles; later entries
 #: get no rows. With more exact-oracle queries than window slots, static
 #: demotion starves the demoted set of driver-green rows forever — so
 #: window membership ROTATES, driven by the prior rounds' own
 #: CORRECTNESS artifacts: queries that have never produced a green
 #: driver row come first, then previously-green queries stalest-first
 #: (ascending last-green round). Every exact-oracle query therefore
-#: regains a driver-green row at least every ceil(n_exact/_WINDOW)
+#: regains a green row at least every ceil(n_exact/50)
 #: rounds (~every other round at current counts), with no hand-kept
 #: demote list to maintain.
-_WINDOW = 50
 
 #: Queries whose semantics/oracle changed in a given round: prior
 #: green rows no longer certify the current form, so they re-enter the

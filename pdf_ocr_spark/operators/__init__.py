@@ -1,10 +1,5 @@
 from pdf_ocr_spark.operators.spans import (  # noqa: F401
-    assign_offsets,
     explode_spans,
     reassemble_spans,
-)
-from pdf_ocr_spark.operators.normalize import (  # noqa: F401
-    normalize_documents,
-    normalize_pages,
 )
 from pdf_ocr_spark.operators.serialize import serialize_documents  # noqa: F401

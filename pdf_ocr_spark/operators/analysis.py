@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines: token counting,
-quality scoring, language ID, document fingerprinting.
+quality scoring, language ID, word n-gram shingles.
 
 All pure column expressions (JVM-side). Each has an ANSI-SQL twin in
 :mod:`pdf_ocr_spark.entrypoints` for the DuckDB oracle; the two are
@@ -22,9 +22,6 @@ STOPWORDS = {
 
 #: Tie-break priority when stopword scores are equal.
 LANG_PRIORITY = ("en", "es", "de", "fr")
-
-PUNCT_CLASS = r"[^A-Za-z0-9\s]"
-
 
 def tokens_col(text: Column) -> Column:
     """Whitespace tokenization; empty/blank text -> empty array."""
@@ -112,20 +109,6 @@ def word_ngrams_from_tokens(toks: Column, n: int = 3) -> Column:
         lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]),
     )
     return F.when(k < n, F.array(F.concat_ws(" ", toks))).otherwise(grams)
-
-
-def word_ngrams_col(text: Column, n: int = 3) -> Column:
-    """Shingles straight from a text column — convenient for one-shot
-    expressions; for hot paths materialize tokens first and use
-    :func:`word_ngrams_from_tokens`."""
-    return word_ngrams_from_tokens(tokens_col(F.lower(text)), n)
-
-
-def fingerprint_col(text: Column, n: int = 3) -> Column:
-    """Document fingerprint: lexicographic-min MD5 over word n-gram
-    shingles (a 1-permutation MinHash / winnowing-style selector).
-    Portable across engines because it is pure MD5-on-strings."""
-    return F.array_min(F.transform(word_ngrams_col(text, n), F.md5))
 
 
 # ---------------------------------------------------------------------------

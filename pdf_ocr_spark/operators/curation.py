@@ -13,10 +13,6 @@ is scan -> window -> project: one shuffle at any corpus size.
 Thresholds compare the ``round(6)`` values the cross-engine oracle
 hash-matches on, so verdict boundaries cannot drift between Spark and
 the SQL twin (entrypoints.py ``corpus_filter_verdict``).
-
-:func:`pdf_ocr_spark.plans.curation.run_curation` wraps this in the
-bucket-checkpointed, idempotently-resumable job shape used for
-extraction runs.
 """
 
 from pyspark.sql import DataFrame, Window

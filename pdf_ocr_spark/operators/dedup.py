@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_ocr_spark.operators.analysis import tokens_col, word_ngrams_col
+from pdf_ocr_spark.operators.analysis import tokens_col
 
 #: MinHash configuration shared with the SQL oracle.
 MINHASH_PERMS = 12
@@ -123,24 +123,6 @@ def incremental_dedup_verdicts(
             .alias("verdict"),
         )
     )
-
-
-def minhash_signature_col(text: Column, perms: int = MINHASH_PERMS) -> Column:
-    """Array of `perms` MinHash values (min MD5 of salted shingles).
-
-    The shingle array is materialized once into the expression tree and
-    each permutation is a transform over it; for the exploded/aggregate
-    formulation (cheaper when shingles are already exploded for the
-    verification join) see :func:`shingle_table` + ``groupBy().agg``.
-    """
-    grams = word_ngrams_col(text, 3)
-
-    def salted(p: int):
-        # closure factory: keeps the lambda unary (PySpark infers
-        # higher-order-function arity from the Python signature)
-        return lambda g: F.md5(F.concat(F.lit(f"{p}:"), g))
-
-    return F.array(*[F.array_min(F.transform(grams, salted(p))) for p in range(perms)])
 
 
 def shingle_table(
@@ -506,14 +488,6 @@ def contamination_check(
         .groupBy("id")
         .agg(F.count("*").alias("n_gram_hits"))
     )
-
-
-def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash straight from a text column — convenience wrapper; hot
-    paths should materialize the distinct-token array and call
-    :func:`simhash_from_tokens` (lambda bodies re-evaluate inline
-    expressions per aggregate)."""
-    return simhash_from_tokens(F.array_distinct(tokens_col(F.lower(text))), bits)
 
 
 def hamming_col(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:

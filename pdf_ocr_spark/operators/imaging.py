@@ -115,39 +115,6 @@ def shear_image(img: np.ndarray, slope: float, fill: int = 255) -> np.ndarray:
     return out
 
 
-def estimate_shear(ink: np.ndarray, max_slope: float = 0.3, steps: int = 13) -> float:
-    """Skew estimation by column-projection variance maximization: text
-    with vertical glyph strokes produces the sharpest column histogram
-    when unsheared. Coarse scan over [-max_slope, max_slope] followed by
-    two hierarchical refinement passes around the best candidate
-    (final resolution ~max_slope/250); exact-tie preference for 0."""
-    ys, xs = np.nonzero(ink)
-    if ys.size == 0:
-        return 0.0
-
-    def score_of(slope: float) -> float:
-        shifted = xs - _shear_shift(slope, ys)
-        proj = np.bincount(shifted - shifted.min())
-        return float((proj.astype(np.float64) ** 2).sum())
-
-    def scan(lo: float, hi: float, n: int, seed_slope: float, seed_score: float):
-        best_slope, best_score = seed_slope, seed_score
-        for slope in np.linspace(lo, hi, n):
-            s = score_of(float(slope))
-            if s > best_score + 1e-9 or (
-                abs(s - best_score) <= 1e-9 and abs(slope) < abs(best_slope)
-            ):
-                best_slope, best_score = float(slope), s
-        return best_slope, best_score
-
-    step = 2 * max_slope / (steps - 1)
-    best, score = scan(-max_slope, max_slope, steps, 0.0, score_of(0.0))
-    for _ in range(2):
-        best, score = scan(best - step, best + step, 21, best, score)
-        step /= 10.0
-    return best
-
-
 def _shear_candidates(
     ys: np.ndarray, xs: np.ndarray, max_slope: float = 0.3, k: int = 12
 ) -> list[float]:
@@ -171,15 +138,6 @@ def _shear_candidates(
         if len(out) >= k:
             break
     return out
-
-
-def deskew_image(img: np.ndarray, threshold: int = 128) -> np.ndarray:
-    """Detect and undo horizontal-shear skew (grayscale input)."""
-    gray = to_grayscale(img)
-    slope = estimate_shear(gray < threshold)
-    if slope == 0.0:
-        return gray
-    return shear_image(gray, -slope)
 
 
 def _segment_lines(ink: np.ndarray, max_gap: int = 2) -> list[tuple[int, int]]:
@@ -437,8 +395,9 @@ def estimate_rotation(ink: np.ndarray, max_theta: float = 0.3, steps: int = 13) 
     landscape is far less alias-prone than the column-projection score
     (which locks onto glyph-pitch harmonics on rotated input —
     measured: theta=0.06 estimated as -0.15 via columns, 0.060 via
-    rows). Same coarse-scan + two hierarchical refinements as
-    :func:`estimate_shear`; exact-tie preference for 0."""
+    rows). A coarse scan over [-max_theta, max_theta] is followed by two
+    hierarchical refinement passes around the best candidate; exact-tie
+    preference for 0."""
     import math
 
     ys, xs = np.nonzero(ink)
@@ -486,8 +445,8 @@ def derotate_image(img: np.ndarray, threshold: int = 128) -> np.ndarray:
        cells score full agreement, so raw confidence alone would
        prefer a derotation that segments to nothing.
 
-    Unlike :func:`deskew_image` (x-shear only), this also removes the
-    vertical shear component, so baselines land level again and line
+    Unlike undoing an x-shear alone, this also removes the vertical
+    shear component, so baselines land level again and line
     banding survives rotations, not just shears.
 
     Resolution limit (honest contract): bit-exact shear cancellation

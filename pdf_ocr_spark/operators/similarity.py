@@ -359,15 +359,6 @@ def _plane_signs(plane: int, dim: int) -> tuple:
     )
 
 
-def _plane_signs_col(plane: int, dim: int) -> Column:
-    """The sign vector as ONE ``F.expr("array(...)")`` — a single py4j
-    call parsed JVM-side. ``F.lit(<list>)`` builds the same literal via
-    one py4j round-trip per element; at 48 planes x 512 dims that was
-    15 s of driver-side plan construction before any job ran."""
-    arr = ",".join("1.0D" if s > 0 else "-1.0D" for s in _plane_signs(plane, dim))
-    return F.expr(f"array({arr})")
-
-
 def signature_bits_col(vec: Column, n_planes_total: int, dim: int) -> Column:
     """All hyperplane sign bits at once: ``array<string>`` of '1'/'0',
     one element per plane. The planes live in ONE constant
@@ -375,8 +366,10 @@ def signature_bits_col(vec: Column, n_planes_total: int, dim: int) -> Column:
     ``transform`` with a nested zip/fold — a tree of 48 separate
     per-plane aggregate expressions took seconds of Catalyst analysis +
     janino codegen per stage (and self-joins compile it on both sides).
-    ``dim=0``: planes are ``_PLANE_MAX_DIM`` wide, sliced to
-    ``size(vec)`` per row."""
+    The literal is one ``F.expr`` string parsed JVM-side:
+    ``F.lit(<list>)`` costs a py4j round-trip per element (15 s of plan
+    construction at 48 planes x 512 dims). ``dim=0``: planes are
+    ``_PLANE_MAX_DIM`` wide, sliced to ``size(vec)`` per row."""
     if n_planes_total == 0:
         # degenerate single-bucket case (everything collides)
         return F.expr("cast(array() as array<string>)")
@@ -398,22 +391,6 @@ def signature_bits_col(vec: Column, n_planes_total: int, dim: int) -> Column:
         return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
 
     return F.transform(mat, bit)
-
-
-def hyperplane_sign_col(vec: Column, plane: int, dim: int) -> Column:
-    """Sign of <vec, h_plane> with the hyperplane embedded as an array
-    literal (see :func:`_plane_signs`). ``dim=0`` means the vector
-    width is unknown at plan time: a ``_PLANE_MAX_DIM``-wide literal is
-    sliced to ``size(vec)`` at runtime; wider vectors fail loudly via
-    :func:`_width_guarded` instead of null-poisoning the dot."""
-    if dim:
-        signs = _plane_signs_col(plane, dim)
-    else:
-        vec = _width_guarded(vec)
-        signs = F.slice(_plane_signs_col(plane, _PLANE_MAX_DIM), 1, F.size(vec))
-    prods = F.zip_with(vec, signs, lambda x, h: x.cast("double") * h)
-    s = F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-    return F.when(s >= 0, F.lit("1")).otherwise(F.lit("0"))
 
 
 def lsh_bucket_col(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:

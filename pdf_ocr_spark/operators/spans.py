@@ -1,4 +1,4 @@
-"""Span-level structural operators: explode, offset assignment, reassembly.
+"""Span-level structural operators: explode and ordered reassembly.
 
 Two execution shapes (SURVEY §3.1):
 
@@ -28,7 +28,7 @@ metrics read from it agree exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,13 +51,6 @@ def explode_spans(documents: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
     )
-
-
-def assign_offsets(pages: DataFrame, order_col: str = "offset") -> DataFrame:
-    """(Re)assign dense 0-based offsets per document by the given order
-    column — ``row_number`` over a per-doc window (SURVEY §2.4)."""
-    w = Window.partitionBy("doc_id").orderBy(F.col(order_col))
-    return pages.withColumn("offset", (F.row_number().over(w) - F.lit(1)).cast("int"))
 
 
 #: The span fields of the canonical ``spans`` array, after ``offset``.

@@ -70,12 +70,6 @@ def fix_common_ocr_errors(text: Optional[str]) -> Optional[str]:
     return text
 
 
-def normalize_page_text(text: Optional[str]) -> str:
-    """The full per-page normalization: sanitize then fix, as chained at
-    ``/root/reference/app.py:326-329``."""
-    return fix_common_ocr_errors(sanitize_text(text)) or ""
-
-
 # --- M1: filename securing (/root/reference/app.py:69-74) ------------------
 
 _ASCII_STRIP = re.compile(r"[^A-Za-z0-9_.-]")

@@ -76,40 +76,6 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
-def expire_manifest(spark: SparkSession, out_dir: str, ttl_seconds: float) -> int:
-    """S10 retention: drop manifest rows older than the TTL (the
-    reference deletes stale uploads/tasks by mtime,
-    /root/reference/app.py:76-102). Parquet has no row deletes, so this
-    rewrites the manifest filtered — with Iceberg it would be a
-    metadata-only ``DELETE WHERE ts < cutoff``. Returns rows kept.
-
-    The rewrite stays distributed end to end: kept rows go to a
-    sibling staging directory (same filesystem as the manifest, so
-    this works on HDFS/S3A paths too, unlike a driver-local tempdir)
-    and are then re-read and swapped in — rows never round-trip
-    through the driver, so manifest size is bounded by executor, not
-    driver, memory. Staging cleanup goes through the Hadoop
-    FileSystem API (resolved for the staging URI), so the claim holds
-    on distributed filesystems too — a local shutil.rmtree would
-    silently leave HDFS/S3A staging dirs to accumulate. A crash
-    between the staging write and the final overwrite leaves the old
-    manifest intact plus an orphan staging dir; the orphan is swept
-    on the next expiration's entry, so re-running converges."""
-    m = read_manifest(spark, out_dir)
-    kept = m.where(
-        F.col("ts") >= F.from_unixtime(F.unix_timestamp(F.current_timestamp()) - F.lit(int(ttl_seconds))).cast("timestamp")
-    )
-    path = _manifest_dir(out_dir)
-    staging = path + "_expiring"
-    _hadoop_delete(spark, staging)  # sweep a crashed run's orphan
-    kept.write.mode("overwrite").parquet(staging)
-    staged = spark.read.schema(MANIFEST_SCHEMA).parquet(staging)
-    n_kept = staged.count()
-    staged.write.mode("overwrite").parquet(path)
-    _hadoop_delete(spark, staging)
-    return n_kept
-
-
 def _hadoop_path(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path``, with the Hadoop FileSystem
     resolved for its URI — works for file://, hdfs://, s3a:// alike.
@@ -119,13 +85,6 @@ def _hadoop_path(spark: SparkSession, path: str):
     observation listener log an error with a full stack trace."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path``. Missing paths are a no-op (delete
-    returns False)."""
-    fs, jpath = _hadoop_path(spark, path)
-    fs.delete(jpath, True)
 
 
 def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:

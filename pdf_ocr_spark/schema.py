@@ -66,14 +66,3 @@ MANIFEST_SCHEMA = StructType(
         StructField("ts", TimestampType(), True),
     ]
 )
-
-#: Flat per-page exploded shape used by the distributed page path.
-PAGES_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("offset", IntegerType(), False),
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), True),
-        StructField("media_ref", StringType(), True),
-    ]
-)

@@ -4,4 +4,4 @@ from pdf_ocr_spark.sources.corpus import (  # noqa: F401
     generate_documents,
     generate_media,
 )
-from pdf_ocr_spark.sources.testdata import load_table, register_views  # noqa: F401
+from pdf_ocr_spark.sources.testdata import load_table  # noqa: F401

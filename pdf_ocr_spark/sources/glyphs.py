@@ -70,10 +70,6 @@ CHAR_PITCH = GLYPH_W + 1  # one blank column between glyphs
 LINE_PITCH = GLYPH_H + 3  # blank rows between lines
 MARGIN = 4
 
-#: The characters the renderer accepts (plus space/newline).
-CHARSET = frozenset(FONT_5X7) | {" "}
-
-
 def glyph_array(ch: str) -> np.ndarray:
     """5x7 bool array of ink cells for one glyph ('space' is blank)."""
     rows = FONT_5X7.get(ch)

@@ -91,7 +91,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 ZIGZAG = _zigzag_order()
-UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K.3 standard Huffman tables: (BITS[1..16], HUFFVAL)
 DC_LUM = (

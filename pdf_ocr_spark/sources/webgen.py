@@ -235,10 +235,6 @@ def generate_html_corpus(documents: DataFrame) -> DataFrame:
     return cols.mapInPandas(gen, HTML_CORPUS_SCHEMA)
 
 
-def site_host(doc_id: int) -> str:
-    return f"site-{doc_id % 7}.example.{SITE_TLDS[doc_id % 5]}"
-
-
 def robots_for_site(k: int, host: str | None = None) -> str:
     """robots.txt for site index ``k`` (RFC 9309 format). Planted rule
     shapes exercise real evaluator behavior: a decoy non-* group (must

@@ -101,13 +101,6 @@ def test_deskew_recovery():
             assert got == text, (text, slope, got)
 
 
-def test_deskew_estimate_zero_on_clean():
-    from pdf_ocr_spark.operators.imaging import estimate_shear
-
-    img = render_text_image("NO SKEW HERE")
-    assert estimate_shear(img < 128) == 0.0
-
-
 def test_clean_page_fast_path_unchanged():
     # unskewed pages must not pay the candidate search (conf 1.0 short-circuit)
     got, conf = ocr_decode(render_text_image("FAST PATH"))

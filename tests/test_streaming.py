@@ -1,96 +1,7 @@
-"""Streaming surface tests: the streaming pipeline must produce exactly
-the batch pipeline's results (the kernel is batch/stream agnostic)."""
+"""Streaming surface tests: each incremental query must produce exactly
+the batch query's results (the kernel is batch/stream agnostic)."""
 
 from __future__ import annotations
-
-import pytest
-
-from pdf_ocr_spark.operators.normalize import normalize_documents
-from pdf_ocr_spark.plans.pipeline import extract_documents
-from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
-from pdf_ocr_spark.streaming.stream import stream_extract, stream_normalize
-
-
-@pytest.fixture(scope="module")
-def staged(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("stream")
-    docs = generate_documents(spark, n_docs=40, seed=11)
-    docs.write.parquet(str(root / "in"))
-    media = generate_media(spark, docs, seed=11).cache()
-    return root, media
-
-
-def test_stream_normalize_matches_batch(spark, staged):
-    root, _ = staged
-    q = stream_normalize(
-        spark, str(root / "in"), str(root / "norm_out"), str(root / "norm_ckpt")
-    )
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in spark.read.parquet(str(root / "norm_out")).collect()
-    }
-    want = {
-        r["doc_id"]: [tuple(s) for s in r["spans"]]
-        for r in normalize_documents(spark.read.parquet(str(root / "in"))).collect()
-    }
-    assert got == want
-
-
-def test_stream_extract_matches_batch(spark, staged):
-    root, media = staged
-    q = stream_extract(
-        spark, str(root / "in"), media, str(root / "ex_out"), str(root / "ex_ckpt")
-    )
-    q.awaitTermination(180)
-    got = {
-        r["doc_id"]: (r["txt"], [tuple(s) for s in r["spans"]])
-        for r in spark.read.parquet(str(root / "ex_out")).collect()
-    }
-    batch = extract_documents(spark.read.parquet(str(root / "in")), media)
-    want = {
-        r["doc_id"]: (r["txt"], [tuple(s) for s in r["spans"]]) for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_stream_is_incremental(spark, staged):
-    """New files appended to the input dir are picked up by a later
-    availableNow run without reprocessing the old ones."""
-    root, media = staged
-    more = generate_documents(spark, n_docs=10, seed=99).withColumnRenamed("doc_id", "doc_id")
-    more = more.selectExpr("concat('late_', doc_id) as doc_id", "spans")
-    more.write.mode("append").parquet(str(root / "in"))
-    late_media = generate_media(spark, more, seed=11)
-    q = stream_extract(
-        spark, str(root / "in"), media.unionByName(late_media), str(root / "ex_out"), str(root / "ex_ckpt")
-    )
-    q.awaitTermination(180)
-    out = spark.read.parquet(str(root / "ex_out"))
-    # 40 originals exactly once + 10 late docs
-    assert out.count() == 50
-    assert out.where("doc_id like 'late_%'").count() == 10
-
-
-def test_stream_extract_replay_is_idempotent(spark, staged):
-    """foreachBatch is at-least-once: a micro-batch that fails between a
-    partial write and the checkpoint commit is replayed with the SAME
-    batch_id. The dynamic-partition-overwrite sink must make the replay
-    a no-op (no duplicate rows)."""
-    from pdf_ocr_spark.streaming.stream import write_extract_batch
-
-    root, media = staged
-    out = str(root / "replay_out")
-    q = stream_extract(spark, str(root / "in"), media, out, str(root / "replay_ckpt"))
-    q.awaitTermination(180)
-    n_before = spark.read.parquet(out).count()
-    # replay batch 0 verbatim: re-run the exact per-batch write with the
-    # original input and the original batch_id
-    batch0 = spark.read.parquet(str(root / "in"))
-    write_extract_batch(batch0, 0, media, out)
-    after = spark.read.parquet(out)
-    assert after.count() == n_before
-    assert after.select("doc_id").distinct().count() == n_before
 
 
 def test_stream_reassemble_books_matches_batch(spark, tmp_path):
@@ -180,3 +91,60 @@ def test_stream_dedup_exact_matches_batch(spark, tmp_path):
         .select("batch_id").distinct().collect()
     }
     assert len(batches) > 1
+
+
+def test_stream_pdf_profiles_runs_with_the_callers_confs(spark, tmp_path, monkeypatch):
+    """The profile stream runs on the cached scan session, which must
+    carry the caller's runtime confs, here a distinctive session time
+    zone seen from inside every micro-batch."""
+    import numpy as np
+
+    from pdf_ocr_spark.sources import pdfsource
+    from pdf_ocr_spark.sources.pdfcodec import encode_pdf
+    from pdf_ocr_spark.streaming.stream import scan_session, stream_pdf_profiles
+
+    TZ = "spark.sql.session.timeZone"
+    pdf_dir = tmp_path / "pdfs"
+    pdf_dir.mkdir()
+    img = np.zeros((20, 20), dtype=np.uint8)
+    for d in range(4):
+        (pdf_dir / f"doc_{d}.pdf").write_bytes(encode_pdf([img], compress=True))
+    seen = []
+    map_files = pdfsource.map_files
+
+    def spy(batch_df, *args):
+        seen.append(batch_df.sparkSession.conf.get(TZ))
+        return map_files(batch_df, *args)
+
+    monkeypatch.setattr(pdfsource, "map_files", spy)
+    was_set = TZ in spark.conf.getAll
+    before = spark.conf.get(TZ)
+    try:
+        spark.conf.set(TZ, "Pacific/Chatham")
+        got = stream_pdf_profiles(spark, str(pdf_dir), str(tmp_path / "wd"), n_batches=2)
+        assert got.count() == 4
+    finally:
+        if was_set:
+            spark.conf.set(TZ, before)
+        else:
+            spark.conf.unset(TZ)
+    assert seen and set(seen) == {"Pacific/Chatham"}
+    # a later call follows the caller again, so nothing stays stale
+    assert scan_session(spark).conf.get(TZ) == before
+
+
+def test_drained_stream_result_runs_no_python_task(spark, tmp_path):
+    """The streaming queries hand back their drained rows as a
+    LocalRelation, not a Python-backed RDD, and remove their scratch
+    dir."""
+    from pdf_ocr_spark.entrypoints import _drain_stream_result
+
+    wd = tmp_path / "wd"
+    spark.createDataFrame([(1, "a"), (2, None)], "id long, t string").write.parquet(
+        str(wd / "out")
+    )
+    out = _drain_stream_result(spark, spark.read.parquet(str(wd / "out")), str(wd))
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert sorted(map(tuple, out.collect())) == [(1, "a"), (2, None)]
+    assert not wd.exists()
