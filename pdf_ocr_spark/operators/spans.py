@@ -24,6 +24,19 @@ Both stages get map-side partial aggregation. ``flatten + array_sort``
 in stage 2 is cheap because the partials are presorted and small
 relative to executor memory. Both forms yield the same array, so the
 metrics read from it agree exactly.
+
+With ``buckets > 0`` the final grouping is on (bucket, doc_id), where
+bucket is :func:`doc_bucket`, behind one ``repartitionById(t, bucket)``
+with ``t = min(buckets, defaultParallelism)``: bucket ``k`` goes to
+task ``k mod t``, so the tasks' counts of whole buckets differ by at
+most one. (A hash of 32 buckets into 4 partitions split them
+5/10/7/10, and the fullest task set the stage's time.) That exchange
+already satisfies the aggregate's distribution, so it replaces the
+doc_id shuffle instead of adding one. The final stage's partial
+aggregation then runs after the exchange, not map-side. The salted
+stage 1 keeps its (doc_id, salt) spread; only stage 2 is
+bucket-clustered. When this pays, and its limits:
+:mod:`pdf_ocr_spark.plans.pipeline`.
 """
 
 from __future__ import annotations
@@ -57,8 +70,18 @@ def explode_spans(documents: DataFrame) -> DataFrame:
 SPAN_FIELDS = ("kind", "text", "media_ref")
 
 
+def doc_bucket(n_buckets: int) -> Column:
+    """A document's output bucket, ``pmod(xxhash64(doc_id), n_buckets)``:
+    the unit a checkpointed run writes, resumes and clusters its
+    reassembly by."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def ordered(
-    pages: DataFrame, fields: tuple[str, ...], n_salt: int | Column = 0
+    pages: DataFrame,
+    fields: tuple[str, ...],
+    n_salt: int | Column = 0,
+    buckets: int = 0,
 ) -> DataFrame:
     """(doc_id, _ordered): each document's ``struct(offset, *fields)``
     rows, sorted by offset.
@@ -69,21 +92,28 @@ def ordered(
     whose *leading* field is ``offset`` restores order. ``n_salt == 0``
     is one ``groupBy(doc_id)``; any other ``n_salt`` (an int, or a
     per-row column) runs the salted two-stage merge (module
-    docstring)."""
+    docstring). ``buckets > 0`` groups the final stage on
+    (bucket, doc_id) behind one exchange that sends bucket ``k`` to
+    task ``k mod min(buckets, defaultParallelism)``, and adds a
+    ``bucket`` column; a salted stage 1 still groups on
+    (doc_id, salt)."""
     item = F.struct("offset", *fields)
     if isinstance(n_salt, int) and n_salt == 0:
-        return pages.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(item)).alias("_ordered")
+        merged = F.array_sort(F.collect_list(item))
+    else:
+        salt = n_salt if isinstance(n_salt, Column) else F.lit(n_salt)
+        pages = (
+            pages.withColumn("_salt", F.pmod(F.xxhash64("offset"), salt))
+            .groupBy("doc_id", "_salt")
+            .agg(F.array_sort(F.collect_list(item)).alias("_partial"))
         )
-    salt = n_salt if isinstance(n_salt, Column) else F.lit(n_salt)
-    partials = (
-        pages.withColumn("_salt", F.pmod(F.xxhash64("offset"), salt))
-        .groupBy("doc_id", "_salt")
-        .agg(F.array_sort(F.collect_list(item)).alias("_partial"))
-    )
-    return partials.groupBy("doc_id").agg(
-        F.array_sort(F.flatten(F.collect_list("_partial"))).alias("_ordered")
-    )
+        merged = F.array_sort(F.flatten(F.collect_list("_partial")))
+    keys = ["doc_id"]
+    if buckets:
+        tasks = min(buckets, pages.sparkSession.sparkContext.defaultParallelism)
+        pages = pages.withColumn("bucket", doc_bucket(buckets)).repartitionById(tasks, "bucket")
+        keys = ["bucket", "doc_id"]
+    return pages.groupBy(*keys).agg(merged.alias("_ordered"))
 
 
 def page_metrics() -> list[Column]:

@@ -1,6 +1,8 @@
 """Checkpointed, resumable extraction runs (SURVEY §4 #2, FIXTURES F4).
 
-The unit of checkpointing is a *bucket*: ``pmod(xxhash64(doc_id), B)``.
+The unit of checkpointing is a *bucket*: ``pmod(xxhash64(doc_id), B)``,
+defined once by :func:`~pdf_ocr_spark.operators.spans.doc_bucket` for
+the resume anti-join, the reassembly clustering and the write.
 A run:
 
 1. reads the manifest, collects this run_id's completed buckets (a
@@ -9,11 +11,15 @@ A run:
 2. anti-joins them away (the reference's resume analogue: its task
    lifecycle at /root/reference/app.py:593-628 restarts whole jobs;
    we restart at bucket granularity),
-3. extracts the remaining documents,
+3. extracts the remaining documents, with the reassembly clustered by
+   bucket (``extract_documents(..., buckets=B)``),
 4. writes output parquet partitioned by bucket with **dynamic partition
    overwrite** — so re-processing a bucket is idempotent by
    construction (a half-written bucket from a killed run is simply
-   overwritten),
+   overwritten). The write runs in the reassembly's tasks, at most
+   ``min(B, defaultParallelism)`` of them, each holding whole buckets,
+   so every bucket is one Parquet file. That cap is also the limit on
+   a large corpus (:mod:`pdf_ocr_spark.plans.pipeline`),
 5. appends manifest rows (status='completed', per-bucket metrics)
    only *after* the output write action has succeeded — two-phase, so
    the manifest never claims a bucket whose data didn't commit. The
@@ -34,6 +40,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from pdf_ocr_spark.config import ExtractionConfig
+from pdf_ocr_spark.operators.spans import doc_bucket
 from pdf_ocr_spark.plans.pipeline import extract_documents
 from pdf_ocr_spark.schema import MANIFEST_SCHEMA
 
@@ -115,7 +122,7 @@ def run_extraction(
     cfg = config or ExtractionConfig()
     t0 = time.time()
 
-    docs = documents.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+    docs = documents.withColumn("bucket", doc_bucket(n_buckets))
     if only_buckets is not None:
         docs = docs.where(F.col("bucket").isin([int(b) for b in only_buckets]))
 
@@ -126,9 +133,7 @@ def run_extraction(
     seen = Observation()
     observed = todo.observe(seen, F.collect_set("bucket").alias("buckets"))
 
-    extracted = extract_documents(observed.drop("bucket"), media, cfg).withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    extracted = extract_documents(observed.drop("bucket"), media, cfg, buckets=n_buckets)
     (
         extracted.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -10,13 +10,30 @@ Physical notes for scale:
   no skew); Catalyst/AQE picks sort-merge, or broadcast when the media
   side is small. At 100 TB, bucket both tables by ``media_ref`` to
   make it shuffle-free.
-* The single shuffle that must exist is the reassembly groupBy on
-  ``doc_id`` (partial aggregation map-side), and the per-document
-  metrics are read from its sorted array
+* The single shuffle that must exist is the reassembly, and the
+  per-document metrics are read from its sorted array
   (:func:`pdf_ocr_spark.operators.spans.ordered`,
   :func:`~pdf_ocr_spark.operators.spans.page_metrics`). Skewed
   many-page docs take its salted two-stage form through
   ``ExtractionConfig.reassembly_salt``.
+* A plain call groups on ``doc_id``, and AQE sizes that shuffle by
+  bytes. A checkpointed run
+  (:func:`pdf_ocr_spark.plans.manifest.run_extraction`) passes
+  ``buckets``. The reassembly then groups on (bucket, doc_id) behind
+  one exchange by number, which AQE does not coalesce: bucket ``k``
+  goes to task ``k mod min(buckets, defaultParallelism)``. Each bucket
+  sits whole in one task, so the write still makes one file per
+  bucket. This pays when the reassembly shuffle is small enough that
+  AQE would coalesce it into fewer tasks than there are cores.
+  ``span_extract`` at local[4] moves ~200 KB, which became one task
+  running the sorts, the serializers and all 32 Parquet files.
+  Limits: the reassembly, the serializers and the write run in at most
+  ``min(buckets, defaultParallelism)`` tasks, whatever the shuffle's
+  size. ``defaultParallelism`` is read when the run is planned; under
+  dynamic allocation it can be smaller than the executors granted
+  later. A bucket must fit one task, so size ``buckets`` to the
+  corpus. BENCH.md has both sides on a shuffle far past AQE's
+  advisory partition size, at local[4] only.
 * Everything else — normalization, serialization — is projection work
   fused into the surrounding stages by whole-stage codegen.
 """
@@ -91,6 +108,7 @@ def extract_documents(
     config: ExtractionConfig | None = None,
     serialize: bool = True,
     observation=None,
+    buckets: int = 0,
 ) -> DataFrame:
     """Full pipeline: returns one row per document with ordered spans,
     metrics, and (optionally) serialized txt/md/html columns.
@@ -99,12 +117,18 @@ def extract_documents(
     (docs/pages/errors/mean confidence) at action time with zero extra
     passes — the Spark-native replacement for the reference's polled
     TASK_STATUS progress dict (/root/reference/app.py:518-522).
+
+    ``buckets`` (set by :func:`pdf_ocr_spark.plans.manifest.run_extraction`)
+    clusters the reassembly by output bucket and adds the ``bucket``
+    column; see :func:`~pdf_ocr_spark.operators.spans.ordered`.
     """
     cfg = config or ExtractionConfig()
     pages = extract_pages(documents, media, cfg)
     docs = ordered(
-        pages, (*SPAN_FIELDS, "confidence", "error"), cfg.reassembly_salt
-    ).select("doc_id", canonical_spans(), *page_metrics())
+        pages, (*SPAN_FIELDS, "confidence", "error"), cfg.reassembly_salt, buckets
+    ).select(
+        "doc_id", canonical_spans(), *page_metrics(), *(["bucket"] if buckets else [])
+    )
     if observation is not None:
         docs = docs.observe(
             observation,

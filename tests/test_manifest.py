@@ -1,11 +1,14 @@
 """Extraction-run bookkeeping: driver-built frames plan as local
-relations, a fresh run plans no resume join, and a run over completed
-buckets changes nothing."""
+relations, a fresh run plans no resume join, a run over completed
+buckets changes nothing, and the reassembly is clustered by output
+bucket (one exchange, one file per bucket)."""
 
 from __future__ import annotations
 
 import datetime
+import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +19,7 @@ from pdf_ocr_spark.plans.manifest import (
     read_manifest,
     run_extraction,
 )
+from pdf_ocr_spark.plans.pipeline import extract_documents
 from pdf_ocr_spark.schema import MANIFEST_SCHEMA
 from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
 
@@ -111,3 +115,40 @@ def test_partition_overwrite_leaves_session_conf(spark, corpus, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def test_bucketed_reassembly_plans_one_bucket_exchange(spark, corpus):
+    docs, media = corpus
+    n = 8
+    tasks = min(n, spark.sparkContext.defaultParallelism)
+    plan = extract_documents(docs, media, buckets=n)._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"(?<!Broadcast)Exchange (.*), \[plan_id", plan)
+    assert len(exchanges) == 1 and "hashpartitioning(doc_id" not in plan
+    assert re.fullmatch(
+        rf"shufflepartitionidpassthrough\(direct_shuffle_partition_id\(bucket#\d+\), {tasks}\), REPARTITION_BY_NUM",
+        exchanges[0],
+    )
+    # the tree prints top-down: the OCR kernel runs below (before) the exchange
+    assert plan.index("REPARTITION_BY_NUM") < plan.index("MapInPandas kernel(")
+
+
+def test_bucket_overwrite_leaves_other_buckets_byte_identical(spark, corpus, tmp_path):
+    docs, media = corpus
+    out = str(tmp_path / "buckets")
+    documents = os.path.join(out, "documents")
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 4
+    dirs = sorted(glob.glob(os.path.join(documents, "bucket=*")))
+    assert [os.path.basename(d) for d in dirs] == [f"bucket={k}" for k in range(4)]
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    before = _tree(documents)
+    rows = sorted(tuple(r) for r in spark.read.parquet(documents).collect())
+
+    assert run_extraction(spark, docs, media, out, "run2", n_buckets=4, only_buckets=[2]) == 1
+
+    def others(tree):
+        return {p: b for p, b in tree.items() if p.startswith("bucket=") and not p.startswith("bucket=2/")}
+
+    assert others(_tree(documents)) == others(before)
+    assert len(glob.glob(os.path.join(documents, "bucket=2", "*.parquet"))) == 1
+    assert sorted(tuple(r) for r in spark.read.parquet(documents).collect()) == rows

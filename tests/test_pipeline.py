@@ -4,6 +4,8 @@ equivalence, and checkpoint/resume idempotency."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pdf_ocr_spark import oracle
@@ -211,3 +213,26 @@ def test_salted_pipeline_equivalent(spark, corpus):
         assert a["txt"] == b["txt"] and a["n_pages"] == b["n_pages"]
         assert a["n_errors"] == b["n_errors"]
         assert a["mean_confidence"] == b["mean_confidence"]
+
+
+def test_salted_and_plain_bucketed_runs_agree(spark, corpus, tmp_path):
+    """Salted and plain bucketed runs write the same rows, and the
+    salted plan keeps the (doc_id, _salt) stage-1 exchange below
+    (before) the bucket exchange, so hot documents still spread."""
+    docs, media = corpus
+    salted_cfg = ExtractionConfig(reassembly_salt=4)
+    cols = ["doc_id", "spans", "txt", "md", "html", "n_pages", "n_errors", "mean_confidence"]
+    written = []
+    for name, cfg in (("plain", None), ("salted", salted_cfg)):
+        out = str(tmp_path / name)
+        run_extraction(spark, docs, media, out, "run1", config=cfg, n_buckets=8)
+        got = spark.read.parquet(f"{out}/documents").select(*cols).orderBy("doc_id").collect()
+        written.append([tuple(r) for r in got])
+    assert written[0] == written[1]
+    assert len(written[0]) == docs.count()
+
+    plan = extract_documents(docs, media, salted_cfg, buckets=8)._jdf.queryExecution().executedPlan().toString()
+    bucket = re.search(r"Exchange shufflepartitionidpassthrough\(direct_shuffle_partition_id\(bucket#", plan)
+    salt = re.search(r"Exchange hashpartitioning\(doc_id#\d+, _salt#\d+L?, \d+\)", plan)
+    assert bucket and salt
+    assert bucket.start() < salt.start()
