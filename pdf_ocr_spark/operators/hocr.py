@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_ocr_spark.config import ExtractionConfig
+from pdf_ocr_spark.operators.ocr import page_error
 
 HOCR_PAGE_SCHEMA = StructType(
     [
@@ -98,7 +99,7 @@ def ocr_pages_hocr(pages: DataFrame, config: ExtractionConfig | None = None) -> 
                     confs.append(conf)
                     errs.append(False)
                 except Exception as e:
-                    texts.append(f"[Error processing page {int(off) + 1}: {e}]")
+                    texts.append(page_error(int(off), e))
                     hocrs.append(None)
                     confs.append(0.0)
                     errs.append(True)

@@ -243,67 +243,23 @@ def _line_layout(ink: np.ndarray, band: tuple[int, int]) -> dict | None:
     }
 
 
-def ocr_decode_layout(img: np.ndarray, threshold: int = 128) -> tuple[list[dict], float]:
-    """Layout-aware decode: text lines with word bounding boxes (the
-    hOCR feed). Same segmentation + template matching + deskew retry as
-    :func:`ocr_decode`; geometry is reported in the deskewed frame
-    (standard for hOCR after skew correction)."""
-    gray = to_grayscale(img)
-    ink = gray < threshold
-    if not ink.any():
-        ink = gray < gray.mean()
-        if not ink.any():
-            return [], 0.0
-
-    def layout_of(mask: np.ndarray) -> tuple[list[dict], float]:
-        lines = [l for l in (_line_layout(mask, b) for b in _segment_lines(mask)) if l]
-        conf = float(np.mean([l["confidence"] for l in lines])) if lines else 0.0
-        return lines, conf
-
-    lines, conf = layout_of(ink)
-    if conf >= 0.999:
-        return lines, conf
-    ys, xs = np.nonzero(ink)
-    for slope in _shear_candidates(ys, xs):
-        shifted = xs - _shear_shift(slope, ys)
-        off = int(shifted.min())
-        fixed = np.zeros((ink.shape[0], int(shifted.max()) - off + 1), dtype=bool)
-        fixed[ys, shifted - off] = True
-        l2, c2 = layout_of(fixed)
-        if c2 > conf:
-            lines, conf = l2, c2
-        if conf >= 0.999:
-            break
-    return lines, conf
-
-
-def ocr_decode(img: np.ndarray, threshold: int = 128) -> tuple[str, float]:
-    """Decode a rendered page image to (text, mean_confidence).
-
-    Mirrors the reference's M4 shape: primary pass, and if the result is
-    empty a retry with an alternative segmentation setting (the
-    reference retries tesseract with ``--psm 6``,
-    /root/reference/app.py:259-263) — here a data-driven threshold.
-    """
+def _deskewed_decode(img: np.ndarray, threshold: int, decode, empty):
+    """The deskew search both decoders share: binarize (retrying at the
+    image's own mean when ``threshold`` finds no ink), run ``decode``
+    on the ink mask, and if its confidence is low, re-run it on each
+    shear candidate's re-binned ink and keep the most confident result.
+    ``decode(mask)`` returns (result, confidence); ``empty`` is the
+    result for an inkless page."""
     gray = to_grayscale(img)
     ink = gray < threshold
     if not ink.any():
         # retry: adapt threshold to the image's own intensity spread
         ink = gray < gray.mean()
         if not ink.any():
-            return "", 0.0
-
-    def decode_ink(mask: np.ndarray) -> tuple[str, float]:
-        lines, confs = [], []
-        for band in _segment_lines(mask):
-            text, conf = _decode_line(mask, band)
-            lines.append(text)
-            confs.append(conf)
-        return "\n".join(lines), float(np.mean(confs)) if confs else 0.0
-
-    text, conf = decode_ink(ink)
+            return empty, 0.0
+    out, conf = decode(ink)
     if conf >= 0.999:
-        return text, conf
+        return out, conf
     # Low confidence: the page may be skewed. Shortlist slope candidates
     # by column-projection sharpness, decode each, keep the decode with
     # the best template confidence (projection score alone can lock
@@ -314,12 +270,46 @@ def ocr_decode(img: np.ndarray, threshold: int = 128) -> tuple[str, float]:
         off = int(shifted.min())
         fixed = np.zeros((ink.shape[0], int(shifted.max()) - off + 1), dtype=bool)
         fixed[ys, shifted - off] = True
-        text2, conf2 = decode_ink(fixed)
+        out2, conf2 = decode(fixed)
         if conf2 > conf:
-            text, conf = text2, conf2
+            out, conf = out2, conf2
         if conf >= 0.999:
             break
-    return text, conf
+    return out, conf
+
+
+def _layout_of(mask: np.ndarray) -> tuple[list[dict], float]:
+    lines = [l for l in (_line_layout(mask, b) for b in _segment_lines(mask)) if l]
+    conf = float(np.mean([l["confidence"] for l in lines])) if lines else 0.0
+    return lines, conf
+
+
+def _text_of(mask: np.ndarray) -> tuple[str, float]:
+    lines, confs = [], []
+    for band in _segment_lines(mask):
+        text, conf = _decode_line(mask, band)
+        lines.append(text)
+        confs.append(conf)
+    return "\n".join(lines), float(np.mean(confs)) if confs else 0.0
+
+
+def ocr_decode_layout(img: np.ndarray, threshold: int = 128) -> tuple[list[dict], float]:
+    """Layout-aware decode: text lines with word bounding boxes (the
+    hOCR feed). Same segmentation + template matching + deskew retry as
+    :func:`ocr_decode`; geometry is reported in the deskewed frame
+    (standard for hOCR after skew correction)."""
+    return _deskewed_decode(img, threshold, _layout_of, [])
+
+
+def ocr_decode(img: np.ndarray, threshold: int = 128) -> tuple[str, float]:
+    """Decode a rendered page image to (text, mean_confidence).
+
+    Mirrors the reference's M4 shape: primary pass, and if the result is
+    empty a retry with an alternative segmentation setting (the
+    reference retries tesseract with ``--psm 6``,
+    /root/reference/app.py:259-263) — here a data-driven threshold.
+    """
+    return _deskewed_decode(img, threshold, _text_of, "")
 
 
 # ---------------------------------------------------------------------------

@@ -1,15 +1,22 @@
-"""The OCR decode operator — Arrow-batched ``mapInPandas`` kernel.
+"""Per-page OCR: the reference's ``process_image``
+(/root/reference/app.py:226-345) as one function, :func:`ocr_image`,
+and the Arrow-batched ``mapInPandas`` kernel over PNG payloads,
+:func:`ocr_pages`.
 
-Distributed equivalent of the reference's per-page worker
-``process_image`` (/root/reference/app.py:226-345), with the same
-observable semantics:
+:func:`ocr_image` is the only per-page OCR in the package. Both
+extraction paths call it: :func:`ocr_pages` (span documents, via
+``extract_documents`` / ``run_extraction``) on each decoded PNG, and
+:func:`pdf_ocr_spark.sources.pdfsource.extract_pdf_documents` on each
+raster the PDF codec decodes. It has the reference's observable
+semantics:
 
 * engine dispatch on a config value; unsupported engine -> error row
-* preprocess flag -> enhancement chain before decode
-* empty primary decode -> alternative-settings retry
+* preprocess flag -> enhancement chain before decode; derotate flag ->
+  rotation estimate and undo
 * every failure is **data, not an exception**: the page row survives
   with a bracketed error message, exactly like the reference's
-  ``return i, "[Error ...]"`` paths. The kernel never throws.
+  ``return i, "[Error ...]"`` paths. :func:`page_error` is the one
+  definition of those messages; the hOCR kernel uses it too.
 
 From Spark's perspective there is no per-row Python — batches arrive as
 Arrow RecordBatches and the kernel loops inside the batch, importing
@@ -20,6 +27,7 @@ pattern, /root/reference/app.py:270,298).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -49,34 +57,44 @@ OCR_OUTPUT_SCHEMA = StructType(
 SUPPORTED_ENGINES = ("glyph", "tesseract", "easyocr", "pyocr")
 
 
-def _decode_one(payload, media_ref: str, offset: int, config: ExtractionConfig):
-    """Decode one page. Returns (text, confidence, is_error)."""
+def page_error(offset: int, e: Exception) -> str:
+    """The error row's text for an exception raised while OCR-ing page
+    ``offset``. A missing payload, raised as
+    ``FileNotFoundError(media_ref)``, is the reference's "File not
+    found" row (app.py:332-334); anything else is its catch-all
+    (app.py:335-337), whose ``offset + 1`` mirrors the reference's
+    1-based page numbers."""
+    if isinstance(e, FileNotFoundError):
+        return f"[Error: File not found: {e}. Ensure the file exists and is accessible.]"
+    return f"[Error processing page {offset + 1}: {e}]"
+
+
+def ocr_image(img, offset: int, config: ExtractionConfig) -> tuple[str, float, bool]:
+    """OCR one page; returns (text, confidence, is_error) and never
+    raises. ``img`` is a decoded raster, or a zero-argument callable
+    returning one, so that a failed decode (:func:`ocr_pages`' PNG
+    payloads) is this page's error row like any other failure. An
+    unsupported engine is rejected before ``img`` is touched."""
     # Lazy imports: once per python worker, not per task from Spark's view
     from pdf_ocr_spark.operators.imaging import (
         derotate_image,
         enhance_image,
         ocr_decode,
     )
-    from pdf_ocr_spark.sources.pngcodec import decode_png
 
     if config.ocr_engine not in SUPPORTED_ENGINES:
         return f"[Error: Unsupported OCR engine: {config.ocr_engine}]", 0.0, True
-    if payload is None:
-        # reference: FileNotFoundError -> error-as-row (app.py:332-334)
-        return (
-            f"[Error: File not found: {media_ref}. Ensure the file exists and is accessible.]",
-            0.0,
-            True,
-        )
     try:
-        img = decode_png(bytes(payload))
+        if callable(img):
+            img = img()
         if config.preprocess:
             img = enhance_image(img)
         if config.derotate:
             img = derotate_image(img)
         if config.ocr_engine == "glyph":
             text, conf = ocr_decode(img)
-        elif config.ocr_engine == "tesseract":
+            return text, conf, False
+        if config.ocr_engine == "tesseract":
             from pdf_ocr_spark.operators.engines import tesseract_decode
 
             try:
@@ -88,28 +106,18 @@ def _decode_one(payload, media_ref: str, offset: int, config: ExtractionConfig):
             # full reference contract: config string (--oem 1 --psm 3,
             # --dpi 300 for pure English) + empty-result psm-6 retry
             text, is_err = tesseract_decode(img, config.language, backend)
-            if is_err:
-                return text, 0.0, True
-            conf = 1.0
         elif config.ocr_engine == "easyocr":
             from pdf_ocr_spark.operators.engines import easyocr_decode
 
+            # is_err includes "[Error with EasyOCR: <import error>]"
             text, is_err = easyocr_decode(img, config.language)
-            if is_err:  # incl. "[Error with EasyOCR: <import error>]"
-                return text, 0.0, True
-            conf = 1.0
         else:  # pyocr
             from pdf_ocr_spark.operators.engines import pyocr_decode
 
             text, is_err = pyocr_decode(img, config.language)
-            if is_err:
-                return text, 0.0, True
-            conf = 1.0
-        return text, conf, False
+        return text, 0.0 if is_err else 1.0, is_err
     except Exception as e:
-        # general per-page failure path (app.py:335-337); offset+1 mirrors
-        # the reference's 1-based page numbering in messages
-        return f"[Error processing page {offset + 1}: {e}]", 0.0, True
+        return page_error(offset, e), 0.0, True
 
 
 def ocr_pages(pages: DataFrame, config: ExtractionConfig | None = None) -> DataFrame:
@@ -123,22 +131,17 @@ def ocr_pages(pages: DataFrame, config: ExtractionConfig | None = None) -> DataF
     cfg = config or ExtractionConfig()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pdf_ocr_spark.sources.pngcodec import decode_png
+
+        def load(payload, media_ref):
+            if payload is None:  # left join found no media row
+                raise FileNotFoundError(media_ref)
+            return decode_png(bytes(payload))
+
         for pdf in batches:
             texts, confs, errs = [], [], []
-            # Optional upstream parse errors (e.g. the PDF source's typed
-            # "/DCTDecode unsupported" rows) take precedence over the
-            # generic missing-payload message, so the user-facing error
-            # row names the actual cause.
-            parse_errs = (
-                pdf["parse_error"] if "parse_error" in pdf.columns else [None] * len(pdf)
-            )
-            for payload, ref, off, pe in zip(
-                pdf["payload"], pdf["media_ref"], pdf["offset"], parse_errs
-            ):
-                if payload is None and pe is not None and not pd.isna(pe):
-                    t, c, e = f"[Error: {pe}]", 0.0, True
-                else:
-                    t, c, e = _decode_one(payload, ref, int(off), cfg)
+            for payload, ref, off in zip(pdf["payload"], pdf["media_ref"], pdf["offset"]):
+                t, c, e = ocr_image(partial(load, payload, ref), int(off), cfg)
                 texts.append(t)
                 confs.append(c)
                 errs.append(e)

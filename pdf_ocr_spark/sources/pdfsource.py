@@ -5,8 +5,8 @@ This is the engine's counterpart of the reference's upload path:
 OCR worker consumes (/root/reference/app.py:447-482). Here the PDFs are
 read distributed via ``spark.read.format("binaryFile")``, parsed by the
 from-scratch subset parser (:mod:`pdf_ocr_spark.sources.pdfcodec`), and
-each page is re-encoded as a PNG payload so the existing Arrow-batched
-OCR kernel (:mod:`pdf_ocr_spark.operators.ocr`) runs unchanged.
+each decoded page raster goes to the same per-page OCR function the
+span pipeline uses (:func:`pdf_ocr_spark.operators.ocr.ocr_image`).
 
 Scale shape: binaryFile gives one row per file (whole-file bytes — the
 right granularity for scanned PDFs, which are page-image containers a
@@ -23,8 +23,7 @@ returns, so a file that fails part-way leaves no partial rows. The key
 is the ``<id>`` of a ``doc_<id>.pdf`` file name, else the whole path.
 The boundary catches any ``Exception``: malformed inputs become error
 rows, never task failures (the reference's error-as-row discipline,
-app.py:335-337). The malformed-file shapes: one ``parse_error`` row
-with a null payload (:func:`read_pdf_pages`), ``n_pages = -1``
+app.py:335-337). The malformed-file shapes: ``n_pages = -1``
 (:func:`pdf_page_counts`), a row of NULLs (:func:`read_pdf_info`,
 :func:`read_pdf_profiles`), no rows (links, attachments, form fields,
 outline), one ``[Error: ...]`` page with ``n_errors = 1``
@@ -163,11 +162,6 @@ FORM_RESIDUES = 47
 #: actions, and a /Kids-subdivided /Names /Dests tree — so the
 #: driver-green row certifies both resolution paths.
 OUTLINE_RESIDUES = 53
-
-PDF_PAGES_SCHEMA = (
-    "doc_id string, offset int, media_ref string, payload binary, parse_error string"
-)
-
 
 def page_texts(text: str, words_per_page: int = WORDS_PER_PAGE) -> list[str]:
     """Deterministic page chunking: whitespace words, ``words_per_page``
@@ -695,35 +689,6 @@ def map_files(
     return files.select("path", "content").mapInPandas(kernel, schema=schema)
 
 
-def read_pdf_pages(
-    spark: SparkSession, pdf_dir: str, password: str = ""
-) -> DataFrame:
-    """``binaryFile`` scan -> one row per page: (doc_id, offset,
-    media_ref, payload=PNG bytes, parse_error). A file the subset
-    parser rejects yields a single row with ``parse_error`` set and a
-    null payload (which the OCR kernel already turns into an error
-    row). ``password`` (ExtractionConfig.pdf_password) opens
-    password-protected files — tried as user then owner."""
-    from pdf_ocr_spark.sources.pdfcodec import decode_pdf
-    from pdf_ocr_spark.sources.pngcodec import encode_png
-
-    pw = password.encode()
-
-    def per_file(key, path, data):
-        return [
-            (key, i, f"{path}#page={i}", encode_png(img), None)
-            for i, img in enumerate(decode_pdf(data, password=pw))
-        ]
-
-    return harvest(
-        spark,
-        os.path.join(pdf_dir, "*.pdf"),
-        per_file,
-        lambda key, path, e: [(key, 0, path, None, str(e))],
-        PDF_PAGES_SCHEMA,
-    )
-
-
 def pdf_page_counts(spark: SparkSession, pdf_dir: str) -> DataFrame:
     """Metadata-only page counting: reads /Count from the pages tree,
     no raster decode — the cheap scan (reference app.py:415-430)."""
@@ -932,57 +897,34 @@ def extract_pdf_documents(spark: SparkSession, pdf_dir: str, config=None) -> Dat
     mean_confidence, n_errors) — raw OCR text, pages joined with a
     blank line, byte-stable for the fixture corpus.
 
-    Parse and OCR are FUSED into one Arrow stage: the composable
-    two-stage form (``read_pdf_pages`` -> ``ocr_pages``) carries each
-    page between stages as PNG bytes, paying an encode+decode per page
-    purely for schema transport (measured ~1.8x the whole query);
-    here the parsed rasters feed the decoder directly. Parse failures
-    match the two-stage path: one ``[Error: ...]`` row per file. An
-    exception while OCR-ing one page does not: the two-stage path makes
-    it that page's error row, while here the whole file becomes the
-    one-row error shape."""
+    Parse and OCR are FUSED into one Arrow stage for every engine: each
+    raster the codec decodes goes straight to
+    :func:`pdf_ocr_spark.operators.ocr.ocr_image`. Carrying pages from a
+    parse stage to an OCR stage as PNG bytes was measured at ~1.8x the
+    whole query. A file the codec rejects is one ``[Error: ...]`` row;
+    a page whose OCR fails is that page's error row, as in the
+    reference (app.py:335-337)."""
     from pdf_ocr_spark.config import ExtractionConfig
+    from pdf_ocr_spark.operators.ocr import ocr_image
     from pdf_ocr_spark.operators.spans import ordered, page_metrics
+    from pdf_ocr_spark.sources.pdfcodec import decode_pdf
 
     cfg = config or ExtractionConfig()
-    if cfg.ocr_engine != "glyph":
-        # external engines go through the composable two-stage path,
-        # which carries the full engine dispatch / error-row semantics
-        from pdf_ocr_spark.operators.ocr import ocr_pages
+    pw = cfg.pdf_password.encode()
 
-        pages = read_pdf_pages(spark, pdf_dir, password=cfg.pdf_password)
-        decoded = ocr_pages(
-            pages.select("doc_id", "offset", "media_ref", "payload", "parse_error"),
-            cfg,
-        )
-    else:
-        from pdf_ocr_spark.operators.imaging import (
-            derotate_image,
-            enhance_image,
-            ocr_decode,
-        )
-        from pdf_ocr_spark.sources.pdfcodec import decode_pdf
+    def per_file(key, path, data):
+        return [
+            (key, i, *ocr_image(img, i, cfg))
+            for i, img in enumerate(decode_pdf(data, password=pw))
+        ]
 
-        pw = cfg.pdf_password.encode()
-
-        def per_file(key, path, data):
-            rows = []
-            for i, img in enumerate(decode_pdf(data, password=pw)):
-                if cfg.preprocess:
-                    img = enhance_image(img)
-                if cfg.derotate:
-                    img = derotate_image(img)
-                text, conf = ocr_decode(img)
-                rows.append((key, i, text, conf, False))
-            return rows
-
-        decoded = harvest(
-            spark,
-            os.path.join(pdf_dir, "*.pdf"),
-            per_file,
-            lambda key, path, e: [(key, 0, f"[Error: {e}]", 0.0, True)],
-            "doc_id string, offset int, text string, confidence double, error boolean",
-        )
+    decoded = harvest(
+        spark,
+        os.path.join(pdf_dir, "*.pdf"),
+        per_file,
+        lambda key, path, e: [(key, 0, f"[Error: {e}]", 0.0, True)],
+        "doc_id string, offset int, text string, confidence double, error boolean",
+    )
     return ordered(decoded, ("text", "confidence", "error")).select(
         "doc_id",
         F.array_join(F.transform("_ordered", lambda s: s["text"]), "\n\n").alias("txt"),

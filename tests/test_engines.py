@@ -130,3 +130,41 @@ def test_spark_kernel_routes_engine_errors_as_rows(spark):
     ):
         row = ocr_pages(pages, ExtractionConfig(ocr_engine=engine)).collect()[0]
         assert row["error"] is True and row["text"].startswith(prefix), (engine, row)
+
+
+def test_ocr_image_turns_a_raising_kernel_into_the_page_error_row():
+    """The per-page catch-all (reference app.py:335-337): whatever the
+    kernel raises on becomes this page's bracketed row, 1-based."""
+    from pdf_ocr_spark.config import ExtractionConfig
+    from pdf_ocr_spark.operators.ocr import ocr_image
+
+    text, conf, err = ocr_image("not a raster", 4, ExtractionConfig())
+    assert text.startswith("[Error processing page 5: ") and text.endswith("]")
+    assert (conf, err) == (0.0, True)
+
+
+def test_pdf_extraction_routes_every_engine_through_one_path(spark, tmp_path):
+    """extract_pdf_documents under every non-glyph engine: each page of
+    a good file is that engine's error row, and a truncated file is one
+    ``[Error: ...]`` row, as under glyph."""
+    from pdf_ocr_spark.config import ExtractionConfig
+    from pdf_ocr_spark.sources.glyphs import render_text_image
+    from pdf_ocr_spark.sources.pdfcodec import encode_pdf
+    from pdf_ocr_spark.sources.pdfsource import extract_pdf_documents
+
+    pages = [render_text_image("first page"), render_text_image("second page")]
+    (tmp_path / "doc_two.pdf").write_bytes(encode_pdf(pages, compress=True))
+    (tmp_path / "doc_cut.pdf").write_bytes(b"%PDF-1.4 but truncated garbage")
+    for engine, prefix in (
+        ("tesseract", "[Error with Tesseract OCR: "),
+        ("easyocr", "[Error with EasyOCR: "),
+        ("pyocr", "[Error with PyOCR: "),
+        ("notreal", "[Error: Unsupported OCR engine: notreal]"),
+    ):
+        cfg = ExtractionConfig(ocr_engine=engine)
+        out = {r.doc_id: r for r in extract_pdf_documents(spark, str(tmp_path), cfg).collect()}
+        two, cut = out["two"], out["cut"]
+        assert (two.n_pages, two.n_errors) == (2, 2), (engine, two)
+        assert all(p.startswith(prefix) for p in two.txt.split("\n\n")), (engine, two.txt)
+        assert (cut.n_pages, cut.n_errors) == (1, 1), (engine, cut)
+        assert cut.txt.startswith("[Error: ") and "\n\n" not in cut.txt, (engine, cut.txt)

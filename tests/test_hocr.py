@@ -37,6 +37,7 @@ def test_hocr_pages_kernel(spark):
         [
             Row(doc_id="d1", offset=0, media_ref="m://ok", payload=bytes(encode_png(img))),
             Row(doc_id="d1", offset=1, media_ref="m://bad", payload=b"nope"),
+            Row(doc_id="d1", offset=2, media_ref="m://gone", payload=None),
         ],
         "doc_id string, offset int, media_ref string, payload binary",
     )
@@ -48,6 +49,12 @@ def test_hocr_pages_kernel(spark):
     assert words == ["HOCR", "TEST"]
     assert "x_wconf 100" in ok["hocr"]
     assert out[1]["error"] and out[1]["hocr"] is None  # error-as-row
+    assert out[1]["text"] == "[Error processing page 2: not a PNG (bad signature)]"
+    # a missing payload is the same row ocr_pages makes of it
+    assert out[2]["error"] and out[2]["hocr"] is None
+    assert out[2]["text"] == (
+        "[Error: File not found: m://gone. Ensure the file exists and is accessible.]"
+    )
 
 
 def test_hocr_doc_assembly(spark):

@@ -17,7 +17,6 @@ from pdf_ocr_spark.sources.pdfsource import (
     extract_pdf_documents,
     page_texts,
     pdf_page_counts,
-    read_pdf_pages,
     write_pdf_corpus,
 )
 
@@ -738,38 +737,32 @@ def test_inline_image_extracts_through_ocr(spark, tmp_path):
     """End to end: an inline-image scan flows binaryFile -> parse ->
     OCR exactly like the XObject shape (the corpus rotation plants
     these as 1-in-23 docs; see pdfsource.INLINE_RESIDUES)."""
-    from pdf_ocr_spark.operators.ocr import ocr_pages
-
     text = "inline image page words"
     img = render_text_image(text)
     with open(f"{tmp_path}/doc_i.pdf", "wb") as f:
         f.write(encode_pdf([img], inline="rle", object_streams=True))
-    pages = read_pdf_pages(spark, str(tmp_path))
-    rows = ocr_pages(pages.select("doc_id", "offset", "media_ref", "payload")).collect()
-    assert len(rows) == 1
-    assert rows[0].text == text.upper() and rows[0].error is False
+    rows = extract_pdf_documents(spark, str(tmp_path)).collect()
+    assert len(rows) == 1 and rows[0].n_pages == 1
+    assert rows[0].txt == text.upper() and rows[0].n_errors == 0
 
 
 def test_rgb_pdf_extracts_through_ocr(spark, tmp_path):
     """Color scanned pages (DeviceRGB, Flate) flow through binaryFile ->
     parse -> luma -> OCR and produce the same text as the gray path."""
-    from pdf_ocr_spark.operators.ocr import ocr_pages
-
     text = "color page words here"
     gray_img = render_text_image(text)
     rgb_img = np.repeat(gray_img[:, :, None], 3, axis=2)
     root = str(tmp_path)
     with open(f"{root}/doc_c.pdf", "wb") as f:
         f.write(encode_pdf([rgb_img], compress=True))
-    pages = read_pdf_pages(spark, root)
-    rows = ocr_pages(pages.select("doc_id", "offset", "media_ref", "payload")).collect()
-    assert len(rows) == 1
-    assert rows[0].text == text.upper() and rows[0].error is False
+    rows = extract_pdf_documents(spark, root).collect()
+    assert len(rows) == 1 and rows[0].n_pages == 1
+    assert rows[0].txt == text.upper() and rows[0].n_errors == 0
 
 
 def test_unsupported_filter_pdf_becomes_typed_error_row(spark, tmp_path):
     """A scan with a filter outside the subset (/CryptDecode) must
-    emit one parse_error row NAMING the filter, not crash; mislabeled
+    emit one error row NAMING the filter, not crash; mislabeled
     streams routed to a real codec (DCT since round 3, JPX since
     round 5) become typed error rows via that codec's own errors."""
     data = encode_pdf([np.zeros((8, 8), dtype=np.uint8)], compress=True)
@@ -779,11 +772,12 @@ def test_unsupported_filter_pdf_becomes_typed_error_row(spark, tmp_path):
         f.write(data.replace(b"/FlateDecode", b"/JPXDecode\x20\x20"))
     with open(f"{tmp_path}/doc_k.pdf", "wb") as f:
         f.write(data.replace(b"/FlateDecode", b"/DCTDecode\x20\x20"))
-    rows = {r.doc_id: r for r in read_pdf_pages(spark, str(tmp_path)).collect()}
+    rows = {r.doc_id: r for r in extract_pdf_documents(spark, str(tmp_path)).collect()}
     assert len(rows) == 3
-    assert rows["c"].payload is None and "/CryptDecode" in rows["c"].parse_error
-    assert rows["j"].payload is None and "JPEG 2000" in rows["j"].parse_error
-    assert rows["k"].payload is None and "not a JPEG" in rows["k"].parse_error
+    assert all((r.n_pages, r.n_errors) == (1, 1) for r in rows.values())
+    assert rows["c"].txt.startswith("[Error: ") and "/CryptDecode" in rows["c"].txt
+    assert rows["j"].txt.startswith("[Error: ") and "JPEG 2000" in rows["j"].txt
+    assert rows["k"].txt.startswith("[Error: ") and "not a JPEG" in rows["k"].txt
 
 
 def test_page_texts_chunking():
@@ -817,22 +811,17 @@ def test_extract_spans_equal_rendered_text(spark, pdf_dir):
     """Span-sequence equality for the PDF path: OCR'd page text must
     equal the rendered chunk, uppercased, in page order."""
     root, _ = pdf_dir
-    pages = read_pdf_pages(spark, root)
-    from pdf_ocr_spark.operators.ocr import ocr_pages
-
-    decoded = ocr_pages(pages.select("doc_id", "offset", "media_ref", "payload"))
-    got = {
-        (r.doc_id, r.offset): (r.text, r.error) for r in decoded.collect()
-    }
+    got = {r.doc_id: r for r in extract_pdf_documents(spark, root).collect()}
     texts = {
         "0": "the quick brown fox jumps over the lazy dog " * 6,
         "1": "hello world",
         "2": "lorem ipsum dolor sit amet " * 9,
     }
+    assert set(got) == set(texts)
     for doc_id, text in texts.items():
-        for i, chunk in enumerate(page_texts(text)):
-            assert got[(doc_id, i)] == (chunk.upper(), False)
-    assert len(got) == sum(len(page_texts(t)) for t in texts.values())
+        want = [chunk.upper() for chunk in page_texts(text)]
+        assert got[doc_id].txt.split("\n\n") == want
+        assert (got[doc_id].n_pages, got[doc_id].n_errors) == (len(want), 0)
 
 
 def test_corrupt_pdf_is_error_row_not_crash(spark, pdf_dir, tmp_path):
@@ -843,12 +832,9 @@ def test_corrupt_pdf_is_error_row_not_crash(spark, pdf_dir, tmp_path):
     shutil.copytree(root, alt)
     with open(f"{alt}/doc_bad.pdf", "wb") as f:
         f.write(b"%PDF-1.4 but truncated garbage")
-    rows = read_pdf_pages(spark, alt).where("doc_id = 'bad'").collect()
-    assert len(rows) == 1
-    assert rows[0].parse_error is not None and rows[0].payload is None
     out = {r.doc_id: r for r in extract_pdf_documents(spark, alt).collect()}
-    assert out["bad"].n_errors == 1
-    assert out["bad"].txt.startswith("[Error")
+    assert (out["bad"].n_pages, out["bad"].n_errors) == (1, 1)
+    assert out["bad"].txt.startswith("[Error: ") and "\n\n" not in out["bad"].txt
     assert out["1"].txt == "HELLO WORLD"
 
 

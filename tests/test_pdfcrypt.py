@@ -100,7 +100,7 @@ def test_aes_is_typed_error():
 def test_spark_source_reads_encrypted_pdfs(spark, tmp_path):
     """The binaryFile -> parse -> OCR chain handles encrypted files
     transparently; a password-protected one becomes an error row."""
-    from pdf_ocr_spark.sources.pdfsource import read_pdf_pages
+    from pdf_ocr_spark.sources.pdfsource import extract_pdf_documents
 
     good = encode_pdf([render_text_image("SPARK ENCRYPTED DOC")], encrypt=True)
     locked = bytearray(good)
@@ -108,11 +108,10 @@ def test_spark_source_reads_encrypted_pdfs(spark, tmp_path):
     locked[at : at + 8] = b"00000000"
     (tmp_path / "doc_enc.pdf").write_bytes(good)
     (tmp_path / "doc_locked.pdf").write_bytes(bytes(locked))
-    rows = read_pdf_pages(spark, str(tmp_path)).collect()
-    by_doc = {r["doc_id"]: r for r in rows}
-    assert by_doc["enc"]["parse_error"] is None
-    assert by_doc["enc"]["payload"] is not None
-    assert "password" in by_doc["locked"]["parse_error"]
+    by_doc = {r.doc_id: r for r in extract_pdf_documents(spark, str(tmp_path)).collect()}
+    assert (by_doc["enc"].txt, by_doc["enc"].n_errors) == ("SPARK ENCRYPTED DOC", 0)
+    assert (by_doc["locked"].n_pages, by_doc["locked"].n_errors) == (1, 1)
+    assert "password" in by_doc["locked"].txt
 
 
 def test_fixture_corpus_contains_variant_files(spark, tmp_path):
@@ -326,7 +325,7 @@ def test_spark_reads_password_protected_corpus(spark, tmp_path):
 
     from pdf_ocr_spark.config import ExtractionConfig
     from pdf_ocr_spark.sources import pdfcodec
-    from pdf_ocr_spark.sources.pdfsource import read_pdf_pages
+    from pdf_ocr_spark.sources.pdfsource import extract_pdf_documents
 
     img = np.full((12, 15), 9, dtype=np.uint8)
     p = tmp_path / "doc_locked.pdf"
@@ -336,11 +335,12 @@ def test_spark_reads_password_protected_corpus(spark, tmp_path):
             user_password="pw",
         )
     )
-    no_pw = read_pdf_pages(spark, str(tmp_path)).collect()
-    assert len(no_pw) == 1 and "password required" in no_pw[0]["parse_error"]
-    with_pw = read_pdf_pages(spark, str(tmp_path), password="pw").collect()
-    assert len(with_pw) == 2 and all(r["parse_error"] is None for r in with_pw)
-    assert ExtractionConfig(pdf_password="pw").pdf_password == "pw"
+    (no_pw,) = extract_pdf_documents(spark, str(tmp_path)).collect()
+    assert (no_pw.n_pages, no_pw.n_errors) == (1, 1)
+    assert "password required" in no_pw.txt
+    cfg = ExtractionConfig(pdf_password="pw")
+    (with_pw,) = extract_pdf_documents(spark, str(tmp_path), cfg).collect()
+    assert (with_pw.n_pages, with_pw.n_errors) == (2, 0)
 
 
 def test_evp_path_matches_reference_core():
