@@ -270,9 +270,8 @@ def main() -> None:
     ep._text_pdf_fixture_dir(spark, sf_dir)
     ep._mixed_pdf_fixture_dir(spark, sf_dir)
     ep._warc_fixture_dir(spark, sf_dir)
-    ep._media_manifest(spark)
-    ep._layout_manifest(spark)
-    ep._hocr_manifest(spark)
+    for manifest_dir in (ep._MEDIA_MANIFEST_DIR, ep._LAYOUT_MANIFEST_DIR, ep._HOCR_MANIFEST_DIR):
+        ep._expectation_manifest(spark, manifest_dir)
 
     timings: dict[str, float] = {}
     total0 = time.time()

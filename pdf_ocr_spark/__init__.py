@@ -14,10 +14,11 @@ Design principles (see SURVEY.md):
   performs row-at-a-time in Python is expressed as built-in Spark SQL
   column expressions (JVM-side, whole-stage-codegen), so the normalize /
   serialize path is shuffle-free and UDF-free.
-* The only Python that touches data is the Arrow-batched ``mapInPandas``
-  image kernel (rasterize/enhance/decode), mirroring the reference's
-  per-page OCR worker (``/root/reference/app.py:226-345``) with
-  error-as-row semantics.
+* Python touches data only behind one row boundary,
+  :func:`pdf_ocr_spark.operators.rows.map_rows` (one Arrow stage per
+  kernel): the per-page OCR (rasterize/enhance/decode), mirroring the
+  reference's per-page OCR worker (its ``app.py:226-345``),
+  and the other byte decoders, all with error-as-row semantics.
 * Per-row invariant vs the reference: span-sequence equality on
   ``(kind, text, media_ref, order)``.
 """

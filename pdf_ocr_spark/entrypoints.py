@@ -2274,11 +2274,18 @@ def q_bpe_apply_tokens(spark: SparkSession, sf: str) -> DataFrame:
 # --- multimodal (rows-only: no SQL oracle can parse PNG) --------------------
 
 
-def _fixed_media(spark: SparkSession):
-    from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
+def _fixed_docs(spark: SparkSession) -> DataFrame:
+    """The fixed 50-document corpus (seed 13) that the media, layout and
+    hOCR queries and their expectation manifests are built from."""
+    from pdf_ocr_spark.sources.corpus import generate_documents
 
-    docs = generate_documents(spark, n_docs=50, seed=13)
-    return generate_media(spark, docs, seed=13, corrupt_rate=0.05)
+    return generate_documents(spark, n_docs=50, seed=13)
+
+
+def _fixed_media(spark: SparkSession):
+    from pdf_ocr_spark.sources.corpus import generate_media
+
+    return generate_media(spark, _fixed_docs(spark), seed=13, corrupt_rate=0.05)
 
 
 #: Expected-output manifests for the fixed media corpus: rows computed
@@ -2302,10 +2309,7 @@ def _fixture_fingerprint(spark: SparkSession, out_dir: str) -> str:
     hardcoded version suffix alone."""
     import os
 
-    from pdf_ocr_spark.sources.corpus import generate_documents
-
-    docs = generate_documents(spark, n_docs=50, seed=13)
-    agg = docs.agg(
+    agg = _fixed_docs(spark).agg(
         F.count("*").alias("n"),
         F.sum(
             F.crc32(F.concat_ws("\x00", F.col("doc_id"), F.to_json(F.col("spans"))))
@@ -2379,36 +2383,24 @@ def cached_fixture(
     return out_dir
 
 
-def _media_manifest(spark: SparkSession) -> None:
-    from pdf_ocr_spark.sources.corpus import (
-        generate_documents,
-        media_expectation_manifest,
-    )
+def _expectation_manifest(spark: SparkSession, out_dir: str) -> None:
+    """Build-once the expectation manifest cached in ``out_dir`` (one of
+    the ``_*_MANIFEST_DIR`` above) from the fixed corpus, keyed by
+    :func:`_fixture_fingerprint`."""
+    from pdf_ocr_spark.sources import corpus
+
+    manifest = {
+        _MEDIA_MANIFEST_DIR: lambda docs: corpus.media_expectation_manifest(
+            docs, seed=13, corrupt_rate=0.05
+        ),
+        _LAYOUT_MANIFEST_DIR: lambda docs: corpus.layout_expectation_manifest(docs, seed=13),
+        _HOCR_MANIFEST_DIR: lambda docs: corpus.hocr_expectation_manifest(docs, seed=13),
+    }[out_dir]
 
     def build(out: str) -> None:
-        docs = generate_documents(spark, n_docs=50, seed=13)
-        media_expectation_manifest(docs, seed=13, corrupt_rate=0.05).write.mode(
-            "overwrite"
-        ).parquet(out)
+        manifest(_fixed_docs(spark)).write.mode("overwrite").parquet(out)
 
-    cached_fixture(
-        _MEDIA_MANIFEST_DIR, lambda: _fixture_fingerprint(spark, _MEDIA_MANIFEST_DIR), build
-    )
-
-
-def _hocr_manifest(spark: SparkSession) -> None:
-    from pdf_ocr_spark.sources.corpus import (
-        generate_documents,
-        hocr_expectation_manifest,
-    )
-
-    def build(out: str) -> None:
-        docs = generate_documents(spark, n_docs=50, seed=13)
-        hocr_expectation_manifest(docs, seed=13).write.mode("overwrite").parquet(out)
-
-    cached_fixture(
-        _HOCR_MANIFEST_DIR, lambda: _fixture_fingerprint(spark, _HOCR_MANIFEST_DIR), build
-    )
+    cached_fixture(out_dir, lambda: _fixture_fingerprint(spark, out_dir), build)
 
 
 @_register(
@@ -2426,10 +2418,10 @@ def q_hocr_pages(spark: SparkSession, sf: str) -> DataFrame:
     (tests/test_hocr.py); no analytic markup exists for them."""
     from pdf_ocr_spark.operators.hocr import ocr_pages_hocr
     from pdf_ocr_spark.operators.spans import explode_spans
-    from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
+    from pdf_ocr_spark.sources.corpus import generate_media
 
-    _hocr_manifest(spark)
-    docs = generate_documents(spark, n_docs=50, seed=13)
+    _expectation_manifest(spark, _HOCR_MANIFEST_DIR)
+    docs = _fixed_docs(spark)
     media = generate_media(spark, docs, seed=13)  # clean: no corrupt/missing/shear
     pages = (
         explode_spans(docs)
@@ -2454,7 +2446,7 @@ def q_media_metadata(spark: SparkSession, sf: str) -> DataFrame:
     manifest — header parse must agree with what the renderer wrote."""
     from pdf_ocr_spark.operators.multimodal import media_metadata
 
-    _media_manifest(spark)
+    _expectation_manifest(spark, _MEDIA_MANIFEST_DIR)
     return media_metadata(_fixed_media(spark))
 
 
@@ -2470,25 +2462,10 @@ def q_image_features(spark: SparkSession, sf: str) -> DataFrame:
     stats through the full PNG round-trip."""
     from pdf_ocr_spark.operators.multimodal import image_features
 
-    _media_manifest(spark)
+    _expectation_manifest(spark, _MEDIA_MANIFEST_DIR)
     return image_features(_fixed_media(spark)).select(
         "media_ref", "width", "height", F.round("mean_intensity", 4).alias("mean_intensity"),
         F.round("ink_ratio", 4).alias("ink_ratio"),
-    )
-
-
-def _layout_manifest(spark: SparkSession) -> None:
-    from pdf_ocr_spark.sources.corpus import (
-        generate_documents,
-        layout_expectation_manifest,
-    )
-
-    def build(out: str) -> None:
-        docs = generate_documents(spark, n_docs=50, seed=13)
-        layout_expectation_manifest(docs, seed=13).write.mode("overwrite").parquet(out)
-
-    cached_fixture(
-        _LAYOUT_MANIFEST_DIR, lambda: _fixture_fingerprint(spark, _LAYOUT_MANIFEST_DIR), build
     )
 
 
@@ -2504,10 +2481,10 @@ def q_word_boxes(spark: SparkSession, sf: str) -> DataFrame:
     constants + glyph ink masks, no segmentation anywhere in the oracle
     path). Upgrades the hOCR family from rows-only to exact."""
     from pdf_ocr_spark.operators.hocr import word_boxes_table
-    from pdf_ocr_spark.sources.corpus import generate_documents, generate_media
+    from pdf_ocr_spark.sources.corpus import generate_media
 
-    _layout_manifest(spark)
-    docs = generate_documents(spark, n_docs=50, seed=13)
+    _expectation_manifest(spark, _LAYOUT_MANIFEST_DIR)
+    docs = _fixed_docs(spark)
     media = generate_media(spark, docs, seed=13)  # clean: no corrupt/missing/shear
     return word_boxes_table(media)
 

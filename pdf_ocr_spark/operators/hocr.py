@@ -14,10 +14,8 @@ byte-equal to ``json.dumps(..., separators=(',', ':'))`` in tests.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 from xml.sax.saxutils import escape
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,7 +29,8 @@ from pyspark.sql.types import (
 )
 
 from pdf_ocr_spark.config import ExtractionConfig
-from pdf_ocr_spark.operators.ocr import page_error
+from pdf_ocr_spark.operators.ocr import load_page, ocr_image, page_error, png_page
+from pdf_ocr_spark.operators.rows import map_rows
 
 HOCR_PAGE_SCHEMA = StructType(
     [
@@ -74,48 +73,32 @@ def hocr_page(lines: list[dict], page_no: int, width: int, height: int, media_re
 
 def ocr_pages_hocr(pages: DataFrame, config: ExtractionConfig | None = None) -> DataFrame:
     """Layout OCR kernel: (doc_id, offset, media_ref, payload) ->
-    per-page text + hOCR. Error-as-row semantics identical to
-    :func:`pdf_ocr_spark.operators.ocr.ocr_pages`."""
+    per-page text + hOCR, from the page :func:`load_page` prepares.
+    Error-as-row semantics identical to
+    :func:`pdf_ocr_spark.operators.ocr.ocr_pages`. Only the glyph engine
+    reports layout: any other ``ocr_engine`` gives ``ocr_pages``' row
+    for the page, with ``hocr = NULL``."""
     cfg = config or ExtractionConfig()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.operators.imaging import enhance_image, ocr_decode_layout, to_grayscale
-        from pdf_ocr_spark.sources.pngcodec import decode_png
+    def per_row(doc_id, offset, media_ref, payload):
+        from pdf_ocr_spark.operators.imaging import ocr_decode_layout, to_grayscale
 
-        for pdf in batches:
-            texts, hocrs, confs, errs = [], [], [], []
-            for payload, ref, off in zip(pdf["payload"], pdf["media_ref"], pdf["offset"]):
-                try:
-                    if payload is None:
-                        raise FileNotFoundError(ref)
-                    img = decode_png(bytes(payload))
-                    if cfg.preprocess:
-                        img = enhance_image(img)
-                    gray = to_grayscale(img)
-                    lines, conf = ocr_decode_layout(gray)
-                    h, w = gray.shape
-                    texts.append("\n".join(l["text"] for l in lines))
-                    hocrs.append(hocr_page(lines, int(off), w, h, str(ref)))
-                    confs.append(conf)
-                    errs.append(False)
-                except Exception as e:
-                    texts.append(page_error(int(off), e))
-                    hocrs.append(None)
-                    confs.append(0.0)
-                    errs.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"],
-                    "media_ref": pdf["media_ref"],
-                    "text": texts,
-                    "hocr": hocrs,
-                    "confidence": confs,
-                    "error": errs,
-                }
-            )
+        img = partial(png_page, payload, media_ref)
+        if cfg.ocr_engine != "glyph":
+            text, conf, err = ocr_image(img, offset, cfg)
+            return [(doc_id, offset, media_ref, text, None, conf, err)]
+        gray = to_grayscale(load_page(img, cfg))
+        lines, conf = ocr_decode_layout(gray)
+        h, w = gray.shape
+        text = "\n".join(l["text"] for l in lines)
+        hocr = hocr_page(lines, offset, w, h, str(media_ref))
+        return [(doc_id, offset, media_ref, text, hocr, conf, False)]
 
-    return pages.mapInPandas(kernel, schema=HOCR_PAGE_SCHEMA)
+    def on_error(doc_id, offset, media_ref, payload, e):
+        return [(doc_id, offset, media_ref, page_error(offset, e), None, 0.0, True)]
+
+    cols = pages.select("doc_id", "offset", "media_ref", "payload")
+    return map_rows(cols, per_row, HOCR_PAGE_SCHEMA, on_error)
 
 
 _HOCR_HEAD = (
@@ -160,30 +143,16 @@ def word_boxes_table(media: DataFrame) -> DataFrame:
     so segmentation + grid-origin estimation are value-checked end to
     end, not just eyeballed."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(media_ref, payload):
         from pdf_ocr_spark.operators.imaging import ocr_decode_layout, to_grayscale
-        from pdf_ocr_spark.sources.pngcodec import decode_png
 
-        for pdf in batches:
-            rows = {k: [] for k in ("media_ref", "line_idx", "word_idx", "word", "x0", "y0", "x1", "y1")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                if payload is None:
-                    continue
-                try:
-                    lines, _ = ocr_decode_layout(to_grayscale(decode_png(bytes(payload))))
-                except Exception:
-                    continue  # malformed media: no geometry rows
-                for li, line in enumerate(lines):
-                    for wi, w in enumerate(line["words"]):
-                        x0, y0, x1, y1 = w["bbox"]
-                        rows["media_ref"].append(ref)
-                        rows["line_idx"].append(li)
-                        rows["word_idx"].append(wi)
-                        rows["word"].append(w["text"])
-                        rows["x0"].append(int(x0))
-                        rows["y0"].append(int(y0))
-                        rows["x1"].append(int(x1))
-                        rows["y1"].append(int(y1))
-            yield pd.DataFrame(rows)
+        lines, _ = ocr_decode_layout(to_grayscale(png_page(payload, media_ref)))
+        return [
+            (media_ref, li, wi, w["text"], *map(int, w["bbox"]))
+            for li, line in enumerate(lines)
+            for wi, w in enumerate(line["words"])
+        ]
 
-    return media.mapInPandas(kernel, schema=WORD_BOXES_SCHEMA)
+    # a missing or malformed payload has no geometry rows
+    cols = media.select("media_ref", "payload")
+    return map_rows(cols, per_row, WORD_BOXES_SCHEMA, lambda *_: [])

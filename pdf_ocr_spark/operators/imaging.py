@@ -1,7 +1,8 @@
 """Numpy image kernels: enhancement + from-scratch glyph OCR decoding.
 
-These run only inside Arrow-batched ``mapInPandas`` workers (never
-per-row from Spark's perspective). The OCR decoder is a real, tiny
+These run only inside the Arrow stages of
+:func:`pdf_ocr_spark.operators.rows.map_rows` (never per-row from
+Spark's perspective). The OCR decoder is a real, tiny
 pipeline — grayscale, binarize, text-line segmentation by projection,
 fixed-pitch cell segmentation, template matching with grid-origin
 search — standing in for Tesseract (absent in this container) exactly

@@ -1,21 +1,21 @@
 """Multimodal media operators: typed metadata + decode/feature plumbing.
 
 Media payloads are opaque ``binary`` columns with typed metadata
-extracted by Arrow-batched kernels. Every default decode path is real
-and from-scratch: PNG (pngcodec), WAV/RIFF-PCM audio (wavcodec), and
-MJPEG/AVI video (avicodec + jpegcodec). Other codecs (mp3, h264, ...)
-have no backend in this container and surface as typed error rows;
-alternative decoders are injectable via ``decode_fn`` (contract
-documented per operator), so swapping in ffmpeg/torchaudio is a
-one-function change inside the kernel.
+extracted per payload: each operator is one ``per_row`` function and
+its error row over the package's row boundary
+(:func:`pdf_ocr_spark.operators.rows.map_rows`). Every default decode
+path is real and from-scratch: PNG (pngcodec), WAV/RIFF-PCM audio
+(wavcodec), and MJPEG/AVI video (avicodec + jpegcodec). Other codecs
+(mp3, h264, ...) have no backend in this container and surface as
+typed error rows; alternative decoders are injectable via
+``decode_fn`` (contract documented per operator), so swapping in
+ffmpeg/torchaudio is a one-function change inside the kernel.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
-
-import pandas as pd
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_ocr_spark.operators.rows import map_rows
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -54,35 +56,15 @@ def media_metadata(media: DataFrame) -> DataFrame:
     """Typed metadata for every media payload; malformed payloads are
     error-as-row (valid != 'ok'), never exceptions."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, ns, oks = [], [], [], [], []
-            for payload in pdf["payload"]:
-                b = bytes(payload) if payload is not None else b""
-                ns.append(len(b))
-                try:
-                    w, h = png_dimensions(b)
-                    fmts.append("png")
-                    ws.append(w)
-                    hs.append(h)
-                    oks.append("ok")
-                except Exception as e:
-                    fmts.append("unknown")
-                    ws.append(None)
-                    hs.append(None)
-                    oks.append(f"error: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_bytes": ns,
-                    "valid": oks,
-                }
-            )
+    def per_row(media_ref, payload):
+        w, h = png_dimensions(payload or b"")
+        return [(media_ref, "png", w, h, len(payload), "ok")]
 
-    return media.mapInPandas(kernel, schema=MEDIA_META_SCHEMA)
+    def on_error(media_ref, payload, e):
+        return [(media_ref, "unknown", None, None, len(payload or b""), f"error: {e}")]
+
+    cols = media.select("media_ref", "payload")
+    return map_rows(cols, per_row, MEDIA_META_SCHEMA, on_error)
 
 
 IMAGE_FEATURES_SCHEMA = StructType(
@@ -101,40 +83,33 @@ def image_features(media: DataFrame, grid: int = 4) -> DataFrame:
     """Decode -> downsample to a grid -> cheap visual embedding
     (per-cell mean intensity). Real end-to-end for PNG payloads."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(media_ref, payload):
         import numpy as np
 
         from pdf_ocr_spark.operators.imaging import to_grayscale
         from pdf_ocr_spark.sources.pngcodec import decode_png
 
-        for pdf in batches:
-            rows = {k: [] for k in ("width", "height", "mean_intensity", "ink_ratio", "embedding")}
-            for payload in pdf["payload"]:
-                try:
-                    img = to_grayscale(decode_png(bytes(payload)))
-                    h, w = img.shape
-                    cells = []
-                    for gy in range(grid):
-                        for gx in range(grid):
-                            block = img[
-                                gy * h // grid : (gy + 1) * h // grid or 1,
-                                gx * w // grid : (gx + 1) * w // grid or 1,
-                            ]
-                            cells.append(float(block.mean()) / 255.0 if block.size else 0.0)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_intensity"].append(float(img.mean()))
-                    rows["ink_ratio"].append(float((img < 128).mean()))
-                    rows["embedding"].append(np.array(cells, dtype="float32"))
-                except Exception:
-                    for k in rows:
-                        rows[k].append(None)
-            out = pd.DataFrame({"media_ref": pdf["media_ref"]})
-            for k, v in rows.items():
-                out[k] = pd.Series(v, dtype="object" if k == "embedding" else None)
-            yield out
+        img = to_grayscale(decode_png(payload))
+        h, w = img.shape
+        cells = []
+        for gy in range(grid):
+            for gx in range(grid):
+                block = img[
+                    gy * h // grid : (gy + 1) * h // grid or 1,
+                    gx * w // grid : (gx + 1) * w // grid or 1,
+                ]
+                cells.append(float(block.mean()) / 255.0 if block.size else 0.0)
+        return [
+            (
+                media_ref, w, h, float(img.mean()), float((img < 128).mean()),
+                np.array(cells, dtype="float32"),
+            )
+        ]
 
-    return media.mapInPandas(kernel, schema=IMAGE_FEATURES_SCHEMA)
+    cols = media.select("media_ref", "payload")
+    return map_rows(
+        cols, per_row, IMAGE_FEATURES_SCHEMA, lambda media_ref, payload, e: [(media_ref,) + (None,) * 5]
+    )
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -190,50 +165,31 @@ def audio_features(
     ~2^21 samples, so the values are engine-portable bit-for-bit.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(media_ref, payload):
         import numpy as np
 
         from pdf_ocr_spark.sources.wavcodec import decode_wav
 
-        decode = decode_fn or decode_wav
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "valid", "sample_rate", "n_samples", "duration_s",
-                    "peak", "rms", "sum_amp", "zero_crossings",
-                )
-            }
-            for payload in pdf["payload"]:
-                try:
-                    samples, rate = decode(bytes(payload) if payload is not None else b"")
-                    s = np.asarray(samples, dtype=np.float64)
-                    if s.ndim > 1:  # downmix for features; fixtures are mono
-                        s = s.mean(axis=1)
-                    if not len(s):
-                        raise ValueError("empty audio stream")
-                    neg = s < 0
-                    rows["valid"].append("ok")
-                    rows["sample_rate"].append(rate)
-                    rows["n_samples"].append(len(s))
-                    rows["duration_s"].append(len(s) / rate)
-                    rows["peak"].append(int(np.abs(s).max()))
-                    rows["rms"].append(float(np.sqrt((s * s).mean())))
-                    rows["sum_amp"].append(int(round(s.sum())))
-                    rows["zero_crossings"].append(int((neg[1:] != neg[:-1]).sum()))
-                except Exception as e:
-                    rows["valid"].append(f"error: {e}")
-                    for k in rows:
-                        if k != "valid":
-                            rows[k].append(None)
-            out = pd.DataFrame({"media_ref": pdf["media_ref"]})
-            for k, v in rows.items():
-                dtype = {"sample_rate": "Int32", "n_samples": "Int32", "peak": "Int32",
-                         "zero_crossings": "Int32", "sum_amp": "Int64"}.get(k)
-                out[k] = pd.array(v, dtype=dtype) if dtype else v
-            yield out
+        samples, rate = (decode_fn or decode_wav)(payload or b"")
+        s = np.asarray(samples, dtype=np.float64)
+        if s.ndim > 1:  # downmix for features; fixtures are mono
+            s = s.mean(axis=1)
+        if not len(s):
+            raise ValueError("empty audio stream")
+        neg = s < 0
+        return [
+            (
+                media_ref, "ok", rate, len(s), len(s) / rate, int(np.abs(s).max()),
+                float(np.sqrt((s * s).mean())), int(round(s.sum())),
+                int((neg[1:] != neg[:-1]).sum()),
+            )
+        ]
 
-    return media.mapInPandas(kernel, schema=AUDIO_FEATURES_SCHEMA)
+    def on_error(media_ref, payload, e):
+        return [(media_ref, f"error: {e}") + (None,) * 7]
+
+    cols = media.select("media_ref", "payload")
+    return map_rows(cols, per_row, AUDIO_FEATURES_SCHEMA, on_error)
 
 
 def video_frame_sample(
@@ -242,28 +198,23 @@ def video_frame_sample(
     """1 input row -> N frame rows (UDTF-shaped fan-out, 0 shuffles).
     Frames are re-encoded PNG so downstream ops (OCR, features)
     compose. Default decode is the from-scratch MJPEG/AVI path
-    (:func:`_decode_avi_mjpeg`); undecodable payloads become one
-    ``frame_no = -1`` error row, never task failures."""
+    (:func:`_decode_avi_mjpeg`). A payload whose decode fails, even
+    after some frames, is exactly one ``frame_no = -1`` error row (no
+    partial frames), never a task failure."""
     decode = decode_fn or _decode_avi_mjpeg
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(media_ref, payload):
         from pdf_ocr_spark.sources.pngcodec import encode_png
 
-        for pdf in batches:
-            refs, nos, frames = [], [], []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                try:
-                    for frame_no, frame in decode(bytes(payload), every_n):
-                        refs.append(ref)
-                        nos.append(frame_no)
-                        frames.append(encode_png(frame))
-                except Exception:
-                    refs.append(ref)
-                    nos.append(-1)
-                    frames.append(None)
-            yield pd.DataFrame({"media_ref": refs, "frame_no": nos, "frame_png": frames})
+        return [
+            (media_ref, frame_no, encode_png(frame))
+            for frame_no, frame in decode(bytes(payload), every_n)
+        ]
 
-    return media.mapInPandas(kernel, schema=VIDEO_FRAMES_SCHEMA)
+    cols = media.select("media_ref", "payload")
+    return map_rows(
+        cols, per_row, VIDEO_FRAMES_SCHEMA, lambda media_ref, payload, e: [(media_ref, -1, None)]
+    )
 
 
 MEDIA_SPANS_SCHEMA = StructType(
@@ -293,43 +244,32 @@ def extract_media_spans(spans: DataFrame) -> DataFrame:
     for OCR engines (app.py:243-323), generalized across modalities.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def content(kind, text, payload):
         from pdf_ocr_spark.operators.imaging import ocr_decode, to_grayscale
         from pdf_ocr_spark.sources.avicodec import decode_avi
         from pdf_ocr_spark.sources.pngcodec import decode_png
         from pdf_ocr_spark.sources.wavcodec import decode_wav
 
-        for pdf in batches:
-            contents = []
-            for kind, text, payload in zip(pdf["kind"], pdf["text"], pdf["payload"]):
-                try:
-                    if kind == "text":
-                        contents.append(text or "")
-                    elif kind == "image":
-                        decoded, _conf = ocr_decode(
-                            to_grayscale(decode_png(bytes(payload)))
-                        )
-                        contents.append(decoded)
-                    elif kind == "audio":
-                        samples, rate = decode_wav(bytes(payload))
-                        contents.append(f"audio {len(samples)}@{rate}")
-                    elif kind == "video":
-                        w, h, frames = decode_avi(bytes(payload))
-                        contents.append(f"video {len(frames)}f {w}x{h}")
-                    else:
-                        raise ValueError(f"unknown span kind {kind!r}")
-                except Exception as e:
-                    contents.append(f"error: {e}")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"],
-                    "kind": pdf["kind"],
-                    "content": contents,
-                }
-            )
+        if kind == "text":
+            return text or ""
+        if kind == "image":
+            return ocr_decode(to_grayscale(decode_png(bytes(payload))))[0]
+        if kind == "audio":
+            samples, rate = decode_wav(bytes(payload))
+            return f"audio {len(samples)}@{rate}"
+        if kind == "video":
+            w, h, frames = decode_avi(bytes(payload))
+            return f"video {len(frames)}f {w}x{h}"
+        raise ValueError(f"unknown span kind {kind!r}")
 
-    return spans.mapInPandas(kernel, schema=MEDIA_SPANS_SCHEMA)
+    def per_row(doc_id, offset, kind, text, payload):
+        return [(doc_id, offset, kind, content(kind, text, payload))]
+
+    def on_error(doc_id, offset, kind, text, payload, e):
+        return [(doc_id, offset, kind, f"error: {e}")]
+
+    cols = spans.select("doc_id", "offset", "kind", "text", "payload")
+    return map_rows(cols, per_row, MEDIA_SPANS_SCHEMA, on_error)
 
 
 FRAME_FEATURES_SCHEMA = StructType(
@@ -352,31 +292,23 @@ def frame_features(frames: DataFrame) -> DataFrame:
     exact integer pixel sum. Error rows (``frame_no = -1``, null
     payload) pass through with null features."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_row(media_ref, frame_no, frame_png):
         import numpy as np
 
         from pdf_ocr_spark.operators.imaging import to_grayscale
         from pdf_ocr_spark.sources.pngcodec import decode_png
 
-        for pdf in batches:
-            rows = {k: [] for k in ("width", "height", "left_luma", "right_luma", "sum_luma")}
-            for payload in pdf["frame_png"]:
-                try:
-                    img = to_grayscale(decode_png(bytes(payload)))
-                    h, w = img.shape
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["left_luma"].append(int(img[:, : w // 2].mean()))
-                    rows["right_luma"].append(int(img[:, w // 2 :].mean()))
-                    rows["sum_luma"].append(int(img.sum(dtype=np.int64)))
-                except Exception:
-                    for k in rows:
-                        rows[k].append(None)
-            out = pd.DataFrame(
-                {"media_ref": pdf["media_ref"], "frame_no": pdf["frame_no"]}
+        img = to_grayscale(decode_png(bytes(frame_png)))
+        h, w = img.shape
+        return [
+            (
+                media_ref, frame_no, w, h, int(img[:, : w // 2].mean()),
+                int(img[:, w // 2 :].mean()), int(img.sum(dtype=np.int64)),
             )
-            for k, v in rows.items():
-                out[k] = pd.array(v, dtype="Int64" if k == "sum_luma" else "Int32")
-            yield out
+        ]
 
-    return frames.mapInPandas(kernel, schema=FRAME_FEATURES_SCHEMA)
+    def on_error(media_ref, frame_no, frame_png, e):
+        return [(media_ref, frame_no) + (None,) * 5]
+
+    cols = frames.select("media_ref", "frame_no", "frame_png")
+    return map_rows(cols, per_row, FRAME_FEATURES_SCHEMA, on_error)

@@ -1,7 +1,8 @@
 """Per-page OCR: the reference's ``process_image``
 (/root/reference/app.py:226-345) as one function, :func:`ocr_image`,
-and the Arrow-batched ``mapInPandas`` kernel over PNG payloads,
-:func:`ocr_pages`.
+and the span pipeline's page kernel over PNG payloads,
+:func:`ocr_pages`, one ``per_row`` function over the package's row
+boundary (:func:`pdf_ocr_spark.operators.rows.map_rows`).
 
 :func:`ocr_image` is the only per-page OCR in the package. Both
 extraction paths call it: :func:`ocr_pages` (span documents, via
@@ -18,18 +19,15 @@ semantics:
   ``return i, "[Error ...]"`` paths. :func:`page_error` is the one
   definition of those messages; the hOCR kernel uses it too.
 
-From Spark's perspective there is no per-row Python — batches arrive as
-Arrow RecordBatches and the kernel loops inside the batch, importing
-heavy deps lazily once per python worker (the reference's lazy-import
-pattern, /root/reference/app.py:270,298).
+:func:`load_page` (payload -> raster, then ``preprocess``/``derotate``)
+is the one image preparation; :func:`ocr_image` and the hOCR kernel
+both start from it. Heavy deps are imported lazily, once per Python
+worker (the reference's lazy-import pattern, app.py:270,298).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import partial
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -42,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_ocr_spark.config import ExtractionConfig
+from pdf_ocr_spark.operators.rows import map_rows
 
 OCR_OUTPUT_SCHEMA = StructType(
     [
@@ -69,28 +68,46 @@ def page_error(offset: int, e: Exception) -> str:
     return f"[Error processing page {offset + 1}: {e}]"
 
 
+def png_page(payload: bytes | None, media_ref: str):
+    """A span page's raster, decoded from its PNG payload. A NULL
+    payload (the left join found no media row) raises
+    ``FileNotFoundError(media_ref)``, :func:`page_error`'s "File not
+    found" row."""
+    from pdf_ocr_spark.sources.pngcodec import decode_png
+
+    if payload is None:
+        raise FileNotFoundError(media_ref)
+    return decode_png(payload)
+
+
+def load_page(img, config: ExtractionConfig):
+    """The raster a page is OCR-ed from: ``img`` (a decoded raster, or
+    a zero-argument callable returning one) with the config's
+    ``preprocess`` enhancement and ``derotate`` correction applied."""
+    from pdf_ocr_spark.operators.imaging import derotate_image, enhance_image
+
+    if callable(img):
+        img = img()
+    if config.preprocess:
+        img = enhance_image(img)
+    if config.derotate:
+        img = derotate_image(img)
+    return img
+
+
 def ocr_image(img, offset: int, config: ExtractionConfig) -> tuple[str, float, bool]:
     """OCR one page; returns (text, confidence, is_error) and never
-    raises. ``img`` is a decoded raster, or a zero-argument callable
-    returning one, so that a failed decode (:func:`ocr_pages`' PNG
-    payloads) is this page's error row like any other failure. An
-    unsupported engine is rejected before ``img`` is touched."""
-    # Lazy imports: once per python worker, not per task from Spark's view
-    from pdf_ocr_spark.operators.imaging import (
-        derotate_image,
-        enhance_image,
-        ocr_decode,
-    )
+    raises. ``img`` is as for :func:`load_page`, so that a failed
+    decode (:func:`ocr_pages`' PNG payloads) is this page's error row
+    like any other failure. An unsupported engine is rejected before
+    ``img`` is touched."""
+    # Lazy import: once per python worker, not per task from Spark's view
+    from pdf_ocr_spark.operators.imaging import ocr_decode
 
     if config.ocr_engine not in SUPPORTED_ENGINES:
         return f"[Error: Unsupported OCR engine: {config.ocr_engine}]", 0.0, True
     try:
-        if callable(img):
-            img = img()
-        if config.preprocess:
-            img = enhance_image(img)
-        if config.derotate:
-            img = derotate_image(img)
+        img = load_page(img, config)
         if config.ocr_engine == "glyph":
             text, conf = ocr_decode(img)
             return text, conf, False
@@ -122,7 +139,9 @@ def ocr_image(img, offset: int, config: ExtractionConfig) -> tuple[str, float, b
 
 def ocr_pages(pages: DataFrame, config: ExtractionConfig | None = None) -> DataFrame:
     """Decode image-span pages: (doc_id, offset, media_ref, payload) ->
-    (doc_id, offset, media_ref, text, confidence, error).
+    (doc_id, offset, media_ref, text, confidence, error), one row per
+    page. :func:`ocr_image` contains every failure of a page, so the
+    row boundary needs no ``on_error``.
 
     Raw decode only — text normalization (M2+M5) is applied afterwards
     as column expressions, and only to non-error rows (the reference's
@@ -130,30 +149,9 @@ def ocr_pages(pages: DataFrame, config: ExtractionConfig | None = None) -> DataF
     """
     cfg = config or ExtractionConfig()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_ocr_spark.sources.pngcodec import decode_png
+    def per_row(doc_id, offset, media_ref, payload):
+        page = ocr_image(partial(png_page, payload, media_ref), offset, cfg)
+        return [(doc_id, offset, media_ref, *page)]
 
-        def load(payload, media_ref):
-            if payload is None:  # left join found no media row
-                raise FileNotFoundError(media_ref)
-            return decode_png(bytes(payload))
-
-        for pdf in batches:
-            texts, confs, errs = [], [], []
-            for payload, ref, off in zip(pdf["payload"], pdf["media_ref"], pdf["offset"]):
-                t, c, e = ocr_image(partial(load, payload, ref), int(off), cfg)
-                texts.append(t)
-                confs.append(c)
-                errs.append(e)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"],
-                    "media_ref": pdf["media_ref"],
-                    "text": texts,
-                    "confidence": confs,
-                    "error": errs,
-                }
-            )
-
-    return pages.mapInPandas(kernel, schema=OCR_OUTPUT_SCHEMA)
+    cols = pages.select("doc_id", "offset", "media_ref", "payload")
+    return map_rows(cols, per_row, OCR_OUTPUT_SCHEMA)

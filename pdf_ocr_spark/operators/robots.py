@@ -21,9 +21,7 @@ the link side streams map-only: explode-match-argmax per link with one
 """
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -32,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_ocr_spark.operators.rows import map_rows
 
 ROBOTS_RULES_SCHEMA = StructType(
     [
@@ -117,29 +117,17 @@ def robots_rules_table(robots: DataFrame) -> DataFrame:
     One Arrow pass; at web scale this table is ~1 row per host-rule —
     always the broadcast side of the decision join."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                for directive, path_rule in parse_robots(txt or ""):
-                    rows.append(
-                        (
-                            host,
-                            directive,
-                            path_rule,
-                            _rule_regex(path_rule),
-                            len(path_rule),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["host", "directive", "path_rule", "rule_regex", "specificity"],
-            )
+    def per_row(host, txt):
+        return [
+            (host, directive, path_rule, _rule_regex(path_rule), len(path_rule))
+            for directive, path_rule in parse_robots(txt or "")
+        ]
 
-    return robots.select(
+    cols = robots.select(
         F.col("host").cast("string").alias("host"),
         F.col("robots_txt").cast("string").alias("robots_txt"),
-    ).mapInPandas(gen, ROBOTS_RULES_SCHEMA)
+    )
+    return map_rows(cols, per_row, ROBOTS_RULES_SCHEMA)
 
 
 def robots_decisions(parsed_links: DataFrame, rules: DataFrame) -> DataFrame:

@@ -7,17 +7,18 @@ From-scratch namespace-aware parse via stdlib ElementTree: ``urlset``
 per-sitemap typed error row, never a task failure — one damaged
 sitemap in a 10^9-host crawl costs one diagnosable row.
 
-Scale shape: one Arrow-batched fan-out (sitemap -> entries), map-only;
+Scale shape: one fan-out (sitemap -> entries) over the package's row
+boundary (:func:`pdf_ocr_spark.operators.rows.map_rows`), map-only;
 entries inherit the sitemap table's partitioning.
 """
 
-from collections.abc import Iterator
 from xml.etree import ElementTree
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from pdf_ocr_spark.operators.rows import map_rows
 
 _NS = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
 
@@ -68,23 +69,18 @@ def sitemap_entries(sitemaps: DataFrame) -> DataFrame:
     """(host, sitemap_xml) -> one row per listed URL (error-as-row for
     damaged sitemaps)."""
 
-    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, xml in zip(pdf["host"], pdf["sitemap_xml"]):
-                try:
-                    for e in parse_sitemap(xml):
-                        rows.append((host, e["loc"], e["lastmod"], e["priority"], None))
-                except Exception as e:  # noqa: BLE001 — contained per sitemap
-                    rows.append((host, None, None, None, str(e)))
-            yield pd.DataFrame(
-                rows, columns=["host", "loc", "lastmod", "priority", "parse_error"]
-            )
+    def per_row(host, xml):
+        return [
+            (host, e["loc"], e["lastmod"], e["priority"], None) for e in parse_sitemap(xml)
+        ]
 
-    return sitemaps.select(
+    cols = sitemaps.select(
         F.col("host").cast("string").alias("host"),
         F.col("sitemap_xml").cast("string").alias("sitemap_xml"),
-    ).mapInPandas(fan_out, SITEMAP_ENTRIES_SCHEMA)
+    )
+    return map_rows(
+        cols, per_row, SITEMAP_ENTRIES_SCHEMA, lambda host, xml, e: [(host, None, None, None, str(e))]
+    )
 
 
 def parse_sitemap_index(xml: str) -> list[str]:

@@ -34,15 +34,14 @@ is Flask templates, /root/reference/templates/index.html) — this tier
 comes from the north rule's "HTML boilerplate strip, DOM heuristics"
 clause. Parsing is stdlib ``html.parser`` (tolerant of malformed
 markup, entities decoded via ``convert_charrefs``); all Spark-side
-work is Arrow-batched ``mapInPandas`` — per-document Python, never
+work is per-document Python over the package's row boundary
+(:func:`pdf_ocr_spark.operators.rows.map_rows`), never
 per-row-per-node, and a pure map stage: extraction adds **zero
 shuffles** at any corpus size.
 """
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -52,6 +51,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_ocr_spark.operators.rows import map_rows
 
 #: Subtrees under these tags are chrome, never content.
 DROP_TAGS = frozenset(
@@ -390,33 +391,17 @@ def extract_main_spans(df: DataFrame) -> DataFrame:
     """(doc_id, html) -> interleaved main-content spans
     (doc_id, offset, kind, text, media_ref)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                for off, (kind, text, ref) in enumerate(main_spans_of(h)):
-                    rows.append((int(d), off, kind, text, ref))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "kind", "text", "media_ref"]
-            )
+    def per_row(d, h):
+        return [(d, off, *span) for off, span in enumerate(main_spans_of(h))]
 
-    return _html_cols(df).mapInPandas(gen, MAIN_SPANS_SCHEMA)
+    return map_rows(_html_cols(df), per_row, MAIN_SPANS_SCHEMA)
 
 
 def extract_main_text(df: DataFrame) -> DataFrame:
     """(doc_id, html) -> (doc_id, main_text); heading + paragraphs
     joined by blank lines. Per-doc local — no reassembly shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "main_text": [main_text_of(h) for h in pdf["html"]],
-                }
-            )
-
-    return _html_cols(df).mapInPandas(gen, MAIN_TEXT_SCHEMA)
+    return map_rows(_html_cols(df), lambda d, h: [(d, main_text_of(h))], MAIN_TEXT_SCHEMA)
 
 
 def extract_links(df: DataFrame) -> DataFrame:
@@ -424,43 +409,13 @@ def extract_links(df: DataFrame) -> DataFrame:
     (doc_id, offset, href, anchor, region) — the crawl-frontier /
     link-graph feed."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                for off, (href, anchor, region) in enumerate(links_of(h)):
-                    rows.append((int(d), off, href, anchor, region))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "href", "anchor", "region"]
-            )
+    def per_row(d, h):
+        return [(d, off, *link) for off, link in enumerate(links_of(h))]
 
-    return _html_cols(df).mapInPandas(gen, LINKS_SCHEMA)
+    return map_rows(_html_cols(df), per_row, LINKS_SCHEMA)
 
 
 def extract_metadata(df: DataFrame) -> DataFrame:
     """(doc_id, html) -> page metadata + content-shape counters."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                rows.append((int(d),) + metadata_of(h))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "title",
-                    "html_lang",
-                    "description",
-                    "n_links",
-                    "n_paragraphs",
-                    "n_images",
-                    "og_title",
-                    "og_type",
-                    "og_url",
-                    "og_image",
-                    "published_time",
-                ],
-            )
-
-    return _html_cols(df).mapInPandas(gen, METADATA_SCHEMA)
+    return map_rows(_html_cols(df), lambda d, h: [(d, *metadata_of(h))], METADATA_SCHEMA)

@@ -40,6 +40,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from pdf_ocr_spark.config import ExtractionConfig
+from pdf_ocr_spark.operators.rows import arrow_batch
 from pdf_ocr_spark.operators.spans import doc_bucket
 from pdf_ocr_spark.plans.pipeline import extract_documents
 from pdf_ocr_spark.schema import MANIFEST_SCHEMA
@@ -63,16 +64,15 @@ def local_frame(
     (each ~150-230 ms of worker start-up on a 4-core host). Going
     through an Arrow table keeps the rows in the plan: actions run no
     Python task, and an empty frame lets the optimizer prune the
-    operators above it. ``rows`` are tuples in ``schema`` field order;
+    operators above it. The table is built by the executors' row
+    conversion, :func:`~pdf_ocr_spark.operators.rows.arrow_batch`.
+    ``rows`` are tuples in ``schema`` field order;
     naive datetimes are read in the session time zone, as
     ``createDataFrame`` reads them."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows],
-        schema=to_arrow_schema(schema, timestamp_utc=False),
-    )
-    return spark.createDataFrame(table, schema)
+    batch = arrow_batch(list(rows), to_arrow_schema(schema, timestamp_utc=False))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:

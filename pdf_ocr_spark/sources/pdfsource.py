@@ -10,19 +10,22 @@ span pipeline uses (:func:`pdf_ocr_spark.operators.ocr.ocr_image`).
 
 Scale shape: binaryFile gives one row per file (whole-file bytes — the
 right granularity for scanned PDFs, which are page-image containers a
-few MB each); page explode happens inside ``mapInPandas`` so a
-1000-executor cluster fans pages out without any driver involvement.
+few MB each); page explode happens inside the harvest's Arrow stage,
+so a 1000-executor cluster fans pages out without any driver
+involvement.
 
 One harvest contract: every reader here, and
 :func:`pdf_ocr_spark.sources.warcsource.read_warc_records`, is a
-:func:`harvest` — one scan, one Arrow stage, and two functions of the
-reader's own: ``per_file(key, path, data)`` returns a file's rows, and
-``on_error(key, path, exc)`` the rows it becomes if ``per_file``
-raises. A file's rows are kept only when the whole ``per_file`` call
-returns, so a file that fails part-way leaves no partial rows. The key
-is the ``<id>`` of a ``doc_<id>.pdf`` file name, else the whole path.
-The boundary catches any ``Exception``: malformed inputs become error
-rows, never task failures (the reference's error-as-row discipline,
+:func:`harvest` — one scan, then one Arrow stage over the package's
+row boundary (:func:`pdf_ocr_spark.operators.rows.map_rows`), and two
+functions of the reader's own: ``per_file(key, path, data)`` returns a
+file's rows, and ``on_error(key, path, exc)`` the rows it becomes if
+``per_file`` raises. :func:`map_files` adds only the key rule: the
+``<id>`` of a ``doc_<id>.pdf`` file name, else the whole path. The
+containment is the boundary's: a file's rows are kept only when the
+whole ``per_file`` call returns, so a file that fails part-way leaves
+no partial rows, and any ``Exception`` becomes error rows, never a
+task failure (the reference's error-as-row discipline,
 app.py:335-337). The malformed-file shapes: ``n_pages = -1``
 (:func:`pdf_page_counts`), a row of NULLs (:func:`read_pdf_info`,
 :func:`read_pdf_profiles`), no rows (links, attachments, form fields,
@@ -50,6 +53,8 @@ from py4j.protocol import Py4JError
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pdf_ocr_spark.operators.rows import map_rows
 
 #: Words rendered per PDF page by the fixture writer. Shared constant
 #: with the SQL oracles in entrypoints (n_pages = ceil(n_words / this)).
@@ -663,30 +668,20 @@ def map_files(
 ) -> DataFrame:
     """The harvest stage over any (path, content) frame — a batch
     ``binaryFile`` scan (:func:`harvest`) or a streaming micro-batch
-    (streaming/stream.py stream_pdf_profiles): one Arrow-batched
-    ``mapInPandas`` kernel owning the key rule, the per-file exception
-    boundary and one pandas frame per input batch."""
-    names = [field.split()[0] for field in schema.split(",")]
+    (streaming/stream.py stream_pdf_profiles): the package's row
+    boundary (:func:`pdf_ocr_spark.operators.rows.map_rows`) with the
+    file key rule in front of ``per_file`` and ``on_error``."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = _DOC_RE.search(path)
-                key = m.group(1) if m else path
-                try:
-                    # per_file returns all its rows at once, so a file
-                    # that fails part-way leaves no partial rows
-                    rows += per_file(key, path, bytes(content))
-                except Exception as e:  # noqa: BLE001 — contained per file
-                    # error-as-row, never a task failure: an exception
-                    # escaping the kernel makes Spark retry the partition
-                    # and then fail the job, so one damaged file in a
-                    # 10^12-file scan must cost its rows, not the job
-                    rows += on_error(key, path, e)
-            yield pd.DataFrame(rows, columns=names)
+    def key(path: str) -> str:
+        m = _DOC_RE.search(path)
+        return m.group(1) if m else path
 
-    return files.select("path", "content").mapInPandas(kernel, schema=schema)
+    return map_rows(
+        files.select("path", "content"),
+        lambda path, content: per_file(key(path), path, content),
+        schema,
+        lambda path, content, e: on_error(key(path), path, e),
+    )
 
 
 def pdf_page_counts(spark: SparkSession, pdf_dir: str) -> DataFrame:

@@ -17,8 +17,8 @@ record types. Gzip input is detected by magic bytes and inflated
 member-by-member.
 
 Spark-facing: ``read_warc_records`` is a ``binaryFile`` scan + one
-Arrow-batched ``mapInPandas`` fan-out (file -> records), so a
-10^12-record archive parses as a pure map stage; composition with
+Arrow-batched fan-out (file -> records) through the harvest boundary,
+so a 10^12-record archive parses as a pure map stage; composition with
 :mod:`pdf_ocr_spark.operators.webextract` gives the full
 crawl-archive -> boilerplate-strip -> interleaved-spans pipeline.
 """

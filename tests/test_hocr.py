@@ -57,6 +57,38 @@ def test_hocr_pages_kernel(spark):
     )
 
 
+def test_hocr_honours_engine_and_derotate(spark):
+    """The hOCR kernel reads the same ``ExtractionConfig`` as
+    ``ocr_pages``: a non-glyph engine gives ``ocr_pages``' row with no
+    markup, and ``derotate`` straightens a rotated page before layout."""
+    from pdf_ocr_spark.config import ExtractionConfig
+    from pdf_ocr_spark.operators.imaging import rotate_image
+    from pdf_ocr_spark.operators.ocr import ocr_pages
+
+    pages = spark.createDataFrame(
+        [
+            Row(doc_id="d", offset=0, media_ref="m://flat",
+                payload=bytes(encode_png(render_text_image("HOCR TEST")))),
+            Row(doc_id="d", offset=1, media_ref="m://rot",
+                payload=bytes(encode_png(rotate_image(render_text_image("ROTATED PAGE"), 0.04)))),
+        ],
+        "doc_id string, offset int, media_ref string, payload binary",
+    )
+    for engine in ("notreal", "tesseract"):
+        cfg = ExtractionConfig(ocr_engine=engine)
+        want = {r["offset"]: tuple(r) for r in ocr_pages(pages, cfg).collect()}
+        got = ocr_pages_hocr(pages, cfg).collect()
+        assert len(got) == 2
+        for r in got:
+            assert r["error"] and r["hocr"] is None
+            row = (r["doc_id"], r["offset"], r["media_ref"], r["text"], r["confidence"], r["error"])
+            assert row == want[r["offset"]]
+    out = {r["offset"]: r for r in ocr_pages_hocr(pages, ExtractionConfig(derotate=True)).collect()}
+    assert [out[k]["text"] for k in (0, 1)] == ["HOCR TEST", "ROTATED PAGE"]
+    assert not out[1]["error"] and out[1]["confidence"] == 1.0
+    assert re.findall(r"ocrx_word[^>]*>([^<]+)</span>", out[1]["hocr"]) == ["ROTATED", "PAGE"]
+
+
 def test_hocr_doc_assembly(spark):
     img_a = render_text_image("PAGE ONE")
     img_b = render_text_image("PAGE TWO")

@@ -129,7 +129,7 @@ def test_bucketed_reassembly_plans_one_bucket_exchange(spark, corpus):
         exchanges[0],
     )
     # the tree prints top-down: the OCR kernel runs below (before) the exchange
-    assert plan.index("REPARTITION_BY_NUM") < plan.index("MapInPandas kernel(")
+    assert plan.index("REPARTITION_BY_NUM") < plan.index("MapInArrow kernel(")
 
 
 def test_bucket_overwrite_leaves_other_buckets_byte_identical(spark, corpus, tmp_path):

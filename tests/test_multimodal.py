@@ -93,6 +93,21 @@ def test_video_frame_sample_with_injected_decoder(spark, media):
     assert by_ref["m://bad"][0]["frame_no"] == -1  # error row
 
 
+def test_video_frame_sample_failing_part_way_is_one_error_row(spark, media):
+    """A payload whose decoder fails after some frames is exactly one
+    ``frame_no = -1`` row: no frame of it survives."""
+
+    def two_then_fail(payload, every_n):
+        img = decode_png(payload)
+        yield 0, img
+        yield every_n, img
+        raise ValueError("truncated stream")
+
+    rows = video_frame_sample(media, every_n=5, decode_fn=two_then_fail).collect()
+    got = sorted((r["media_ref"], r["frame_no"], r["frame_png"]) for r in rows)
+    assert got == [("m://bad", -1, None), ("m://null", -1, None), ("m://ok", -1, None)]
+
+
 def test_extract_media_spans_dispatch_and_containment(spark):
     """Kind-dispatched extraction: every modality decodes through its
     real from-scratch codec; garbage payloads and unknown kinds become
