@@ -11,9 +11,10 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_ocr_spark.functions.jvmcache import per_jvm
 from pdf_ocr_spark.functions.serialize import html_doc_col, markdown_doc_col, txt_doc_col
 
 FORMATS = ("txt", "md", "html")
@@ -43,20 +44,14 @@ def serialize_documents(
     (the reference uses the uploaded base filename,
     /root/reference/app.py:556-558).
     """
-    pages = _text_pages(F.col("spans"))
-    title = F.col(title_col) if title_col else F.col("doc_id")
     out = documents
     for fmt in formats:
-        if fmt == "txt":
-            out = out.withColumn("txt", txt_doc_col(pages))
-        elif fmt == "md":
-            out = out.withColumn("md", markdown_doc_col(pages))
-        elif fmt == "html":
-            out = out.withColumn("html", html_doc_col(pages, title))
+        if fmt in FORMATS:
+            out = out.withColumn(fmt, _format_col(fmt, title_col))
         elif fmt == "docx":
             from pdf_ocr_spark.operators.docx import docx_udf
 
-            out = out.withColumn("docx", docx_udf()(pages))
+            out = out.withColumn("docx", docx_udf()(_text_pages(F.col("spans"))))
         elif fmt == "json":
             from pdf_ocr_spark.operators.hocr import json_doc_col
 
@@ -64,3 +59,17 @@ def serialize_documents(
         else:
             raise ValueError(f"Unsupported output format: {fmt}")
     return out
+
+
+@per_jvm
+def _format_col(fmt: str, title_col: str | None) -> Column:
+    """The txt, md or html column of a document's ``spans``: built-in
+    expressions only, so one tree serves every session on the JVM (the
+    docx and json columns hold Python UDFs, which belong to one
+    SparkContext)."""
+    pages = _text_pages(F.col("spans"))
+    if fmt == "txt":
+        return txt_doc_col(pages)
+    if fmt == "md":
+        return markdown_doc_col(pages)
+    return html_doc_col(pages, F.col(title_col or "doc_id"))

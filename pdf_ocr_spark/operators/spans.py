@@ -44,16 +44,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf_ocr_spark.functions.jvmcache import per_jvm
 
-def explode_spans(documents: DataFrame) -> DataFrame:
+
+def explode_spans(documents: DataFrame, outer: bool = False) -> DataFrame:
     """One row per span: (doc_id, offset, kind, text, media_ref).
 
     Equivalent of the reference's page fan-out (one OCR task per page,
     /root/reference/app.py:503-516). Uses the stored ``offset`` as the
     ordering key rather than array position so reassembly is stable even
-    if upstream storage reordered the array.
+    if upstream storage reordered the array. ``outer`` keeps a document
+    whose ``spans`` is empty or NULL as one row with every span field
+    NULL; :func:`ordered` turns it into an empty array.
     """
-    s = F.explode("spans").alias("span")
+    s = (F.explode_outer if outer else F.explode)("spans").alias("span")
     return documents.select(
         "doc_id",
         s,
@@ -96,8 +100,9 @@ def ordered(
     (bucket, doc_id) behind one exchange that sends bucket ``k`` to
     task ``k mod min(buckets, defaultParallelism)``, and adds a
     ``bucket`` column; a salted stage 1 still groups on
-    (doc_id, salt)."""
-    item = F.struct("offset", *fields)
+    (doc_id, salt). A row with a NULL ``offset`` (a span's offset is
+    never NULL) gives its document a row and adds no element."""
+    item = F.when(F.col("offset").isNotNull(), F.struct("offset", *fields))
     if isinstance(n_salt, int) and n_salt == 0:
         merged = F.array_sort(F.collect_list(item))
     else:
@@ -120,16 +125,23 @@ def page_metrics() -> list[Column]:
     """``n_pages``, ``mean_confidence`` and ``n_errors`` of an
     :func:`ordered` array whose fields include ``confidence`` and
     ``error``. The confidence sum runs in offset order, so it does not
-    depend on the order partitions arrive in."""
+    depend on the order partitions arrive in. An empty array has
+    ``mean_confidence`` NULL."""
+    return list(_page_metrics())
+
+
+@per_jvm
+def _page_metrics() -> tuple[Column, ...]:
     n = F.size("_ordered")
     conf = F.aggregate("_ordered", F.lit(0.0), lambda acc, s: acc + s["confidence"])
-    return [
+    return (
         n.cast("bigint").alias("n_pages"),
-        (conf / n).alias("mean_confidence"),
+        F.try_divide(conf, n).alias("mean_confidence"),
         F.size(F.filter("_ordered", lambda s: s["error"])).cast("bigint").alias("n_errors"),
-    ]
+    )
 
 
+@per_jvm
 def canonical_spans() -> Column:
     """An :func:`ordered` array re-projected into the canonical
     (kind, text, media_ref, offset) ``spans`` field order."""

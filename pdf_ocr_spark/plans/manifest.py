@@ -23,8 +23,14 @@ A run:
 5. appends manifest rows (status='completed', per-bucket metrics)
    only *after* the output write action has succeeded — two-phase, so
    the manifest never claims a bucket whose data didn't commit. The
-   run's bucket set is an ``observe()`` metric recorded by the write
-   itself, not a second pass over the input.
+   metrics are taken during the write: ``count``/``sum``/``avg`` over
+   ``Window.partitionBy("bucket")``, read by one ``observe()`` of
+   ``collect_set(struct(bucket, ...))``, so the driver holds one entry
+   per bucket per task and the output is not read back. The window
+   reuses the bucket exchange and the sort the partitioned write
+   needs, and runs before the serializers, so it buffers a bucket's
+   spans but not its txt/md/html. The rows go to the manifest as one
+   file built on the driver (:func:`local_frame`).
 """
 
 from __future__ import annotations
@@ -34,13 +40,15 @@ import time
 from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from pdf_ocr_spark.config import ExtractionConfig
+from pdf_ocr_spark.functions.jvmcache import per_jvm
 from pdf_ocr_spark.operators.rows import arrow_batch
+from pdf_ocr_spark.operators.serialize import serialize_documents
 from pdf_ocr_spark.operators.spans import doc_bucket
 from pdf_ocr_spark.plans.pipeline import extract_documents
 from pdf_ocr_spark.schema import MANIFEST_SCHEMA
@@ -103,6 +111,21 @@ def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> DataFra
     )
 
 
+#: the helper columns that carry each bucket's manifest metrics
+#: through the write
+_STAT_COLUMNS = ("_n_docs", "_n_pages", "_mean_confidence")
+
+
+@per_jvm
+def _bucket_stats() -> tuple[Column, ...]:
+    w = Window.partitionBy("bucket")
+    return (
+        F.count(F.lit(1)).over(w).alias("_n_docs"),
+        F.sum("n_pages").over(w).alias("_n_pages"),
+        F.avg("mean_confidence").over(w).alias("_mean_confidence"),
+    )
+
+
 def run_extraction(
     spark: SparkSession,
     documents: DataFrame,
@@ -128,52 +151,38 @@ def run_extraction(
 
     done = completed_buckets(spark, out_dir, run_id)
     todo = docs.join(F.broadcast(done), "bucket", "left_anti")
-    # the bucket set is recorded while the write runs (at most
-    # n_buckets values), so phase 2 needs no second pass over the input
-    seen = Observation()
-    observed = todo.observe(seen, F.collect_set("bucket").alias("buckets"))
-
-    extracted = extract_documents(observed.drop("bucket"), media, cfg, buckets=n_buckets)
+    extracted = extract_documents(
+        todo.drop("bucket"), media, cfg, serialize=False, buckets=n_buckets
+    )
+    # every task adds one set entry per bucket it holds (module docstring)
+    stats = Observation()
+    observed = extracted.select("*", *_bucket_stats()).observe(
+        stats, F.collect_set(F.struct("bucket", *_STAT_COLUMNS)).alias("buckets")
+    )
+    written = serialize_documents(observed.drop(*_STAT_COLUMNS), formats=cfg.output_formats)
     (
-        extracted.write.mode("overwrite")
+        written.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(_output_dir(out_dir))
     )
 
-    # Phase 2: the write committed — derive per-bucket lineage metrics
-    # from the freshly written output (cheap: metadata + two narrow
-    # columns) and append manifest rows. When todo is empty AQE can
-    # replace its stage before it runs, and the observation then holds
-    # an empty row: only on that path is the bucket set recomputed, by
-    # the distinct pass the observation stands in for.
-    if seen._jo.getRow().length() == 0:
-        todo_buckets = [r["bucket"] for r in todo.select("bucket").distinct().collect()]
-    else:
-        todo_buckets = list(seen.get["buckets"])
-    if not todo_buckets:
-        return 0
+    # Phase 2: the write committed, so its buckets get manifest rows.
+    # When todo is empty AQE can replace the write's stage before it
+    # runs, and the observation then holds an empty row.
     elapsed = time.time() - t0
-    written = spark.read.parquet(_output_dir(out_dir)).where(F.col("bucket").isin(todo_buckets))
-    stats = (
-        written.groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_pages").alias("n_pages"),
-            F.avg("mean_confidence").alias("mean_confidence"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("bucket").alias("partition_id"),
-            F.lit(None).cast("int").alias("salt"),
-            F.lit("completed").alias("status"),
-            "n_docs",
-            "n_pages",
-            "mean_confidence",
-            F.lit(float(elapsed)).alias("elapsed_s"),
-            F.current_timestamp().alias("ts"),
-        )
+    buckets = stats.get["buckets"] if stats._jo.getRow().length() else []
+    if not buckets:
+        return 0
+    rows = [
+        (run_id, b, None, "completed", n_docs, n_pages, mean_confidence, elapsed, None)
+        for b, n_docs, n_pages, mean_confidence in sorted(buckets, key=lambda r: r[0])
+    ]
+    (
+        local_frame(spark, rows, MANIFEST_SCHEMA)
+        .withColumn("ts", F.current_timestamp())
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(_manifest_dir(out_dir))
     )
-    stats.write.mode("append").parquet(_manifest_dir(out_dir))
-    return len(todo_buckets)
-
+    return len(rows)

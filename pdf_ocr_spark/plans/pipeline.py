@@ -1,8 +1,8 @@
 """The end-to-end extraction pipeline (SURVEY §3.1 Spark shape).
 
-    documents ──explode──┬─ text spans ───────────────────────────┐
-                         └─ image spans ─join media─ OCR kernel ──┴─ union
-                    ── groupBy(doc_id) ordered reassembly ── serialize
+    documents ──explode_outer──┬─ text spans (+ spanless docs) ────────────┐
+                               └─ image spans ─join media─ OCR kernel ──┴─ union
+        ── normalize ── groupBy(doc_id) ordered reassembly ── serialize
 
 Physical notes for scale:
 
@@ -36,14 +36,24 @@ Physical notes for scale:
   advisory partition size, at local[4] only.
 * Everything else — normalization, serialization — is projection work
   fused into the surrounding stages by whole-stage codegen.
+  Normalization is one projection above the union; error rows skip it.
+* A document with no spans (an empty or NULL array) keeps one row with
+  a NULL offset through the union and the reassembly, and comes out
+  with ``spans = []``, ``n_pages = 0`` and ``mean_confidence`` NULL.
+* The fixed Column trees — the normalize chain, the span
+  re-projection, the page metrics and the txt/md/html serializers —
+  are built once per JVM (:mod:`pdf_ocr_spark.functions.jvmcache`):
+  they are over a thousand py4j round trips, which every call paid
+  before.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_ocr_spark.config import ExtractionConfig
+from pdf_ocr_spark.functions.jvmcache import per_jvm
 from pdf_ocr_spark.functions.text import normalize_text_col
 from pdf_ocr_spark.operators.ocr import ocr_pages
 from pdf_ocr_spark.operators.serialize import serialize_documents
@@ -64,22 +74,20 @@ def extract_pages(
     Output: (doc_id, offset, kind, text, media_ref, confidence, error).
     Decoded image spans become ``kind='text'`` rows (the document is
     fully textual after extraction) with media_ref kept for lineage.
-    Error strings bypass normalization, as in the reference.
+    Error strings bypass normalization, as in the reference. A document
+    with no spans keeps one row with a NULL offset, so the reassembly
+    still gives it a row (:func:`~pdf_ocr_spark.operators.spans.ordered`).
     """
     cfg = config or ExtractionConfig()
-    pages = explode_spans(documents)
+    pages = explode_spans(documents, outer=True)
 
-    text_pages = (
-        pages.where(F.col("kind") == "text")
-        .select(
-            "doc_id",
-            "offset",
-            F.lit("text").alias("kind"),
-            normalize_text_col(F.col("text")).alias("text"),
-            "media_ref",
-            F.lit(1.0).alias("confidence"),
-            F.lit(False).alias("error"),
-        )
+    text_pages = pages.where((F.col("kind") == "text") | F.col("offset").isNull()).select(
+        "doc_id",
+        "offset",
+        "text",
+        "media_ref",
+        F.lit(1.0).alias("confidence"),
+        F.lit(False).alias("error"),
     )
 
     image_pages = (
@@ -88,18 +96,23 @@ def extract_pages(
         .join(media, "media_ref", "left")  # left: missing payload -> error row
     )
     decoded = ocr_pages(image_pages, cfg).select(
-        "doc_id",
-        "offset",
-        F.lit("text").alias("kind"),
-        F.when(F.col("error"), F.col("text"))
-        .otherwise(normalize_text_col(F.col("text")))
-        .alias("text"),
-        "media_ref",
-        "confidence",
-        "error",
+        "doc_id", "offset", "text", "media_ref", "confidence", "error"
     )
 
-    return text_pages.unionByName(decoded)
+    return text_pages.unionByName(decoded).select(
+        "doc_id", "offset", *_final_text(), "media_ref", "confidence", "error"
+    )
+
+
+@per_jvm
+def _final_text() -> tuple[Column, Column]:
+    """``kind`` and ``text`` of an extracted page: every page is text
+    now, normalized unless it is an error row."""
+    text = F.col("text")
+    return (
+        F.lit("text").alias("kind"),
+        F.when(F.col("error"), text).otherwise(normalize_text_col(text)).alias("text"),
+    )
 
 
 def extract_documents(

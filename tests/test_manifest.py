@@ -1,7 +1,9 @@
 """Extraction-run bookkeeping: driver-built frames plan as local
 relations, a fresh run plans no resume join, a run over completed
-buckets changes nothing, and the reassembly is clustered by output
-bucket (one exchange, one file per bucket)."""
+buckets changes nothing, the reassembly is clustered by output
+bucket (one exchange, one file per bucket), and the manifest's
+per-bucket stats are taken during the write (one sort, no read-back,
+one manifest file per append)."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.plans.manifest import (
     completed_buckets,
     local_frame,
@@ -152,3 +155,87 @@ def test_bucket_overwrite_leaves_other_buckets_byte_identical(spark, corpus, tmp
     assert others(_tree(documents)) == others(before)
     assert len(glob.glob(os.path.join(documents, "bucket=2", "*.parquet"))) == 1
     assert sorted(tuple(r) for r in spark.read.parquet(documents).collect()) == rows
+
+
+def _manifest_files(out: str) -> set[str]:
+    return set(glob.glob(os.path.join(out, "_manifest", "*.parquet")))
+
+
+def _read_back_stats(spark, out: str) -> dict:
+    """The oracle: per-bucket stats aggregated from the written output."""
+    stats = (
+        spark.read.parquet(os.path.join(out, "documents"))
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_pages").alias("n_pages"),
+            F.avg("mean_confidence").alias("mean_confidence"),
+        )
+    )
+    return {r["bucket"]: r for r in stats.collect()}
+
+
+def _hex(x):
+    return None if x is None else float.hex(x)
+
+
+@pytest.mark.parametrize(
+    "config, only_buckets",
+    [(None, None), (ExtractionConfig(reassembly_salt=4), None), (None, [1, 3])],
+    ids=["plain", "salted", "only_buckets"],
+)
+def test_manifest_stats_equal_read_back_output(spark, corpus, tmp_path, config, only_buckets):
+    docs, media = corpus
+    out = str(tmp_path / "stats")
+    appended = []
+    runs = [only_buckets, None] if only_buckets else [None]
+    for only in runs:
+        before = _manifest_files(out)
+        run_extraction(spark, docs, media, out, "run1", config=config, n_buckets=4, only_buckets=only)
+        appended.append(len(_manifest_files(out) - before))
+    assert appended == [1] * len(runs)
+
+    want = _read_back_stats(spark, out)
+    manifest = read_manifest(spark, out).collect()
+    assert sorted(r["partition_id"] for r in manifest) == sorted(want) == [0, 1, 2, 3]
+    for r in manifest:
+        w = want[r["partition_id"]]
+        assert (r["n_docs"], r["n_pages"]) == (w["n_docs"], w["n_pages"])
+        assert _hex(r["mean_confidence"]) == _hex(w["mean_confidence"])
+
+
+def test_fresh_run_makes_four_jobs(spark, corpus, tmp_path):
+    """Extraction makes three jobs and the manifest append one; the
+    read-back of the output it replaces made six in all."""
+    docs, media = corpus
+    docs.count(), media.count()  # fill the cached corpus outside the count
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-run", "fresh run_extraction")
+    try:
+        assert run_extraction(spark, docs, media, str(tmp_path / "jobs"), "run1", n_buckets=4) == 4
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-run")) == 4
+
+
+def _final_plan(spark, path: str) -> tuple[str, str]:
+    """(tree, node details) of the last final AQE plan that wrote ``path``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [executions.apply(i).physicalPlanDescription() for i in range(executions.length())]
+    plan = [p for p in plans if f"Arguments: file:{path}, " in p][-1]
+    tree = plan.split("+- == Final Plan ==")[1].split("+- == Initial Plan ==")[0]
+    return tree, plan.split("\n\n", 1)[1]
+
+
+def test_write_plan_sorts_once_behind_the_bucket_exchange(spark, corpus, tmp_path):
+    docs, media = corpus
+    out = str(tmp_path / "plan")
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 4
+    tree, details = _final_plan(spark, os.path.join(out, "documents"))
+    exchanges = re.findall(r"(?<!Broadcast)Exchange \((\d+)\)", tree)
+    assert len(exchanges) == 1, tree
+    args = re.search(rf"\({exchanges[0]}\) Exchange\n.*\nArguments: (.*)", details).group(1)
+    assert "shufflepartitionidpassthrough" in args and "REPARTITION_BY_NUM" in args
+    assert len(re.findall(r"\bSort \(\d+\)", tree)) == 1, tree
+    assert "CollectMetrics" in tree and "Window" in tree

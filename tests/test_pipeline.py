@@ -5,13 +5,17 @@ equivalence, and checkpoint/resume idempotency."""
 from __future__ import annotations
 
 import re
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark import SparkContext
 
 from pdf_ocr_spark import oracle
 from pdf_ocr_spark.config import ExtractionConfig
-from pdf_ocr_spark.operators.spans import explode_spans, reassemble_spans
-from pdf_ocr_spark.plans.manifest import read_manifest, run_extraction
+from pdf_ocr_spark.functions import jvmcache
+from pdf_ocr_spark.operators.spans import doc_bucket, explode_spans, reassemble_spans
+from pdf_ocr_spark.plans.manifest import local_frame, read_manifest, run_extraction
 from pdf_ocr_spark.plans.pipeline import extract_documents
 from pdf_ocr_spark.sources.corpus import (
     _media_fate,
@@ -236,3 +240,97 @@ def test_salted_and_plain_bucketed_runs_agree(spark, corpus, tmp_path):
     salt = re.search(r"Exchange hashpartitioning\(doc_id#\d+, _salt#\d+L?, \d+\)", plan)
     assert bucket and salt
     assert bucket.start() < salt.start()
+
+
+#: d2 and d7 have no spans: an empty and a NULL array
+SPANLESS_DOCS = [
+    ("d1", [("text", "one page", "", 0)]),
+    ("d2", []),
+    ("d7", None),
+]
+SPANLESS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def test_documents_without_spans_keep_one_row(spark):
+    docs = local_frame(spark, SPANLESS_DOCS, SPANLESS_SCHEMA)
+    media = local_frame(spark, [], "media_ref string, payload binary")
+    out = {r["doc_id"]: r for r in extract_documents(docs, media).collect()}
+    assert sorted(out) == ["d1", "d2", "d7"]
+    assert [tuple(s) for s in out["d1"]["spans"]] == [("text", "one page", "", 0)]
+    for doc_id in ("d2", "d7"):
+        r = out[doc_id]
+        assert r["spans"] == []
+        assert (r["n_pages"], r["n_errors"], r["mean_confidence"]) == (0, 0, None)
+        assert r["txt"] == oracle.serialize_txt({})
+        assert r["md"] == oracle.serialize_markdown({})
+        assert r["html"] == oracle.serialize_html({}, title=doc_id)
+
+
+def test_bucket_of_spanless_documents_completes(spark, tmp_path):
+    docs = local_frame(spark, SPANLESS_DOCS, SPANLESS_SCHEMA)
+    media = local_frame(spark, [], "media_ref string, payload binary")
+    buckets = {r[0] for r in docs.select(doc_bucket(4)).collect()}
+    out = str(tmp_path / "spanless")
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == len(buckets)
+    manifest = read_manifest(spark, out).collect()
+    assert {r["partition_id"] for r in manifest} == buckets
+    assert sum(r["n_docs"] for r in manifest) == 3
+    assert sum(r["n_pages"] for r in manifest) == 1
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 0
+
+
+def _py4j_calls(build) -> int:
+    """py4j commands ``build()`` sends from this thread (the gateway's
+    finalizer thread sends object releases on its own)."""
+    me, n = threading.get_ident(), [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = send
+    return n[0]
+
+
+def test_warm_build_makes_at_most_half_the_round_trips(spark, corpus, monkeypatch):
+    docs, media = corpus
+
+    def build():
+        extract_documents(docs, media, buckets=8)
+
+    build()  # imports and first-use setup outside the counts
+    monkeypatch.setattr(jvmcache, "_built", (None, {}))
+    cold = _py4j_calls(build)
+    warm = min(_py4j_calls(build) for _ in range(2))
+    assert 0 < 2 * warm <= cold, (cold, warm)
+
+
+def test_fixed_expressions_are_cached_per_jvm(monkeypatch):
+    """Pure Python: a stub JVM view stands in for the gateway's."""
+    built = []
+
+    @jvmcache.per_jvm
+    def column(name):
+        built.append(name)
+        return object()
+
+    jvm_a, jvm_b = object(), object()
+    monkeypatch.setattr(jvmcache, "_built", (None, {}))
+    monkeypatch.setattr(SparkContext, "_jvm", jvm_a)
+    first = column("x")
+    assert column("x") is first and built == ["x"]
+    assert column("y") is not first and built == ["x", "y"]
+    monkeypatch.setattr(SparkContext, "_jvm", jvm_b)  # a relaunched gateway
+    second = column("x")
+    assert second is not first and built == ["x", "y", "x"]
+    assert column("x") is second
+    monkeypatch.setattr(SparkContext, "_jvm", jvm_a)
+    assert column("x") is not first and built == ["x", "y", "x", "x"]
