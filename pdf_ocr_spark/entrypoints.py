@@ -50,6 +50,7 @@ from pdf_ocr_spark.operators.dedup import (
     minhash_near_dup,
     ngram_jaccard_pairs,
 )
+from pdf_ocr_spark.operators.rows import local_frame
 from pdf_ocr_spark.operators.similarity import cosine_topk, lsh_topk
 from pdf_ocr_spark.oracle.serializers import HTML_STYLE, TXT_PAGE_SEPARATOR
 from pdf_ocr_spark.oracle.textfuncs import LANGUAGE_CODE_MAP, OCR_REPLACEMENTS
@@ -250,8 +251,6 @@ def _drain_stream_result(spark: SparkSession, df: DataFrame, workdir: str) -> Da
     leak. The copy is a ``LocalRelation``, so actions over it run no
     Python task."""
     import shutil
-
-    from pdf_ocr_spark.plans.manifest import local_frame
 
     rows = df.collect()
     out = local_frame(spark, rows, df.schema)
@@ -2047,9 +2046,7 @@ def q_quality_classifier_train(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("id"), "text"
     )
     w = train_quality_classifier(docs)
-    return spark.createDataFrame(
-        list(zip(CLS_FEATURES, w)), "feature string, weight long"
-    )
+    return local_frame(spark, list(zip(CLS_FEATURES, w)), "feature string, weight long")
 
 
 @_register("quality_classifier_score", _cls_score_oracle())
@@ -2672,7 +2669,8 @@ def q_mixture_weights(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(token_count_col(F.col("text")).cast("long")).alias("n_tokens"),
     )
     tgt = F.broadcast(
-        d.sparkSession.createDataFrame(
+        local_frame(
+            spark,
             sorted((k, float(v)) for k, v in MIXTURE_TARGET_PCT.items()),
             "lang string, share double",
         )

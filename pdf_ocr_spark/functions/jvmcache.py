@@ -1,10 +1,12 @@
 """Fixed Column expressions, built once per JVM.
 
-A PySpark Column is a handle on a JVM object, and building one costs a
-py4j round trip per function call, literal and lambda in its tree. The
-pipeline's fixed expressions (the normalize chain, the span re-projection,
-the page metrics and the serializers) cost over a thousand of them, the
-same on every call. A Column is immutable and names no session, so one
+A PySpark Column is a handle on a JVM object, and building one costs
+py4j round trips for every function call, literal and lambda in its
+tree: the call itself, and the call-site bookkeeping PySpark wraps
+around each Column function (active session, a conf read, setting and
+clearing the origin). The pipeline's fixed expressions cost over a
+thousand of them, the same on every call. A Column built from
+``F.col``/``F.lit`` is immutable and names no session or plan, so one
 built tree serves every plan on the same JVM.
 
 The cache belongs to the py4j gateway's JVM view

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_ocr_spark.operators.rows import local_frame
+
 #: Fixed training rounds shared by the operator and the SQL-oracle
 #: generator in entrypoints.py (single-source-of-truth discipline).
 BPE_MERGE_ROUNDS = 8
@@ -124,8 +126,10 @@ def bpe_train_merges(
     one row per round in election order. Stops early if no adjacent
     pair remains (every word fused to one symbol)."""
     merges, _ = _train(df, text_col, n_merges)
-    return df.sparkSession.createDataFrame(
-        merges, "merge_round int, left_sym string, right_sym string, pair_count long"
+    return local_frame(
+        df.sparkSession,
+        merges,
+        "merge_round int, left_sym string, right_sym string, pair_count long",
     )
 
 

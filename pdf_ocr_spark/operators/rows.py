@@ -11,9 +11,9 @@ The engine's plumbing is kept apart from the UDF body, as in "Accelerating
 Python UDFs in Vectorized Query Execution" (CIDR 2022): a kernel says
 what one row becomes, and nothing about batches, dtypes or retries.
 
-:func:`arrow_batch` is the one Python-rows -> Arrow conversion; the
-driver-side :func:`pdf_ocr_spark.plans.manifest.local_frame` builds its
-tables with it too.
+:func:`arrow_batch` is the one Python-rows -> Arrow conversion, and
+:func:`local_frame`, every driver-built frame of the package, builds
+its tables with it too.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -34,6 +34,25 @@ def arrow_batch(rows: Sequence[Sequence], schema: pa.Schema) -> pa.RecordBatch:
     cols = zip(*rows, strict=True) if rows else [()] * len(schema)
     arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema, strict=True)]
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A driver-built frame that plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans a Python-backed RDD,
+    so every action over it runs ``defaultParallelism`` Python tasks
+    (each ~150-230 ms of worker start-up on a 4-core host). Going
+    through an Arrow table keeps the rows in the plan: actions run no
+    Python task, and an empty frame lets the optimizer prune the
+    operators above it. ``rows`` are tuples in ``schema`` field order
+    (``schema`` a ``StructType`` or DDL); naive datetimes are read in
+    the session time zone, as ``createDataFrame`` reads them."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    batch = arrow_batch(list(rows), to_arrow_schema(schema, timestamp_utc=False))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
 
 
 def map_rows(

@@ -44,21 +44,22 @@ def serialize_documents(
     (the reference uses the uploaded base filename,
     /root/reference/app.py:556-558).
     """
-    out = documents
+    cols = {}
     for fmt in formats:
         if fmt in FORMATS:
-            out = out.withColumn(fmt, _format_col(fmt, title_col))
+            cols[fmt] = _format_col(fmt, title_col)
         elif fmt == "docx":
             from pdf_ocr_spark.operators.docx import docx_udf
 
-            out = out.withColumn("docx", docx_udf()(_text_pages(F.col("spans"))))
+            cols[fmt] = docx_udf()(_text_pages(F.col("spans")))
         elif fmt == "json":
             from pdf_ocr_spark.operators.hocr import json_doc_col
 
-            out = out.withColumn("json", json_doc_col(F.col("doc_id"), F.col("spans")))
+            cols[fmt] = json_doc_col(F.col("doc_id"), F.col("spans"))
         else:
             raise ValueError(f"Unsupported output format: {fmt}")
-    return out
+    # one withColumns: one analyzer pass over the plan, not one per format
+    return documents.withColumns(cols) if cols else documents
 
 
 @per_jvm

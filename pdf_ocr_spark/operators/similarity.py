@@ -20,6 +20,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf_ocr_spark.operators.rows import local_frame
+
 
 def dot_col(a: Column, b: Column) -> Column:
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
@@ -491,8 +493,8 @@ def ivf_topk(
     n_probe = min(n_probe, n_lists)
     first = queries.select(vec_col).first()
     if first is None:  # no queries: empty result, not a crash
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, score double"
+        return local_frame(
+            queries.sparkSession, [], "query_id long, rank int, neighbor_id long, score double"
         )
     dim = len(first[0])
     if centroids is None:
@@ -714,8 +716,8 @@ def hnsw_topk(
 
     qrows = queries.select(id_col, vec_col).collect()  # query batch is small
     if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, score double"
+        return local_frame(
+            queries.sparkSession, [], "query_id long, rank int, neighbor_id long, score double"
         )
     qids = [int(r[0]) for r in qrows]
     qmat = np.array([list(r[1]) for r in qrows], dtype="float64")

@@ -47,26 +47,29 @@ from pyspark.sql import functions as F
 from pdf_ocr_spark.functions.jvmcache import per_jvm
 
 
-def explode_spans(documents: DataFrame, outer: bool = False) -> DataFrame:
+def explode_spans(documents: DataFrame) -> DataFrame:
     """One row per span: (doc_id, offset, kind, text, media_ref).
 
     Equivalent of the reference's page fan-out (one OCR task per page,
     /root/reference/app.py:503-516). Uses the stored ``offset`` as the
     ordering key rather than array position so reassembly is stable even
-    if upstream storage reordered the array. ``outer`` keeps a document
-    whose ``spans`` is empty or NULL as one row with every span field
-    NULL; :func:`ordered` turns it into an empty array.
+    if upstream storage reordered the array. A document whose ``spans``
+    is empty or NULL keeps one row with every span field NULL;
+    :func:`ordered` turns it into an empty array.
     """
-    s = (F.explode_outer if outer else F.explode)("spans").alias("span")
-    return documents.select(
-        "doc_id",
-        s,
-    ).select(
-        "doc_id",
-        F.col("span.offset").alias("offset"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
+    exploded, projected = _exploded()
+    return documents.select(*exploded).select(*projected)
+
+
+@per_jvm
+def _exploded() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """:func:`explode_spans`' two projections."""
+    return (
+        (F.col("doc_id"), F.explode_outer("spans").alias("span")),
+        (
+            F.col("doc_id"),
+            *(F.col(f"span.{f}").alias(f) for f in ("offset", *SPAN_FIELDS)),
+        ),
     )
 
 
@@ -74,6 +77,7 @@ def explode_spans(documents: DataFrame, outer: bool = False) -> DataFrame:
 SPAN_FIELDS = ("kind", "text", "media_ref")
 
 
+@per_jvm
 def doc_bucket(n_buckets: int) -> Column:
     """A document's output bucket, ``pmod(xxhash64(doc_id), n_buckets)``:
     the unit a checkpointed run writes, resumes and clusters its
@@ -102,23 +106,34 @@ def ordered(
     ``bucket`` column; a salted stage 1 still groups on
     (doc_id, salt). A row with a NULL ``offset`` (a span's offset is
     never NULL) gives its document a row and adds no element."""
-    item = F.when(F.col("offset").isNotNull(), F.struct("offset", *fields))
     if isinstance(n_salt, int) and n_salt == 0:
-        merged = F.array_sort(F.collect_list(item))
+        merged = _plain_merge(tuple(fields))
     else:
         salt = n_salt if isinstance(n_salt, Column) else F.lit(n_salt)
         pages = (
             pages.withColumn("_salt", F.pmod(F.xxhash64("offset"), salt))
             .groupBy("doc_id", "_salt")
-            .agg(F.array_sort(F.collect_list(item)).alias("_partial"))
+            .agg(F.array_sort(F.collect_list(_item(tuple(fields)))).alias("_partial"))
         )
-        merged = F.array_sort(F.flatten(F.collect_list("_partial")))
+        merged = F.array_sort(F.flatten(F.collect_list("_partial"))).alias("_ordered")
     keys = ["doc_id"]
     if buckets:
         tasks = min(buckets, pages.sparkSession.sparkContext.defaultParallelism)
         pages = pages.withColumn("bucket", doc_bucket(buckets)).repartitionById(tasks, "bucket")
         keys = ["bucket", "doc_id"]
-    return pages.groupBy(*keys).agg(merged.alias("_ordered"))
+    return pages.groupBy(*keys).agg(merged)
+
+
+@per_jvm
+def _item(fields: tuple[str, ...]) -> Column:
+    """A page's ``struct(offset, *fields)``, NULL for a spanless
+    document's row."""
+    return F.when(F.col("offset").isNotNull(), F.struct("offset", *fields))
+
+
+@per_jvm
+def _plain_merge(fields: tuple[str, ...]) -> Column:
+    return F.array_sort(F.collect_list(_item(fields))).alias("_ordered")
 
 
 def page_metrics() -> list[Column]:

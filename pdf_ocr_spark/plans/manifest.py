@@ -5,9 +5,9 @@ defined once by :func:`~pdf_ocr_spark.operators.spans.doc_bucket` for
 the resume anti-join, the reassembly clustering and the write.
 A run:
 
-1. reads the manifest, collects this run_id's completed buckets (a
-   missing manifest is an empty :func:`local_frame`, which the
-   optimizer folds away: a fresh run plans no resume join at all),
+1. checks once whether the manifest directory exists. Only when it
+   does, the run reads the manifest and collects this run_id's
+   completed buckets; a fresh run plans no resume join at all,
 2. anti-joins them away (the reference's resume analogue: its task
    lifecycle at /root/reference/app.py:593-628 restarts whole jobs;
    we restart at bucket granularity),
@@ -24,30 +24,41 @@ A run:
    only *after* the output write action has succeeded — two-phase, so
    the manifest never claims a bucket whose data didn't commit. The
    metrics are taken during the write: ``count``/``sum``/``avg`` over
-   ``Window.partitionBy("bucket")``, read by one ``observe()`` of
+   ``Window.partitionBy("bucket")``, summed in ``doc_id`` order so that
+   they depend on the bucket's documents only, not on the order the
+   plan delivers them in, read by one ``observe()`` of
    ``collect_set(struct(bucket, ...))``, so the driver holds one entry
    per bucket per task and the output is not read back. The window
    reuses the bucket exchange and the sort the partitioned write
    needs, and runs before the serializers, so it buffers a bucket's
-   spans but not its txt/md/html. The rows go to the manifest as one
-   file built on the driver (:func:`local_frame`).
+   spans but not its txt/md/html. The driver commits the rows without
+   a Spark job, as table formats commit their metadata files: one
+   snappy Parquet file built in memory with pyarrow is written
+   through the manifest path's Hadoop ``FileSystem`` under a
+   ``_``-prefixed name, which Spark's file listing skips, and then
+   renamed to a unique ``part-`` name. The rename is the commit, so a
+   reader sees the whole file or none of it: a rename is atomic on
+   HDFS and the local file system, and on s3a a single object becomes
+   visible whole. An interrupted commit leaves only a hidden file,
+   which :func:`read_manifest` and resume ignore.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import time
-from collections.abc import Iterable, Sequence
+import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.functions.jvmcache import per_jvm
-from pdf_ocr_spark.operators.rows import arrow_batch
+from pdf_ocr_spark.operators.rows import arrow_batch, local_frame
 from pdf_ocr_spark.operators.serialize import serialize_documents
 from pdf_ocr_spark.operators.spans import doc_bucket
 from pdf_ocr_spark.plans.pipeline import extract_documents
@@ -60,27 +71,6 @@ def _manifest_dir(out_dir: str) -> str:
 
 def _output_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "documents")
-
-
-def local_frame(
-    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
-) -> DataFrame:
-    """A driver-built frame that plans as a ``LocalRelation``.
-
-    ``spark.createDataFrame(<python list>)`` plans a Python-backed RDD,
-    so every action over it runs ``defaultParallelism`` Python tasks
-    (each ~150-230 ms of worker start-up on a 4-core host). Going
-    through an Arrow table keeps the rows in the plan: actions run no
-    Python task, and an empty frame lets the optimizer prune the
-    operators above it. The table is built by the executors' row
-    conversion, :func:`~pdf_ocr_spark.operators.rows.arrow_batch`.
-    ``rows`` are tuples in ``schema`` field order;
-    naive datetimes are read in the session time zone, as
-    ``createDataFrame`` reads them."""
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    batch = arrow_batch(list(rows), to_arrow_schema(schema, timestamp_utc=False))
-    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -117,13 +107,45 @@ _STAT_COLUMNS = ("_n_docs", "_n_pages", "_mean_confidence")
 
 
 @per_jvm
-def _bucket_stats() -> tuple[Column, ...]:
-    w = Window.partitionBy("bucket")
-    return (
-        F.count(F.lit(1)).over(w).alias("_n_docs"),
-        F.sum("n_pages").over(w).alias("_n_pages"),
-        F.avg("mean_confidence").over(w).alias("_mean_confidence"),
+def _bucket_stats() -> tuple[tuple[Column, ...], Column]:
+    """The window's projection (every column plus its bucket's stats)
+    and the observed set of (bucket, stats) entries."""
+    # summed in doc_id order, so a bucket's stats do not depend on the
+    # order its rows arrive in; the write reuses this (bucket, doc_id) sort
+    w = (
+        Window.partitionBy("bucket")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
+    return (
+        (
+            F.col("*"),
+            F.count(F.lit(1)).over(w).alias("_n_docs"),
+            F.sum("n_pages").over(w).alias("_n_pages"),
+            F.avg("mean_confidence").over(w).alias("_mean_confidence"),
+        ),
+        F.collect_set(F.struct("bucket", *_STAT_COLUMNS)).alias("buckets"),
+    )
+
+
+def _commit_manifest(spark: SparkSession, fs, manifest, rows: list[tuple]) -> None:
+    """Append ``rows`` to the manifest directory ``manifest`` (a Hadoop
+    ``Path`` on ``fs``) as one Parquet file, without a Spark job: the
+    file is written under a hidden ``_`` name, which readers skip, and
+    renamed to its ``part-`` name (module docstring, step 5)."""
+    table = pa.Table.from_batches([arrow_batch(rows, to_arrow_schema(MANIFEST_SCHEMA))])
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf, compression="snappy")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"{uuid.uuid4()}.snappy.parquet"
+    hidden, final = Path(manifest, f"_committing-{name}"), Path(manifest, f"part-{name}")
+    out = fs.create(hidden, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(hidden, final):
+        raise OSError(f"manifest commit: could not rename {hidden} to {final}")
 
 
 def run_extraction(
@@ -144,21 +166,23 @@ def run_extraction(
     """
     cfg = config or ExtractionConfig()
     t0 = time.time()
+    fs, manifest = _hadoop_path(spark, _manifest_dir(out_dir))
 
-    docs = documents.withColumn("bucket", doc_bucket(n_buckets))
-    if only_buckets is not None:
-        docs = docs.where(F.col("bucket").isin([int(b) for b in only_buckets]))
-
-    done = completed_buckets(spark, out_dir, run_id)
-    todo = docs.join(F.broadcast(done), "bucket", "left_anti")
-    extracted = extract_documents(
-        todo.drop("bucket"), media, cfg, serialize=False, buckets=n_buckets
-    )
+    todo = documents
+    resume = fs.exists(manifest)
+    if only_buckets is not None or resume:
+        todo = todo.withColumn("bucket", doc_bucket(n_buckets))
+        if only_buckets is not None:
+            todo = todo.where(F.col("bucket").isin([int(b) for b in only_buckets]))
+        if resume:
+            done = completed_buckets(spark, out_dir, run_id)
+            todo = todo.join(F.broadcast(done), "bucket", "left_anti")
+        todo = todo.drop("bucket")
+    extracted = extract_documents(todo, media, cfg, serialize=False, buckets=n_buckets)
     # every task adds one set entry per bucket it holds (module docstring)
     stats = Observation()
-    observed = extracted.select("*", *_bucket_stats()).observe(
-        stats, F.collect_set(F.struct("bucket", *_STAT_COLUMNS)).alias("buckets")
-    )
+    with_stats, bucket_set = _bucket_stats()
+    observed = extracted.select(*with_stats).observe(stats, bucket_set)
     written = serialize_documents(observed.drop(*_STAT_COLUMNS), formats=cfg.output_formats)
     (
         written.write.mode("overwrite")
@@ -174,15 +198,10 @@ def run_extraction(
     buckets = stats.get["buckets"] if stats._jo.getRow().length() else []
     if not buckets:
         return 0
+    ts = datetime.datetime.now(datetime.timezone.utc)
     rows = [
-        (run_id, b, None, "completed", n_docs, n_pages, mean_confidence, elapsed, None)
+        (run_id, b, None, "completed", n_docs, n_pages, mean_confidence, elapsed, ts)
         for b, n_docs, n_pages, mean_confidence in sorted(buckets, key=lambda r: r[0])
     ]
-    (
-        local_frame(spark, rows, MANIFEST_SCHEMA)
-        .withColumn("ts", F.current_timestamp())
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(_manifest_dir(out_dir))
-    )
+    _commit_manifest(spark, fs, manifest, rows)
     return len(rows)

@@ -1,7 +1,7 @@
 """The end-to-end extraction pipeline (SURVEY §3.1 Spark shape).
 
-    documents ──explode_outer──┬─ text spans (+ spanless docs) ────────────┐
-                               └─ image spans ─join media─ OCR kernel ──┴─ union
+    documents ──explode_outer──┬─ image spans ─join media─ OCR kernel ──┬─ union
+                               └─ text spans (+ spanless docs) ────────────┘
         ── normalize ── groupBy(doc_id) ordered reassembly ── serialize
 
 Physical notes for scale:
@@ -37,14 +37,25 @@ Physical notes for scale:
 * Everything else — normalization, serialization — is projection work
   fused into the surrounding stages by whole-stage codegen.
   Normalization is one projection above the union; error rows skip it.
+* The OCR rows come first in the union. A union's tasks run in
+  partition order, so the OCR kernel's tasks, the stage's long ones,
+  take its first wave and the text rows' short tasks fill in behind
+  them; with text first, the OCR tasks waited for the text tasks to
+  free the cores.
 * A document with no spans (an empty or NULL array) keeps one row with
   a NULL offset through the union and the reassembly, and comes out
   with ``spans = []``, ``n_pages = 0`` and ``mean_confidence`` NULL.
-* The fixed Column trees — the normalize chain, the span
-  re-projection, the page metrics and the txt/md/html serializers —
-  are built once per JVM (:mod:`pdf_ocr_spark.functions.jvmcache`):
-  they are over a thousand py4j round trips, which every call paid
-  before.
+* Every fixed Column tree of a run is built once per JVM
+  (:mod:`pdf_ocr_spark.functions.jvmcache`): the explode and its
+  re-projection, :func:`extract_pages`' filters and projections, the
+  normalize chain, the reassembly's merge and its bucket, the span
+  re-projection, the page metrics, the txt/md/html serializers and the
+  manifest's window and observation. Each PySpark function call on a
+  Column costs several py4j round trips of call-site bookkeeping, so
+  rebuilding them cost every call over a thousand. Only ``F.col`` and
+  ``F.lit`` trees are cached: a ``df["x"]`` reference names one plan.
+  The serializers are added by one ``withColumns``, one analyzer pass
+  instead of one per format.
 """
 
 from __future__ import annotations
@@ -79,39 +90,52 @@ def extract_pages(
     still gives it a row (:func:`~pdf_ocr_spark.operators.spans.ordered`).
     """
     cfg = config or ExtractionConfig()
-    pages = explode_spans(documents, outer=True)
-
-    text_pages = pages.where((F.col("kind") == "text") | F.col("offset").isNull()).select(
-        "doc_id",
-        "offset",
-        "text",
-        "media_ref",
-        F.lit(1.0).alias("confidence"),
-        F.lit(False).alias("error"),
-    )
-
+    is_text, text_page, is_image, image_page, page, final = _page_columns()
+    pages = explode_spans(documents)
+    text_pages = pages.where(is_text).select(*text_page)
     image_pages = (
-        pages.where(F.col("kind") == "image")
-        .select("doc_id", "offset", "media_ref")
+        pages.where(is_image)
+        .select(*image_page)
         .join(media, "media_ref", "left")  # left: missing payload -> error row
     )
-    decoded = ocr_pages(image_pages, cfg).select(
-        "doc_id", "offset", "text", "media_ref", "confidence", "error"
-    )
-
-    return text_pages.unionByName(decoded).select(
-        "doc_id", "offset", *_final_text(), "media_ref", "confidence", "error"
-    )
+    decoded = ocr_pages(image_pages, cfg).select(*page)
+    # OCR first: its long tasks take the stage's first wave (module docstring)
+    return decoded.unionByName(text_pages).select(*final)
 
 
 @per_jvm
-def _final_text() -> tuple[Column, Column]:
-    """``kind`` and ``text`` of an extracted page: every page is text
-    now, normalized unless it is an error row."""
-    text = F.col("text")
+def _page_columns() -> tuple:
+    """:func:`extract_pages`' filters and projections: the text-page
+    filter (a spanless document's NULL-offset row goes with the text
+    pages) and projection, the image-page filter and projection, the
+    decoded page, and the final page, which is text, normalized unless
+    it is an error row."""
+    doc_id, offset, text, media_ref = (
+        F.col(c) for c in ("doc_id", "offset", "text", "media_ref")
+    )
+    confidence, error = F.col("confidence"), F.col("error")
     return (
-        F.lit("text").alias("kind"),
-        F.when(F.col("error"), text).otherwise(normalize_text_col(text)).alias("text"),
+        (F.col("kind") == "text") | offset.isNull(),
+        (
+            doc_id,
+            offset,
+            text,
+            media_ref,
+            F.lit(1.0).alias("confidence"),
+            F.lit(False).alias("error"),
+        ),
+        F.col("kind") == "image",
+        (doc_id, offset, media_ref),
+        (doc_id, offset, text, media_ref, confidence, error),
+        (
+            doc_id,
+            offset,
+            F.lit("text").alias("kind"),
+            F.when(error, text).otherwise(normalize_text_col(text)).alias("text"),
+            media_ref,
+            confidence,
+            error,
+        ),
     )
 
 
@@ -139,9 +163,7 @@ def extract_documents(
     pages = extract_pages(documents, media, cfg)
     docs = ordered(
         pages, (*SPAN_FIELDS, "confidence", "error"), cfg.reassembly_salt, buckets
-    ).select(
-        "doc_id", canonical_spans(), *page_metrics(), *(["bucket"] if buckets else [])
-    )
+    ).select(*_document_columns(bool(buckets)))
     if observation is not None:
         docs = docs.observe(
             observation,
@@ -153,3 +175,10 @@ def extract_documents(
     if serialize:
         docs = serialize_documents(docs, formats=cfg.output_formats)
     return docs
+
+
+@per_jvm
+def _document_columns(bucketed: bool) -> tuple[Column, ...]:
+    """A document's row, from its :func:`ordered` array."""
+    bucket = (F.col("bucket"),) if bucketed else ()
+    return (F.col("doc_id"), canonical_spans(), *page_metrics(), *bucket)

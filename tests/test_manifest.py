@@ -1,9 +1,11 @@
 """Extraction-run bookkeeping: driver-built frames plan as local
 relations, a fresh run plans no resume join, a run over completed
 buckets changes nothing, the reassembly is clustered by output
-bucket (one exchange, one file per bucket), and the manifest's
-per-bucket stats are taken during the write (one sort, no read-back,
-one manifest file per append)."""
+bucket (one exchange, one file per bucket), the manifest's per-bucket
+stats are taken during the write (one sort, no read-back, one manifest
+file per append), and the driver commits the manifest file (no Spark
+job; it reads back with Spark-written files, and an interrupted
+commit is invisible)."""
 
 from __future__ import annotations
 
@@ -11,9 +13,14 @@ import datetime
 import glob
 import os
 import re
+import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import TimestampType
 
 from pdf_ocr_spark.config import ExtractionConfig
 from pdf_ocr_spark.plans.manifest import (
@@ -204,9 +211,10 @@ def test_manifest_stats_equal_read_back_output(spark, corpus, tmp_path, config, 
         assert _hex(r["mean_confidence"]) == _hex(w["mean_confidence"])
 
 
-def test_fresh_run_makes_four_jobs(spark, corpus, tmp_path):
-    """Extraction makes three jobs and the manifest append one; the
-    read-back of the output it replaces made six in all."""
+def test_fresh_run_makes_three_jobs(spark, corpus, tmp_path):
+    """Extraction makes three jobs and the driver-side manifest commit
+    none; a Spark-written append made four, and a read-back of the
+    output six."""
     docs, media = corpus
     docs.count(), media.count()  # fill the cached corpus outside the count
     sc = spark.sparkContext
@@ -215,7 +223,7 @@ def test_fresh_run_makes_four_jobs(spark, corpus, tmp_path):
         assert run_extraction(spark, docs, media, str(tmp_path / "jobs"), "run1", n_buckets=4) == 4
     finally:
         sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup("fresh-run")) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-run")) == 3
 
 
 def _final_plan(spark, path: str) -> tuple[str, str]:
@@ -239,3 +247,65 @@ def test_write_plan_sorts_once_behind_the_bucket_exchange(spark, corpus, tmp_pat
     assert "shufflepartitionidpassthrough" in args and "REPARTITION_BY_NUM" in args
     assert len(re.findall(r"\bSort \(\d+\)", tree)) == 1, tree
     assert "CollectMetrics" in tree and "Window" in tree
+
+
+def _spark_append(spark, out: str, rows) -> None:
+    """A manifest append as a Spark write job, as earlier versions
+    committed it."""
+    (
+        local_frame(spark, rows, MANIFEST_SCHEMA)
+        .withColumn("ts", F.current_timestamp())
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(os.path.join(out, "_manifest"))
+    )
+
+
+def _values(row) -> tuple:
+    """A manifest row without its run_id, elapsed_s and ts."""
+    return tuple(row)[1:7]
+
+
+def test_spark_and_driver_written_manifest_files_read_together(spark, corpus, tmp_path):
+    docs, media = corpus
+    out = str(tmp_path / "mixed")
+    start = time.time()
+    assert run_extraction(spark, docs, media, out, "new", n_buckets=4) == 4
+    end = time.time()
+    (driver_file,) = _manifest_files(out)
+    assert spark.read.parquet(driver_file).schema["ts"].dataType == TimestampType()
+    new = read_manifest(spark, out).collect()
+    _spark_append(spark, out, [("old", *_values(r), 0.5, None) for r in new])
+    assert len(_manifest_files(out)) == 2
+
+    manifest = read_manifest(spark, out)
+    types = [(f.name, f.dataType) for f in manifest.schema]
+    assert types == [(f.name, f.dataType) for f in MANIFEST_SCHEMA]
+    rows = manifest.collect()
+    by_run = {run: sorted(_values(r) for r in rows if r["run_id"] == run) for run in ("new", "old")}
+    assert len(by_run["new"]) == 4 and by_run["new"] == by_run["old"]
+    for r in rows:
+        assert start - 2 <= r["ts"].timestamp() <= time.time() + 2
+        if r["run_id"] == "new":
+            assert r["ts"].timestamp() <= end + 2 and 0 < r["elapsed_s"] <= end - start
+
+
+def test_interrupted_manifest_commit_is_ignored(spark, corpus, tmp_path):
+    """A commit cut before its rename leaves a hidden ``_`` file, here
+    claiming every bucket: readers skip it, and a resume redoes them."""
+    docs, media = corpus
+    out = str(tmp_path / "cut")
+    manifest = os.path.join(out, "_manifest")
+    os.makedirs(manifest)
+    claimed = [("run1", b, None, "completed", 1, 1, 1.0, 0.1, None) for b in range(4)]
+    table = pa.Table.from_pylist(
+        [dict(zip(MANIFEST_SCHEMA.names, r)) for r in claimed],
+        schema=to_arrow_schema(MANIFEST_SCHEMA),
+    )
+    pq.write_table(table, os.path.join(manifest, "_committing-cut.snappy.parquet"))
+
+    assert read_manifest(spark, out).collect() == []
+    assert completed_buckets(spark, out, "run1").collect() == []
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 4
+    assert sorted(r["partition_id"] for r in read_manifest(spark, out).collect()) == [0, 1, 2, 3]
+    assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 0

@@ -242,6 +242,25 @@ def test_salted_and_plain_bucketed_runs_agree(spark, corpus, tmp_path):
     assert bucket.start() < salt.start()
 
 
+def test_manifest_confidence_is_summed_in_doc_id_order(spark, corpus, tmp_path):
+    """A bucket's ``mean_confidence`` is its documents' values summed in
+    doc_id order, bit for bit, whatever order the plain and the salted
+    plan deliver the rows in."""
+    docs, media = corpus
+    for name, cfg in (("plain", None), ("salted", ExtractionConfig(reassembly_salt=4))):
+        out = str(tmp_path / name)
+        run_extraction(spark, docs, media, out, "run1", config=cfg, n_buckets=2)
+        want = {}
+        written = spark.read.parquet(f"{out}/documents").select("bucket", "doc_id", "mean_confidence")
+        for r in sorted(written.collect()):
+            n, total = want.get(r["bucket"], (0, 0.0))
+            want[r["bucket"]] = (n + 1, total + r["mean_confidence"])
+        got = {r["partition_id"]: r["mean_confidence"] for r in read_manifest(spark, out).collect()}
+        assert {b: float.hex(v) for b, v in got.items()} == {
+            b: float.hex(total / n) for b, (n, total) in want.items()
+        }, name
+
+
 #: d2 and d7 have no spans: an empty and a NULL array
 SPANLESS_DOCS = [
     ("d1", [("text", "one page", "", 0)]),
@@ -281,6 +300,17 @@ def test_bucket_of_spanless_documents_completes(spark, tmp_path):
     assert run_extraction(spark, docs, media, out, "run1", n_buckets=4) == 0
 
 
+@pytest.mark.parametrize("n_salt", [0, 4])
+def test_reassembly_inverts_explode_for_spanless_documents(spark, n_salt):
+    docs = local_frame(spark, SPANLESS_DOCS, SPANLESS_SCHEMA)
+    out = reassemble_spans(explode_spans(docs), n_salt=n_salt).collect()
+    assert {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out} == {
+        "d1": [("text", "one page", "", 0)],
+        "d2": [],
+        "d7": [],
+    }
+
+
 def _py4j_calls(build) -> int:
     """py4j commands ``build()`` sends from this thread (the gateway's
     finalizer thread sends object releases on its own)."""
@@ -311,6 +341,24 @@ def test_warm_build_makes_at_most_half_the_round_trips(spark, corpus, monkeypatc
     cold = _py4j_calls(build)
     warm = min(_py4j_calls(build) for _ in range(2))
     assert 0 < 2 * warm <= cold, (cold, warm)
+
+
+#: py4j round trips of a warm fresh ``run_extraction`` on this corpus
+#: while the manifest was appended by a Spark job and every run planned
+#: the resume join (BENCH.md)
+SPARK_APPEND_RUN_ROUND_TRIPS = 829
+
+
+def test_warm_run_makes_at_most_half_the_round_trips(spark, corpus, tmp_path):
+    docs, media = corpus
+    outs = (str(tmp_path / f"run{k}") for k in range(3))
+
+    def run():
+        assert run_extraction(spark, docs, media, next(outs), "run1", n_buckets=4) == 4
+
+    run()  # first-use setup outside the count
+    warm = min(_py4j_calls(run) for _ in range(2))
+    assert 0 < 2 * warm <= SPARK_APPEND_RUN_ROUND_TRIPS, warm
 
 
 def test_fixed_expressions_are_cached_per_jvm(monkeypatch):

@@ -1,6 +1,7 @@
 """The row boundary (``operators.rows``): per-row containment, whole-row
-output, exact typed output, and that it stays the only per-row
-``mapInPandas``/``mapInArrow`` stage in the package."""
+output, exact typed output, that it stays the only per-row
+``mapInPandas``/``mapInArrow`` stage in the package, and that
+``local_frame`` is its only ``createDataFrame``."""
 
 from __future__ import annotations
 
@@ -120,7 +121,9 @@ ALLOWED_MAPS = {
 }
 
 
-def _map_calls() -> set[tuple[str, str]]:
+def _map_calls(methods: tuple[str, ...] = ("mapInPandas", "mapInArrow")) -> set[tuple[str, str]]:
+    """(file, top-level definition) of every call of one of ``methods``
+    in the package."""
     package = os.path.join(REPO, "pdf_ocr_spark")
     found = set()
     for path in glob.glob(os.path.join(package, "**", "*.py"), recursive=True):
@@ -131,7 +134,7 @@ def _map_calls() -> set[tuple[str, str]]:
                 if (
                     isinstance(n, ast.Call)
                     and isinstance(n.func, ast.Attribute)
-                    and n.func.attr in ("mapInPandas", "mapInArrow")
+                    and n.func.attr in methods
                 ):
                     name = getattr(top, "name", "<module>")
                     found.add((os.path.relpath(path, package), name))
@@ -144,3 +147,10 @@ def test_map_rows_is_the_only_row_map():
     assert not extra, f"per-row Python outside operators.rows.map_rows: {extra}"
     stale = sorted(ALLOWED_MAPS - calls)
     assert not stale, f"in ALLOWED_MAPS but no longer a direct map: {stale}"
+
+
+def test_local_frame_is_the_only_create_data_frame():
+    """A frame built from driver rows plans as a ``LocalRelation``
+    (no Python task per action) only through ``local_frame``."""
+    calls = _map_calls(("createDataFrame",))
+    assert calls == {("operators/rows.py", "local_frame")}, sorted(calls)
